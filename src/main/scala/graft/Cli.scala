@@ -63,7 +63,7 @@ object Cli {
     * path), forcing `ts` to TimestampType: ES serves dates as ISO strings,
     * and the window filter must push as a timestamp range for whole-day
     * index pruning to engage. */
-  private def esSchema(spark: org.apache.spark.sql.SparkSession, url: String,
+  private[graft] def esSchema(spark: org.apache.spark.sql.SparkSession, url: String,
       index: String, auth: Map[String, String]): org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
     val inferred = spark.read

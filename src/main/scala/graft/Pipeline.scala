@@ -15,7 +15,11 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: one pruned scan → per-row decode (no shuffle) → partitioned
   * write; the audit is a group-count over the committed files, verifying the
-  * round trip rather than trusting an in-flight counter.
+  * round trip rather than trusting an in-flight counter. Over the ES
+  * connector only the write reads the window's documents: the schema
+  * sample's `orderBy(event_id).limit(100)` is a pushed top-N (one sorted
+  * search shipping 100 hits) and the audit's per-day window count a pushed
+  * `date_histogram` aggregation (zero hits).
   */
 object Pipeline {
 
@@ -76,9 +80,15 @@ object Pipeline {
     // O9: persist beside the output (overwrite ≡ the reference's dir wipe):
     // the engine-native StructType JSON plus the reference's byte-exact
     // .asvc rendering of the first sample (golden-tested in SchemaInferSpec).
+    // The .asvc renders the first sample that is a JSON object — a
+    // malformed props string (a dead letter of the export) must not fail
+    // the whole export; with no such sample there is no .asvc to write
+    // (and a stale one from an earlier export is removed).
     SchemaInfer.persist(propsSchema, s"$outDir/schema.json")
-    sampleRows.headOption.foreach { first =>
-      graft.sources.AvroAsvc.persist(eventType, first, s"$outDir/schema.asvc")
+    val asvc = java.nio.file.Paths.get(s"$outDir/schema.asvc")
+    sampleRows.find(isJsonObject) match {
+      case Some(first) => graft.sources.AvroAsvc.persist(eventType, first, asvc.toString)
+      case None        => java.nio.file.Files.deleteIfExists(asvc)
     }
 
     // O10-O11: tolerant decode, dead letters kept auditable. Same split
@@ -137,6 +147,10 @@ object Pipeline {
       // bounded output (one row per day inside the export window)
       .transform(Tables.sortSmall(_, $"day"))
   }
+
+  private def isJsonObject(s: String): Boolean =
+    s != null && (try new com.fasterxml.jackson.databind.ObjectMapper().readTree(s).isObject
+    catch { case _: Exception => false })
 
   /** Declared query: the full pipeline on the purchase slice, 30-day window. */
   def exportPipeline(spark: SparkSession, sfDir: String): DataFrame = {

@@ -141,9 +141,11 @@ object HashKernels {
     * adversarial half-way values.
     *
     * ANSI-mode divergence (r19 ADVICE, recorded): the |x| ≥ 2⁶³ clamp
-    * matches the NON-ANSI double→long cast. Under ANSI mode (the Spark 4
-    * default for `spark.sql.ansi.enabled` sessions; graft sessions run
-    * non-ANSI) the replaced `round(x).cast(long)` would instead throw on
+    * matches the NON-ANSI double→long cast. Graft sessions run under ANSI
+    * mode (`Session.build` keeps Spark 4's `spark.sql.ansi.enabled`
+    * default, which the ES connector's per-day aggregate pushdown relies
+    * on: Spark translates `to_date(ts)` for a data source only as an ANSI
+    * cast), so the replaced `round(x).cast(long)` would instead throw on
     * overflow. Every grid this kernel serves is GridOverflowSpec-audited
     * to stay far inside ±2⁶³ (the wide grids split at 1e2 precisely to
     * keep partial sums in range), so the clamp is unreachable on declared

@@ -6,11 +6,13 @@ import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.{NamedReference, Transform}
+import org.apache.spark.sql.connector.expressions.{Cast, Expression, NamedReference, NullOrdering, SortDirection, SortOrder, Transform}
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, ReadLimit, ReadMaxRows, SupportsTriggerAvailableNow, Offset => StreamOffset}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -56,13 +58,24 @@ import scala.jdk.CollectionConverters._
   *     each slice's scroll loop after `limit` rows (the reference's
   *     sampling reads push `.size(1)` server-side the same way; Spark
   *     still applies the exact global limit post-scan).
+  *   - **Top-N pushdown**: `ORDER BY cols LIMIT n` (n ≤ `max_result_window`,
+  *     plain integral/string/date/timestamp columns) is ONE sorted plain
+  *     `_search` (`size=n`, `sort` with `missing` placed where Spark puts
+  *     nulls) against the surviving indices — n hits, one request, no
+  *     scroll context; Spark keeps its final sort/limit (partial push).
+  *   - **Aggregate pushdown**: `COUNT(*) [GROUP BY cols]` is a paged
+  *     `composite` aggregation; a `CAST(timeField AS DATE)` key (Spark's
+  *     `to_date(ts)` under the default ANSI mode) is a 1-day
+  *     `date_histogram` source in the session time zone — a per-day count
+  *     ships zero documents.
   *   - **Tolerant decode**: missing fields → null, type mismatches → null
   *     (the reference's ExtendedJsonDecoder default-injection philosophy);
   *     a hit whose `_source` is not an object is skipped and counted, the
   *     reference's per-record try/catch-skip (EsParquetWriter.java:73-81).
   *   - **Scroll hygiene**: every reader clears its scroll context
   *     (`DELETE /_search/scroll`) on close — long-running exports don't pin
-  *     server search contexts.
+  *     server search contexts — and a slice that has consumed the exact
+  *     `hits.total` it was promised ends without the empty trailing page.
   *
   * String-equality semantics (`stringEquality` option): against a real ES
   * endpoint `match_phrase` performs ANALYZED matching (a doc with
@@ -583,7 +596,37 @@ object EsScrollSource {
       case _ => null
     }
   }
+
+  /** One hit → a row of `fields` decoded from its `_source`; null when the
+    * `_source` is not an object (the caller skips and counts it, the
+    * reference's per-record catch, EsParquetWriter.java:78-81). */
+  private[es] def decodeHit(hit: JsonNode, fields: Array[StructField]): InternalRow = {
+    val src = hit.path("_source")
+    if (!src.isObject) return null
+    val vals = new Array[Any](fields.length)
+    var i = 0
+    while (i < fields.length) {
+      vals(i) = toInternal(src.get(fields(i).name), fields(i).dataType)
+      i += 1
+    }
+    new GenericInternalRow(vals)
+  }
+
+  /** ES `index.max_result_window`: the deepest `from + size` a plain search
+    * may page to — the cap on a pushed top-N. */
+  private[es] val MaxResultWindow = 10000
 }
+
+/** One pushed GROUP BY key: a column served by a composite `terms` source,
+  * or — `dayZone` set — the local day of a timestamp column in that zone,
+  * served by a 1-day `date_histogram` source whose bucket keys are the
+  * epoch millis of local midnight. */
+private[es] case class EsGroupKey(
+    name: String,
+    field: String,
+    dataType: DataType,
+    dayZone: Option[String] = None
+)
 
 private class EsScrollTable(schema0: StructType, props: Map[String, String])
     extends Table with SupportsRead {
@@ -625,12 +668,14 @@ private class EsScanBuilder(
     with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters
     with SupportsPushDownLimit
+    with SupportsPushDownTopN
     with SupportsPushDownAggregates {
   private var required: StructType  = full
   private var pushed: Array[Filter] = Array.empty
   private var postScan: Array[Filter] = Array.empty
   private var limit: Option[Int]    = None
-  private var aggGroups: Array[StructField] = null // null = no aggregate pushed
+  private var topN: Array[SortOrder] = null // null = no top-N pushed; its limit is `limit`
+  private var aggGroups: Array[EsGroupKey] = null // null = no aggregate pushed
 
   override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
 
@@ -657,7 +702,55 @@ private class EsScanBuilder(
   override def pushLimit(l: Int): Boolean =
     if (aggGroups != null) false else { limit = Some(l); true }
 
-  /** COUNT(*) [GROUP BY cols] served by the ES aggregation endpoint — the
+  /** `ORDER BY cols LIMIT n` served as one sorted plain `_search` — the
+    * server ranks the whole (pruned) window and ships exactly `n` hits, a
+    * local top-k pushed to where the data lives. Accepted only when the
+    * server's order IS Spark's: plain columns of integral, string, date or
+    * timestamp type (no float NaN ordering, no expression keys), `n` within
+    * `max_result_window`, no post-scan filter (the server would rank rows
+    * Spark then drops) and no pushed aggregate. A `date` field ranks at
+    * millisecond resolution, so timestamps that differ only below the
+    * millisecond tie on the server (a `date_nanos` mapping keeps them
+    * apart). Partial pushdown
+    * (`isPartiallyPushed` stays true): Spark keeps its final sort/limit
+    * over the ≤ n rows. */
+  override def pushTopN(orders: Array[SortOrder], n: Int): Boolean = {
+    val ok = n <= EsScrollSource.MaxResultWindow && postScan.isEmpty && aggGroups == null &&
+      orders.forall(o => sortColumn(o).isDefined)
+    if (ok) { topN = orders; limit = Some(n) }
+    ok
+  }
+
+  /** Both a pushed limit (a per-slice cap) and a pushed top-N (the
+    * server's n best) leave Spark's own limit/sort in place. */
+  override def isPartiallyPushed(): Boolean = true
+
+  private def sortColumn(o: SortOrder): Option[StructField] = o.expression match {
+    case nr: NamedReference if nr.fieldNames.length == 1 && full.fieldNames.contains(nr.fieldNames.head) =>
+      Some(full(nr.fieldNames.head)).filter(_.dataType match {
+        case ByteType | ShortType | IntegerType | LongType | StringType | DateType | TimestampType => true
+        case _ => false
+      })
+    case _ => None
+  }
+
+  /** The ES `sort` clause of the pushed top-N: `missing` puts null keys
+    * where Spark's null ordering does (`_first`/`_last` are absolute in ES,
+    * as NULLS FIRST/LAST are in Spark); string keys sort on the keyword
+    * subfield, like the composite terms source. */
+  private def sortJson: String = {
+    val arr = new ObjectMapper().createArrayNode()
+    topN.foreach { o =>
+      val f = sortColumn(o).get
+      val field = if (f.dataType == StringType) f.name + keywordSuffix else f.name
+      val spec  = arr.addObject().putObject(field)
+      spec.put("order", if (o.direction == SortDirection.ASCENDING) "asc" else "desc")
+      spec.put("missing", if (o.nullOrdering == NullOrdering.NULLS_FIRST) "_first" else "_last")
+    }
+    arr.toString
+  }
+
+  /** COUNT(*) [GROUP BY keys] served by the ES aggregation endpoint — the
     * reference's server-side discovery aggregation
     * (the terms/count request its Bootstrap issues before exporting). The
     * wire form is a paged `composite` aggregation (the documented ES
@@ -665,25 +758,43 @@ private class EsScanBuilder(
     * truncates at `size` with an error bound, which a declared query can
     * never ship on) with `missing_bucket:true` per source (ES otherwise
     * SKIPS documents missing the group field, while Spark's groupBy emits
-    * a null group); grand-total COUNT(*) uses `track_total_hits`. Partial
-    * pushdown (supportCompletePushDown stays false): the scan emits exact
+    * a null group); grand-total COUNT(*) uses `track_total_hits`. A key is
+    * a plain column (`terms` source) or `CAST(timeField AS DATE)`
+    * (`date_histogram` source, see [[groupKey]]). Partial pushdown
+    * (supportCompletePushDown stays false): the scan emits exact
     * (group, count) rows and Spark's final aggregate merges — a no-op over
     * the single result partition, but keeps the plan correct if Spark ever
     * splits the scan. Refused when a post-scan filter exists (phrase-mode
     * string equality): the server would count analyzer-matched docs, not
     * Spark-equal ones. */
   override def pushAggregation(agg: Aggregation): Boolean = {
-    val groupCols = agg.groupByExpressions.flatMap {
-      case nr: NamedReference if nr.fieldNames.length == 1 => Some(nr.fieldNames.head)
-      case _                                               => None
-    }
-    val ok = groupCols.length == agg.groupByExpressions.length &&
-      groupCols.forall(full.fieldNames.contains) &&
+    val keys = agg.groupByExpressions.map(groupKey)
+    val ok = keys.forall(_.isDefined) &&
       agg.aggregateExpressions.length == 1 &&
       agg.aggregateExpressions.head.isInstanceOf[CountStar] &&
       limit.isEmpty && postScan.isEmpty
-    if (ok) aggGroups = groupCols.map(full(_))
+    if (ok) aggGroups = keys.map(_.get)
     ok
+  }
+
+  /** A group key the server can bucket exactly as Spark groups. Spark
+    * translates `to_date(ts)` to a V2 `CAST(ts AS DATE)` only under ANSI
+    * mode (the Spark 4 default that `Session.build` keeps); without ANSI
+    * the aggregate is not offered and the scroll path serves it. The cast's
+    * zone is the driver's session time zone — the zone Spark's own cast
+    * would use — so each bucket is one local calendar day. */
+  private def groupKey(e: Expression): Option[EsGroupKey] = e match {
+    case nr: NamedReference if nr.fieldNames.length == 1 && full.fieldNames.contains(nr.fieldNames.head) =>
+      val f = full(nr.fieldNames.head)
+      Some(EsGroupKey(f.name, f.name, f.dataType))
+    case c: Cast if c.dataType == DateType => c.expression match {
+      case nr: NamedReference if nr.fieldNames.sameElements(Array(timeField)) &&
+          full.fieldNames.contains(timeField) && full(timeField).dataType == TimestampType =>
+        val zone = DateTimeUtils.getZoneId(SQLConf.get.sessionLocalTimeZone).getId
+        Some(EsGroupKey(s"CAST($timeField AS DATE)", timeField, DateType, Some(zone)))
+      case _ => None
+    }
+    case _ => None
   }
 
   override def build(): Scan = {
@@ -692,13 +803,14 @@ private class EsScanBuilder(
         conn, index,
         pushed.flatMap(EsScrollSource.stringEqFields).distinct.toSeq,
         keywordSuffix)
+    val query = EsScrollSource.toEsQuery(pushed, stringEquality, keywordSuffix)
     if (aggGroups != null)
-      new EsAggScan(conn, index, pageSize,
-        EsScrollSource.toEsQuery(pushed, stringEquality, keywordSuffix),
-        pushed, aggGroups, timeField, keywordSuffix)
+      new EsAggScan(conn, index, pageSize, query, pushed, aggGroups, timeField, keywordSuffix)
+    else if (topN != null)
+      new EsTopNScan(conn, index, required, query, pushed, timeField,
+        sortJson, topN.mkString(", "), limit.get)
     else
-      new EsScrollScan(conn, index, slices, pageSize, scroll, required,
-        EsScrollSource.toEsQuery(pushed, stringEquality, keywordSuffix),
+      new EsScrollScan(conn, index, slices, pageSize, scroll, required, query,
         pushed, limit, timeField, pagination, cursorField, maxIdsPerBatch)
   }
 }
@@ -708,12 +820,11 @@ private case class EsAggPartition(
     index: String,
     queryJson: String,
     pageSize: Int,
-    groupNames: Array[String],
-    groupTypesJson: String,
+    groups: Array[EsGroupKey],
     keywordSuffix: String
 ) extends InputPartition
 
-/** Scan for a pushed COUNT(*) [GROUP BY cols]: one input partition (the
+/** Scan for a pushed COUNT(*) [GROUP BY keys]: one input partition (the
   * result is O(distinct groups), already reduced server-side), driving a
   * paged composite aggregation — raw documents never cross the wire. */
 private class EsAggScan(
@@ -722,12 +833,13 @@ private class EsAggScan(
     pageSize: Int,
     queryJson: String,
     pushed: Array[Filter],
-    groups: Array[StructField],
+    groups: Array[EsGroupKey],
     timeField: String,
     keywordSuffix: String
 ) extends Scan with Batch {
   override def readSchema(): StructType =
-    StructType(groups :+ StructField("count(*)", LongType, nullable = false))
+    StructType(groups.map(g => StructField(g.name, g.dataType)) :+
+      StructField("count(*)", LongType, nullable = false))
   override def toBatch: Batch = this
   override def description(): String =
     s"es-scroll index=$index PushedAggregation: [COUNT(*)" +
@@ -740,9 +852,7 @@ private class EsAggScan(
     val kept = EsScrollSource.pruneByWindow(
       EsScrollSource.resolveIndices(conn, index), pushed, timeField)
     if (kept.isEmpty) Array.empty
-    else
-      Array(EsAggPartition(conn, kept.mkString(","), queryJson, pageSize,
-        groups.map(_.name), StructType(groups).json, keywordSuffix))
+    else Array(EsAggPartition(conn, kept.mkString(","), queryJson, pageSize, groups, keywordSuffix))
   }
   override def createReaderFactory(): PartitionReaderFactory =
     new PartitionReaderFactory {
@@ -753,7 +863,8 @@ private class EsAggScan(
 
 private class EsAggReader(p: EsAggPartition) extends PartitionReader[InternalRow] {
   private val mapper     = new ObjectMapper
-  private val groupTypes = DataType.fromJson(p.groupTypesJson).asInstanceOf[StructType].fields
+  private val groups     = p.groups
+  private val zones      = groups.map(_.dayZone.map(java.time.ZoneId.of))
   private var buckets: JsonNode      = _ // current composite page
   private var afterKey: JsonNode     = _
   private var pos                    = 0
@@ -765,23 +876,30 @@ private class EsAggReader(p: EsAggPartition) extends PartitionReader[InternalRow
     val root = mapper.createObjectNode()
     root.put("size", 0)
     root.set[ObjectNode]("query", mapper.readTree(p.queryJson).asInstanceOf[ObjectNode])
-    if (p.groupNames.isEmpty) root.put("track_total_hits", true)
+    if (groups.isEmpty) root.put("track_total_hits", true)
     else {
       val comp = root.putObject("aggs").putObject("g").putObject("composite")
       comp.put("size", p.pageSize)
       val srcs = comp.putArray("sources")
-      groupTypes.foreach { gf =>
-        // keyword subfield for string group keys (composite terms over an
-        // analyzed text field would group by TOKEN on real ES); the SOURCE
-        // NAME stays the column name, so bucket keys decode unchanged
-        val fieldName =
-          if (gf.dataType == StringType && p.keywordSuffix.nonEmpty) gf.name + p.keywordSuffix
-          else gf.name
-        val t = srcs.addObject().putObject(gf.name).putObject("terms")
-        t.put("field", fieldName)
+      groups.foreach { g =>
+        // the SOURCE NAME is the key's name, so bucket keys decode unchanged
+        val src = srcs.addObject().putObject(g.name)
+        val s = g.dayZone match {
+          case Some(zone) =>
+            val d = src.putObject("date_histogram")
+            d.put("field", g.field)
+            d.put("calendar_interval", "1d")
+            d.put("time_zone", zone)
+          case None =>
+            // keyword subfield for string group keys (composite terms over
+            // an analyzed text field would group by TOKEN on real ES)
+            src.putObject("terms").put("field",
+              if (g.dataType == StringType && p.keywordSuffix.nonEmpty) g.field + p.keywordSuffix
+              else g.field)
+        }
         // real ES SKIPS docs missing the field unless told otherwise;
         // Spark's groupBy emits a null group — missing_bucket aligns them
-        t.put("missing_bucket", true)
+        s.put("missing_bucket", true)
       }
       if (afterKey != null && afterKey.isObject)
         comp.set[ObjectNode]("after", afterKey.asInstanceOf[ObjectNode])
@@ -790,7 +908,7 @@ private class EsAggReader(p: EsAggPartition) extends PartitionReader[InternalRow
   }
 
   override def next(): Boolean = {
-    if (p.groupNames.isEmpty) {
+    if (groups.isEmpty) {
       if (totalEmitted) return false
       val n = request().path("hits").path("total").path("value").asLong()
       row = new GenericInternalRow(Array[Any](n))
@@ -808,15 +926,21 @@ private class EsAggReader(p: EsAggPartition) extends PartitionReader[InternalRow
     if (done) return false
     val b    = buckets.get(pos)
     val key  = b.path("key")
-    val vals = new Array[Any](groupTypes.length + 1)
+    val vals = new Array[Any](groups.length + 1)
     var i = 0
-    while (i < groupTypes.length) {
-      // a missing_bucket key arrives as JSON null → toInternal yields the
-      // null group value, matching Spark's groupBy on a null field
-      vals(i) = EsScrollSource.toInternal(key.get(groupTypes(i).name), groupTypes(i).dataType)
+    while (i < groups.length) {
+      // a missing_bucket key arrives as JSON null → the null group value,
+      // matching Spark's groupBy on a null field
+      val k = key.get(groups(i).name)
+      vals(i) = zones(i) match {
+        case Some(zone) =>
+          if (k == null || !k.isNumber) null
+          else java.time.Instant.ofEpochMilli(k.asLong()).atZone(zone).toLocalDate.toEpochDay.toInt
+        case None => EsScrollSource.toInternal(k, groups(i).dataType)
+      }
       i += 1
     }
-    vals(groupTypes.length) = b.path("doc_count").asLong()
+    vals(groups.length) = b.path("doc_count").asLong()
     row = new GenericInternalRow(vals)
     pos += 1
     true
@@ -824,6 +948,94 @@ private class EsAggReader(p: EsAggPartition) extends PartitionReader[InternalRow
 
   override def get(): InternalRow = row
   override def close(): Unit = () // no server-side context to clear
+}
+
+private case class EsTopNPartition(
+    conn: EsConn,
+    index: String,
+    queryJson: String,
+    sortJson: String,
+    schemaJson: String,
+    n: Int
+) extends InputPartition
+
+/** Scan for a pushed top-N: ONE partition issuing one sorted plain
+  * `_search` over the comma-joined surviving indices — the server merges
+  * the per-shard top-n, no scroll context is opened. */
+private class EsTopNScan(
+    conn: EsConn,
+    index: String,
+    required: StructType,
+    queryJson: String,
+    pushed: Array[Filter],
+    timeField: String,
+    sortJson: String,
+    ordersDesc: String,
+    n: Int
+) extends Scan with Batch {
+  override def readSchema(): StructType = required
+  override def toBatch: Batch = this
+  override def description(): String =
+    s"es-scroll index=$index PushedTopN: [$ordersDesc] LIMIT $n, PushedEsQuery: $queryJson, " +
+      s"PushedFilters: [${pushed.mkString(", ")}]"
+  override def planInputPartitions(): Array[InputPartition] = {
+    val kept = EsScrollSource.pruneByWindow(
+      EsScrollSource.resolveIndices(conn, index), pushed, timeField)
+    if (kept.isEmpty) Array.empty
+    else Array(EsTopNPartition(conn, kept.mkString(","), queryJson, sortJson, required.json, n))
+  }
+  override def createReaderFactory(): PartitionReaderFactory =
+    new PartitionReaderFactory {
+      override def createReader(p: InputPartition): PartitionReader[InternalRow] =
+        new EsTopNReader(p.asInstanceOf[EsTopNPartition])
+    }
+}
+
+/** The top-N search: `size = n` ranked hits in one request. A hit whose
+  * `_source` is not an object is skipped (as on the scroll path), and the
+  * shortfall is asked for past the hits already seen (`from`), so Spark
+  * still receives the n best decodable rows. */
+private class EsTopNReader(p: EsTopNPartition) extends PartitionReader[InternalRow] {
+  private val mapper = new ObjectMapper
+  private val fields = DataType.fromJson(p.schemaJson).asInstanceOf[StructType].fields
+  private var page: JsonNode   = _ // current hits array
+  private var want             = 0 // size asked of the current page
+  private var from             = 0 // hits seen before the current page
+  private var pos              = 0
+  private var emitted          = 0
+  private var row: InternalRow = _
+
+  private def fetch(): Unit = {
+    from += (if (page == null) 0 else page.size())
+    want = p.n - emitted
+    val root = mapper.createObjectNode()
+    if (from > 0) root.put("from", from)
+    root.put("size", want)
+    root.set[ObjectNode]("query", mapper.readTree(p.queryJson).asInstanceOf[ObjectNode])
+    val src = root.putArray("_source")
+    fields.foreach(f => src.add(f.name))
+    root.set[JsonNode]("sort", mapper.readTree(p.sortJson))
+    page = mapper.readTree(EsScrollSource.post(p.conn, s"/${p.index}/_search", root.toString))
+      .path("hits").path("hits")
+    pos = 0
+  }
+
+  override def next(): Boolean = {
+    while (emitted < p.n) {
+      if (page == null || pos >= page.size()) {
+        if (page != null && page.size() < want) return false // the server ran out
+        fetch()
+        if (page.size() == 0) return false
+      }
+      val r = EsScrollSource.decodeHit(page.get(pos), fields)
+      pos += 1
+      if (r != null) { row = r; emitted += 1; return true }
+    }
+    false
+  }
+
+  override def get(): InternalRow = row
+  override def close(): Unit = () // a plain search keeps no server-side context
 }
 
 private case class EsSlicePartition(
@@ -902,6 +1114,9 @@ private class EsScrollReader(p: EsSlicePartition) extends PartitionReader[Intern
   /** Hits whose _source is not an object — skipped, reference's
     * per-record catch (EsParquetWriter.java:78-81). */
   private var skipped = 0L
+  /** The slice's exact hit count (`hits.total` with relation `eq`), or −1
+    * when the server only bounds it. */
+  private var total = -1L
 
   private def searchBody(): String = {
     val root = mapper.createObjectNode()
@@ -921,6 +1136,8 @@ private class EsScrollReader(p: EsSlicePartition) extends PartitionReader[Intern
     val resp = mapper.readTree(
       EsScrollSource.post(p.conn, s"/${p.index}/_search?scroll=${p.scroll}", searchBody()))
     scrollId = resp.path("_scroll_id").asText()
+    val t = resp.path("hits").path("total")
+    if (t.path("relation").asText() == "eq") total = t.path("value").asLong()
     page = resp.path("hits").path("hits")
     pos = 0
   }
@@ -938,24 +1155,18 @@ private class EsScrollReader(p: EsSlicePartition) extends PartitionReader[Intern
     while (true) {
       if (page == null) firstPage()
       else if (pos >= page.size()) {
-        if (page.size() == 0) return false // empty page ends the scroll (reference loop condition)
+        // an empty page ends the scroll (reference loop condition); so does
+        // having consumed every hit the server counted, which saves the
+        // empty trailing round trip
+        if (page.size() == 0 || (total >= 0 && emitted + skipped >= total)) return false
         nextPage()
         if (page.size() == 0) return false
       }
       while (pos < page.size()) {
-        val src = page.get(pos).path("_source")
+        val r = EsScrollSource.decodeHit(page.get(pos), fields)
         pos += 1
-        if (src.isObject) {
-          val vals = new Array[Any](fields.length)
-          var i = 0
-          while (i < fields.length) {
-            vals(i) = EsScrollSource.toInternal(src.get(fields(i).name), fields(i).dataType)
-            i += 1
-          }
-          row = new GenericInternalRow(vals)
-          emitted += 1
-          return true
-        } else skipped += 1
+        if (r != null) { row = r; emitted += 1; return true }
+        skipped += 1
       }
     }
     false
@@ -1032,19 +1243,10 @@ private class EsPitReader(p: EsSlicePartition) extends PartitionReader[InternalR
         if (page.size() == 0) return false
       }
       while (pos < page.size()) {
-        val src = page.get(pos).path("_source")
+        val r = EsScrollSource.decodeHit(page.get(pos), fields)
         pos += 1
-        if (src.isObject) {
-          val vals = new Array[Any](fields.length)
-          var i = 0
-          while (i < fields.length) {
-            vals(i) = EsScrollSource.toInternal(src.get(fields(i).name), fields(i).dataType)
-            i += 1
-          }
-          row = new GenericInternalRow(vals)
-          emitted += 1
-          return true
-        } else skipped += 1
+        if (r != null) { row = r; emitted += 1; return true }
+        skipped += 1
       }
     }
     false

@@ -24,20 +24,27 @@ import java.util.concurrent.atomic.AtomicLong
   *     `terms` / `range` / `exists` / `bool` with must/should/must_not)
   *     against the seeded rows, applies the `slice` spec (docs are
   *     distributed by row index mod `max` — the server-side detail a
-  *     client never observes), honors `"_source": [cols...]` filtering,
-  *     returns the first `size` hits plus a `_scroll_id`.
+  *     client never observes), honors `"_source": [cols...]` filtering and
+  *     a field `sort` (with `missing: _first|_last`, across a multi-index
+  *     search), returns the first `size` hits plus a `_scroll_id`.
+  *   - `POST /{index}/_search` without `?scroll=` — the same search, paged
+  *     by `from`/`size`, with NO scroll context and no `_scroll_id` (a real
+  *     cluster keeps none for a plain search).
   *   - `POST /_search/scroll` — next page for a live scroll context; an
   *     exhausted context returns an empty hit page (the loop-termination
   *     condition the reference polls, EsParquetWriter.java:72).
   *   - `DELETE /_search/scroll` — clears contexts (counted, so tests can
   *     assert the connector's scroll hygiene).
+  *   - `size:0` searches with a paged `composite` aggregation over `terms`
+  *     and 1-day `date_histogram` sources, or a `max` metric.
   *
   * Rows are seeded from a DataFrame via [[EsStubServer.fromDataFrame]] —
   * the one driver-side collect is the test double's seed (the server plays
   * the EXTERNAL system holding the data; it is not an engine data path)
   * and is bounded by fixture scale. Timestamps are served as ISO-8601
-  * instants (the ES `date` convention); `malformedEvery=n` replaces every
-  * n-th hit's `_source` with a scalar to exercise the connector's
+  * instants (the ES `date` convention); `malformedEvery=n` serves every
+  * n-th seeded document's `_source` as a scalar (the same documents in
+  * every search, whatever its order) to exercise the connector's
   * per-record skip.
   */
 class EsStubServer(
@@ -144,7 +151,7 @@ class EsStubServer(
           openPit(p)
         case ("POST" | "GET", "/_search") => pitSearch(body)
         case ("POST" | "GET", p) if p.endsWith("/_search") && knownIndices(p) =>
-          initialSearch(body, searchTarget(p))
+          initialSearch(body, searchTarget(p), scroll = q != null && q.startsWith("scroll="))
         case _ => throw new IllegalArgumentException(s"unhandled route ${ex.getRequestMethod} $path")
       }
       val bytes = resp.getBytes(StandardCharsets.UTF_8)
@@ -289,7 +296,10 @@ class EsStubServer(
     root.toString
   }
 
-  private def initialSearch(body: String, data: IndexedSeq[Array[Any]]): String = {
+  /** A search over `data`: with `scroll`, opens a context and returns its
+    * first page; without, returns the `from`/`size` window of the (sorted)
+    * matches and keeps nothing. */
+  private def initialSearch(body: String, data: IndexedSeq[Array[Any]], scroll: Boolean): String = {
     searchCalls.incrementAndGet()
     lastSearchBody = body
     val req = mapper.readTree(body)
@@ -304,13 +314,44 @@ class EsStubServer(
         (0 until a.size).map(a.get(_).asText()).toArray
       } else colNames
     val q   = req.path("query")
-    val ids = data.indices.iterator
+    val ids = sortIds(data.indices.iterator
       .filter(i => i % sliceMax == sliceId && evalQuery(q, data(i)))
-      .toArray
+      .toArray, data, req.path("sort"))
+    val ctx = Ctx(data, ids, cols, size, req.path("from").asInt(0))
+    if (!scroll) return pageResponse(null, ctx)
     val id  = s"$index:${UUID.randomUUID().toString}"
-    val ctx = Ctx(data, ids, cols, size, 0)
     contexts.put(id, ctx)
     pageResponse(id, ctx)
+  }
+
+  /** Real-ES `sort` over a multi-index search: each `{field: {order,
+    * missing}}` key in turn, `missing` (`_first`/`_last`, default `_last`)
+    * placing docs without the field regardless of `order`; `_doc` (and no
+    * sort) is index order. Ties keep index order. */
+  private def sortIds(ids: Array[Int], data: IndexedSeq[Array[Any]], sort: JsonNode): Array[Int] = {
+    val keys = (0 until sort.size).map(sort.get).filter(_.isObject).map { o =>
+      val f    = o.fieldNames().next()
+      val spec = o.get(f)
+      (f, spec.path("order").asText("asc") == "desc", spec.path("missing").asText("_last") == "_first")
+    }
+    if (keys.isEmpty) return ids
+    val ord: Ordering[Int] = (a: Int, b: Int) =>
+      keys.iterator.map { case (f, desc, missingFirst) =>
+        (field(data(a), f), field(data(b), f)) match {
+          case (null, null) => 0
+          case (null, _)    => if (missingFirst) -1 else 1
+          case (_, null)    => if (missingFirst) 1 else -1
+          case (x, y)       => val c = valueOrder(x, y); if (desc) -c else c
+        }
+      }.find(_ != 0).getOrElse(0)
+    ids.sorted(ord)
+  }
+
+  /** Total order on non-null field values: numbers and timestamps by value,
+    * everything else by its string form. */
+  private def valueOrder(x0: Any, y0: Any): Int = (comparable(x0), comparable(y0)) match {
+    case (x: Number, y: Number) => java.lang.Double.compare(x.doubleValue(), y.doubleValue())
+    case (x, y)                 => String.valueOf(x).compareTo(String.valueOf(y))
   }
 
   /** `size:0` search: grand total via `track_total_hits`, and the paged
@@ -340,36 +381,51 @@ class EsStubServer(
       require(comp.isObject, s"stub only implements composite/max aggregations, got: $aggs")
       val size   = comp.path("size").asInt(10)
       val srcs   = comp.get("sources")
-      val fields = (0 until srcs.size).map { i =>
+      // (name, row → key, missing_bucket) per source: a `terms` key is the
+      // field's value; a 1-day `date_histogram` key is the epoch millis of
+      // the local midnight starting the value's day in `time_zone`
+      val sources = (0 until srcs.size).map { i =>
         val o    = srcs.get(i)
         val name = o.fieldNames().next()
-        val t    = o.get(name).path("terms")
-        (name, t.get("field").asText(), t.path("missing_bucket").asBoolean(false))
+        val kind = o.get(name).fieldNames().next()
+        val s    = o.get(name).get(kind)
+        val f    = s.get("field").asText()
+        val key: Array[Any] => Any = kind match {
+          case "terms" => row => field(row, f)
+          case "date_histogram" =>
+            require(s.path("calendar_interval").asText() == "1d",
+              s"stub only implements 1d date_histogram sources, got: $s")
+            val zone = java.time.ZoneId.of(s.path("time_zone").asText("UTC"))
+            row => comparable(field(row, f)) match {
+              case null => null
+              case micros: Long =>
+                val day = java.time.Instant.ofEpochMilli(Math.floorDiv(micros, 1000L)).atZone(zone).toLocalDate
+                day.atStartOfDay(zone).toInstant.toEpochMilli
+              case other => throw new IllegalArgumentException(s"date_histogram over non-date value $other")
+            }
+          case other => throw new IllegalArgumentException(s"stub does not implement composite source '$other'")
+        }
+        (name, key, s.path("missing_bucket").asBoolean(false))
       }
+      val keyOf = (i: Int) => sources.map { case (_, key, _) => key(data(i)) }: Seq[Any]
       // real-ES composite semantics: a document missing a source's field is
       // SKIPPED unless that source declares missing_bucket:true (which then
       // emits it under a null key)
       val kept = matching.filter(i =>
-        fields.forall { case (_, f, missing) => missing || field(data(i), f) != null })
+        sources.zip(keyOf(i)).forall { case ((_, _, missing), k) => missing || k != null })
       // composite buckets ascend element-wise in key order; `after` resumes
       // strictly past a key under the SAME total order
       val keyOrd: Ordering[Seq[Any]] = (a: Seq[Any], b: Seq[Any]) =>
-        a.zip(b).iterator.map { case (x0, y0) =>
-          (comparable(x0), comparable(y0)) match {
-            case (null, null)           => 0
-            case (null, _)              => -1
-            case (_, null)              => 1
-            case (x: Number, y: Number) => java.lang.Double.compare(x.doubleValue(), y.doubleValue())
-            case (x, y)                 => String.valueOf(x).compareTo(String.valueOf(y))
-          }
+        a.zip(b).iterator.map {
+          case (null, null) => 0
+          case (null, _)    => -1
+          case (_, null)    => 1
+          case (x, y)       => valueOrder(x, y)
         }.find(_ != 0).getOrElse(0)
-      val grouped = kept
-        .groupBy(i => fields.map { case (_, f, _) => field(data(i), f) }: Seq[Any])
-        .toSeq
-        .sortBy(_._1)(keyOrd)
+      val grouped = kept.groupBy(keyOf).toSeq.sortBy(_._1)(keyOrd)
       val after = comp.path("after")
       val page = (if (after.isObject) {
-        val afterVals: Seq[Any] = fields.map { case (name, _, _) =>
+        val afterVals: Seq[Any] = sources.map { case (name, _, _) =>
           val n = after.get(name)
           if (n == null || n.isNull) null else queryVal(n)
         }
@@ -380,12 +436,12 @@ class EsStubServer(
       page.foreach { case (k, is) =>
         val b   = arr.addObject()
         val key = b.putObject("key")
-        fields.zip(k).foreach { case ((name, _, _), v) => putJson(key, name, v) }
+        sources.zip(k).foreach { case ((name, _, _), v) => putJson(key, name, v) }
         b.put("doc_count", is.length)
       }
       if (page.nonEmpty) {
         val ak = g.putObject("after_key")
-        fields.zip(page.last._1).foreach { case ((name, _, _), v) => putJson(ak, name, v) }
+        sources.zip(page.last._1).foreach { case ((name, _, _), v) => putJson(ak, name, v) }
       }
     }
     root.toString
@@ -410,9 +466,11 @@ class EsStubServer(
     s"""{"succeeded":true,"num_freed":$n}"""
   }
 
+  /** The next `pageSize` hits of `ctx`; `id` = null for a plain search
+    * (no `_scroll_id` in the response). */
   private def pageResponse(id: String, ctx: Ctx): String = synchronized {
     val root = mapper.createObjectNode()
-    root.put("_scroll_id", id)
+    if (id != null) root.put("_scroll_id", id)
     val hitsObj = root.putObject("hits")
     hitsObj.putObject("total").put("value", ctx.ids.length).put("relation", "eq")
     val arr  = hitsObj.putArray("hits")
@@ -423,7 +481,7 @@ class EsStubServer(
       val hit = arr.addObject()
       hit.put("_index", index)
       hit.put("_id", rowIdx.toString)
-      if (malformedEvery > 0 && (k + 1) % malformedEvery == 0)
+      if (malformedEvery > 0 && (rowIdx + 1) % malformedEvery == 0)
         hit.put("_source", 42) // not an object: the connector must skip it
       else {
         val src = hit.putObject("_source")

@@ -105,4 +105,41 @@ class CliEsSpec extends SparkSpec {
       assert(new java.io.File(s"$out/schema.asvc").exists(), "schema.asvc must be persisted")
     }
   }
+
+  test("one whole --es call ships the export window once: sample top-N, write scroll, per-day agg") {
+    withDayServer { (srv, url) =>
+      val windowDays = 20 // the chosen type's window holds more than the 100-row sample
+      val slices     = 4  // Cli.runEs's export read
+      val daily  = EsScrollSource.discoverDailyIndices(url, "events-*")
+      val loDay  = daily.flatMap(_._2).max.plusDays(1).minusDays(windowDays)
+      val (kept, pruned) = daily.partition(_._2.get.compareTo(loDay) >= 0)
+      def perPruned() = pruned.map { case (n, _) => srv.searchCount(n) }
+      def requests()  = srv.searchCalls.get() + srv.scrollCalls.get()
+      def deltas(body: => Unit): (Seq[Long], Long, Long) = {
+        val p0 = perPruned(); val r0 = requests(); val h0 = srv.hitsServed.get()
+        body
+        (perPruned().zip(p0).map { case (a, b) => a - b }, requests() - r0, srv.hitsServed.get() - h0)
+      }
+      // the steps before the export (schema read, menu) touch every index
+      val (preludePruned, _, _) = deltas {
+        Cli.esDiscoverMenu(spark, url, "events-*", Cli.esSchema(spark, url, "events-*", Map.empty), 10)
+      }
+      val out = graft.sources.ParquetSink.scratchDir(spark, "cli_es_traffic")
+      val (callPruned, reqs, hits) = deltas {
+        Cli.runEs(spark, url, "events-*", out, windowDays, topK = 10,
+          interactive = false, eventTypeOpt = None, readLine = () => "").collect()
+      }
+      val chosen = events.groupBy(col("event_type")).count()
+        .orderBy(col("count").desc, col("event_type")).head().getString(0)
+      val lo = java.sql.Timestamp.from(loDay.atStartOfDay(java.time.ZoneOffset.UTC).toInstant)
+      val window = events.where(col("ts") >= lit(lo) && col("event_type") === chosen).count()
+      assert(window > 100)
+      assert(hits === 100 + 100 + window,
+        "hits = schema sample + the top-100 sample + the exported window, each once")
+      assert(callPruned === preludePruned, "the export sends no request to a pruned index")
+      assert(srv.liveContexts + srv.livePits === 0, "no search context outlives the call")
+      assert(reqs <= 2 + 1 + kept.size * slices * 2 + 1,
+        s"$reqs requests: schema + menu, the top-N, one scroll per slice, the per-day agg")
+    }
+  }
 }

@@ -702,4 +702,156 @@ class EsScrollSourceSpec extends SparkSpec {
       assert(inferred.count() === 200)
     }
   }
+
+  // ---- top-N and per-day aggregate pushdown --------------------------------
+
+  /** Events 0..399 with null keys: event_id null where id % 100 == 7 (4
+    * rows), a string key `rk` (the reversed id, so its order differs from
+    * the numeric one) null where id % 100 == 13, and ts null where
+    * id % 50 == 21. Few enough nulls that a top-10 never ends inside a tie. */
+  private lazy val keyed: DataFrame = {
+    import spark.implicits._
+    events.where($"event_id" < 400)
+      .withColumn("rk", when($"event_id" % 100 =!= 13, reverse($"event_id".cast("string"))))
+      .withColumn("ts", when($"event_id" % 50 =!= 21, $"ts"))
+      .withColumn("event_id", when($"event_id" % 100 =!= 7, $"event_id"))
+      .cache()
+  }
+
+  private def keyedRead(url: String, phrase: Boolean = false): DataFrame =
+    spark.read
+      .format("graft.sources.es.EsScrollSource")
+      .schema(keyed.schema)
+      .option("url", url)
+      .option("index", "events")
+      .option("slices", 4)
+      .option("stringEquality", if (phrase) "phrase" else "term")
+      .load()
+
+  /** Rows as a sorted multiset (ties inside a top-N come back in any order). */
+  private def bag(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+
+  test("orderBy(k).limit(n) is one sorted search shipping exactly n hits, nulls placed like Spark") {
+    withServer(keyed) { (srv, url) =>
+      Seq(col("event_id").asc, col("event_id").desc, col("event_id").asc_nulls_last,
+          col("rk").asc, col("rk").desc_nulls_first).foreach { k =>
+        val s0 = srv.searchCalls.get(); val h0 = srv.hitsServed.get()
+        val got = keyedRead(url).orderBy(k).limit(10)
+        assert(bag(got) === bag(keyed.orderBy(k).limit(10)), s"top-10 by $k")
+        assert(srv.searchCalls.get() - s0 === 1, s"top-10 by $k must be one search")
+        assert(srv.hitsServed.get() - h0 === 10, s"top-10 by $k must ship exactly 10 hits")
+        assert(srv.scrollCalls.get() === 0 && srv.liveContexts === 0, "a top-N opens no scroll")
+      }
+      assert(srv.lastSearchBody.contains("\"missing\":\"_first\""), srv.lastSearchBody)
+    }
+  }
+
+  test("a pushed top-N composes with pushed filters and skips malformed hits without losing rows") {
+    import spark.implicits._
+    withServer(keyed, malformedEvery = 4) { (srv, url) =>
+      val got = keyedRead(url).where($"event_type" === "purchase").orderBy($"rk").limit(20)
+        .select($"rk").as[String].collect().toSeq
+      assert(srv.scrollCalls.get() === 0 && srv.liveContexts === 0, "a top-N never scrolls")
+      assert(srv.searchCalls.get() > 1, "skipped hits are made up for past the first page")
+      // the stub replaces every 4th hit with a scalar: the truth is the 20
+      // best of the decodable hits, whatever their position in the ranking
+      val all = keyedRead(url).where($"event_type" === "purchase").select($"rk").as[String]
+        .collect().toSeq
+      assert(got === all.sortBy(Option(_)).take(20))
+    }
+  }
+
+  test("groupBy(to_date(ts)).count() is a date_histogram aggregation in the session time zone") {
+    import spark.implicits._
+    withServer(keyed) { (srv, url) =>
+      def days(df: DataFrame) = df.groupBy(to_date($"ts").as("day")).count()
+        .collect().map(r => Option(r.getDate(0)).map(_.toString) -> r.getLong(1)).toMap
+      val prevTz = spark.conf.get("spark.sql.session.timeZone")
+      try {
+        val byZone = Seq("UTC", "America/Los_Angeles").map { tz =>
+          spark.conf.set("spark.sql.session.timeZone", tz)
+          val h0  = srv.hitsServed.get()
+          val got = days(keyedRead(url))
+          assert(srv.hitsServed.get() === h0, s"a pushed per-day count ships no hits ($tz)")
+          assert(got === days(keyed), s"per-day counts in $tz")
+          assert(got(None) === keyed.where($"ts".isNull).count(), "null ts is a null day")
+          got
+        }
+        assert(byZone(0) !== byZone(1), "events straddling midnight must move with the zone")
+        assert(srv.lastSearchBody.contains("\"time_zone\":\"America/Los_Angeles\""), srv.lastSearchBody)
+      } finally spark.conf.set("spark.sql.session.timeZone", prevTz)
+    }
+  }
+
+  test("the scan description shows the pushed top-N and the per-day GROUP BY") {
+    import spark.implicits._
+    withServer(keyed.limit(5)) { (_, url) =>
+      val topN = keyedRead(url).orderBy($"event_id").limit(3).queryExecution.executedPlan.toString
+      assert(topN.contains("PushedTopN: [event_id ASC NULLS FIRST] LIMIT 3"), topN)
+      val perDay = keyedRead(url).groupBy(to_date($"ts")).count().queryExecution.executedPlan.toString
+      assert(perDay.contains("GROUP BY CAST(ts AS DATE)"), perDay)
+    }
+  }
+
+  test("top-N and per-day count fall back to the scroll with equal results when they can't push") {
+    import spark.implicits._
+    withServer(keyed) { (srv, url) =>
+      def perDay(df: DataFrame) = bag(df.groupBy(to_date($"ts")).count())
+      def scrolled[A](body: => A): A = {
+        val h0 = srv.hitsServed.get(); val a = body
+        assert(srv.hitsServed.get() - h0 > 10, "the fallback must scroll the documents")
+        a
+      }
+      // ANSI off: Spark does not translate to_date(ts) for the source
+      val prevAnsi = spark.conf.get("spark.sql.ansi.enabled")
+      try {
+        spark.conf.set("spark.sql.ansi.enabled", "false")
+        assert(scrolled(perDay(keyedRead(url))) === perDay(keyed))
+      } finally spark.conf.set("spark.sql.ansi.enabled", prevAnsi)
+      // phrase mode: a post-scan filter means the server ranks/counts rows
+      // Spark then drops
+      val purchases = keyed.where($"event_type" === "purchase")
+      assert(scrolled(bag(keyedRead(url, phrase = true).where($"event_type" === "purchase")
+        .orderBy($"event_id").limit(10))) === bag(purchases.orderBy($"event_id").limit(10)))
+      assert(scrolled(perDay(keyedRead(url, phrase = true).where($"event_type" === "purchase")))
+        === perDay(purchases))
+      // a cast of a non-time column is no date_histogram, and a float sort
+      // key has no server order equal to Spark's
+      def byInt(df: DataFrame) = bag(df.groupBy($"user_id".cast("int")).count())
+      assert(scrolled(byInt(keyedRead(url))) === byInt(keyed))
+      assert(scrolled(bag(keyedRead(url).orderBy($"value", $"event_id").limit(10)))
+        === bag(keyed.orderBy($"value", $"event_id").limit(10)))
+    }
+  }
+
+  test("a plain _search keeps no scroll context: schema inference and a top-N leave none live") {
+    import spark.implicits._
+    withServer(events.limit(50)) { (srv, url) =>
+      val inferred = spark.read.format("graft.sources.es.EsScrollSource")
+        .option("url", url).option("index", "events").load()
+      assert(inferred.schema.fieldNames.contains("event_id"))
+      esRead(url).orderBy($"event_id").limit(5).collect()
+      assert(srv.scrollCalls.get() === 0)
+      assert(srv.liveContexts === 0, "a search without ?scroll= must open no context")
+    }
+  }
+
+  test("a slice that fits one page ends without the empty trailing scroll: 1 search + 1 clear") {
+    withServer(events.limit(50)) { (srv, url) =>
+      assert(esRead(url, slices = 1, pageSize = 1000).collect().length === 50)
+      assert(srv.searchCalls.get() === 1)
+      assert(srv.scrollCalls.get() === 0, "hits.total was reached: no empty page needed")
+      assert(srv.clearedScrolls.get() === 1 && srv.liveContexts === 0)
+    }
+  }
+
+  test("a multi-page slice still reads every page, and no trailing empty one") {
+    val fifty = events.where(col("event_id") < 50)
+    withServer(fifty) { (srv, url) =>
+      assert(bag(esRead(url, slices = 1, pageSize = 7)) === bag(fifty))
+      // ceil(50 / 7) = 8 pages: the first rides the search, 7 scroll calls
+      assert(srv.scrollCalls.get() === 7)
+      assert(srv.liveContexts === 0)
+    }
+  }
 }

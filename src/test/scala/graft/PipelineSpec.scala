@@ -25,6 +25,31 @@ class PipelineSpec extends SparkSpec {
     assert(back.count() === audit.agg(sum($"n_rows")).head().getLong(0))
   }
 
+  test("a malformed first sample neither fails the export nor renders the .asvc") {
+    import spark.implicits._
+    val purchases = Tables.events(spark, sf).where($"event_type" === "purchase")
+    val first     = purchases.agg(min($"event_id")).head().getLong(0)
+    val truncated = purchases.withColumn("props",
+      when($"event_id" === first, lit("""{"k": 8""")).otherwise($"props"))
+    val out = java.nio.file.Files.createTempDirectory("graft_pipe_bad_first").toString
+    val audit = Pipeline.exportEvents(truncated, out, "purchase", None)
+    assert(audit.agg(sum($"n_dead")).head().getLong(0) === 1L, "the truncated props is a dead letter")
+    val second = purchases.where($"event_id" > first).orderBy($"event_id").select($"props").as[String].head()
+    val asvc = java.nio.file.Paths.get(s"$out/schema.asvc")
+    assert(java.nio.file.Files.readString(asvc) ===
+      graft.sources.AvroAsvc.fromSampleJson("purchase", second), "the .asvc renders the first object sample")
+    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$out/schema.json")))
+
+    // no sample parses (the 100 lowest ids are all malformed): schema.json
+    // is still written, no .asvc (the stale one goes)
+    val sampleIds = purchases.orderBy($"event_id").limit(100).select($"event_id").as[Long].collect()
+    val badSample = purchases.withColumn("props",
+      when($"event_id".isin(sampleIds.toIndexedSeq: _*), lit("not json")).otherwise($"props"))
+    Pipeline.exportEvents(badSample, out, "purchase", None).collect()
+    assert(!java.nio.file.Files.exists(asvc))
+    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$out/schema.json")))
+  }
+
   test("foreachBatch parquet sink appends each micro-batch") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
