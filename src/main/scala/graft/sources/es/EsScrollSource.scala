@@ -40,11 +40,17 @@ import scala.jdk.CollectionConverters._
   * Scale design (the part the reference's single-threaded scroll lacks):
   *   - **Sliced scroll fan-out**: `slices=N` plans N InputPartitions, each
   *     driving an independent server-side slice (`"slice":{"id":i,"max":N}`)
-  *     — ES partitions the index server-side and N executor tasks pull
-  *     disjoint row sets concurrently. This is the documented ES mechanism
-  *     for parallel full-index export, and it is exactly Spark's partition
-  *     model: on a 1000-executor cluster the scan parallelizes without any
-  *     driver coordination beyond partition planning.
+  *     of ONE scroll over every index the read keeps (comma-joined, the ES
+  *     multi-index search) — ES partitions the target server-side and N
+  *     executor tasks pull disjoint row sets concurrently. `slices` is thus
+  *     the read's total parallelism, whatever the number of indices; ES
+  *     advises keeping it at or below the target's total shard count. Only
+  *     a target list too long for one request line (~220 daily indices)
+  *     splits into several targets, with N slices each. This is the
+  *     documented ES mechanism for parallel full-index export, and it is
+  *     exactly Spark's partition model: on a 1000-executor cluster the scan
+  *     parallelizes without any driver coordination beyond partition
+  *     planning.
   *   - **Filter pushdown to the ES query DSL**: accepted Spark source
   *     filters compile to `bool`/`term`/`terms`/`range`/`exists` clauses in
   *     the search body (the reference pushes its `match_phrase(rule_name)`
@@ -55,14 +61,16 @@ import scala.jdk.CollectionConverters._
   *     request's `"_source": [cols...]` filter, so unneeded fields are not
   *     serialized, shipped, or parsed.
   *   - **Limit pushdown**: a pushed limit caps `size` per page and stops
-  *     each slice's scroll loop after `limit` rows (the reference's
+  *     each slice's scroll loop after `limit` rows, so a read ships at
+  *     most `slices × limit` decodable hits (the reference's
   *     sampling reads push `.size(1)` server-side the same way; Spark
   *     still applies the exact global limit post-scan).
   *   - **Top-N pushdown**: `ORDER BY cols LIMIT n` (n ≤ `max_result_window`,
-  *     plain integral/string/date/timestamp columns) is ONE sorted plain
+  *     plain integral/string/date/timestamp columns) is a sorted plain
   *     `_search` (`size=n`, `sort` with `missing` placed where Spark puts
-  *     nulls) against the surviving indices — n hits, one request, no
-  *     scroll context; Spark keeps its final sort/limit (partial push).
+  *     nulls) against the surviving indices — n hits, one request per
+  *     search target, no scroll context; Spark keeps its final sort/limit
+  *     (partial push).
   *   - **Aggregate pushdown**: `COUNT(*) [GROUP BY cols]` is a paged
   *     `composite` aggregation; a `CAST(timeField AS DATE)` key (Spark's
   *     `to_date(ts)` under the default ANSI mode) is a 1-day
@@ -137,11 +145,13 @@ class EsScrollSource extends TableProvider {
     * same way (Bootstrap.java:294-303). */
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val conn   = EsScrollSource.connOf(options)
-    val index  = EsScrollSource.resolveIndices(conn,
-      EsScrollSource.reqOption(options, "index")).mkString(",")
+    val index  = EsScrollSource.reqOption(options, "index")
+    // the sample is one page, so the first search target is enough
+    val target = EsScrollSource.searchTargets(conn, index, Array.empty, "").headOption
+      .getOrElse(throw new IllegalArgumentException(s"es-scroll: index '$index' matched no indices"))
     val sample = options.getInt("inferSample", 100)
     val body   = s"""{"size":$sample,"query":{"match_all":{}}}"""
-    val resp   = EsScrollSource.post(conn, s"/$index/_search", body)
+    val resp   = EsScrollSource.post(conn, s"/$target/_search", body)
     val m      = new ObjectMapper
     val hits   = m.readTree(resp).path("hits").path("hits")
     val sources = (0 until hits.size).map(i => hits.get(i).path("_source").toString)
@@ -336,6 +346,40 @@ object EsScrollSource {
           case None => true
         }
       }
+  }
+
+  /** ES's default `http.max_initial_line_length`: the longest request line
+    * (`POST /<target>/_search?scroll=3m HTTP/1.1`) a cluster accepts. */
+  private[es] val MaxRequestLine = 4096
+
+  /** The part of a request line that is not the target: method, the
+    * longest endpoint suffix with its query string
+    * (`/_pit?keep_alive=<scroll>`), and the protocol. */
+  private val RequestLineAllowance = 128
+
+  /** The search targets of a read: `index` resolved (patterns via
+    * `_cat/indices`), the day indices outside the pushed `timeField` window
+    * pruned, and the survivors comma-joined into multi-index searches, the
+    * documented ES form. The survivors are packed, in order, into as few
+    * targets as keep every request line within [[MaxRequestLine]], so a
+    * read names each surviving index in exactly one target and never names
+    * a pruned one. Empty when every index is pruned. */
+  private[es] def searchTargets(
+      conn: EsConn,
+      index: String,
+      pushed: Array[Filter],
+      timeField: String
+  ): Seq[String] = {
+    val budget = MaxRequestLine - RequestLineAllowance - URI.create(conn.url).getRawPath.length
+    val out = Seq.newBuilder[String]
+    val cur = new StringBuilder
+    pruneByWindow(resolveIndices(conn, index), pushed, timeField).foreach { idx =>
+      if (cur.nonEmpty && cur.length + 1 + idx.length > budget) { out += cur.toString; cur.clear() }
+      if (cur.nonEmpty) cur += ','
+      cur ++= idx
+    }
+    if (cur.nonEmpty) out += cur.toString
+    out.result()
   }
 
   private def send(conn: EsConn, b0: HttpRequest.Builder): String = {
@@ -815,6 +859,21 @@ private class EsScanBuilder(
   }
 }
 
+/** A batch scan over the search targets of
+  * [[EsScrollSource.searchTargets]], resolved once per scan: Spark may plan
+  * one scan's partitions more than once, and each action builds a new scan,
+  * so one action sends one `_cat/indices` and plans over one index list. */
+private abstract class EsTargetScan(
+    conn: EsConn,
+    index: String,
+    pushed: Array[Filter],
+    timeField: String
+) extends Scan with Batch {
+  protected lazy val targets: Seq[String] =
+    EsScrollSource.searchTargets(conn, index, pushed, timeField)
+  override def toBatch: Batch = this
+}
+
 private case class EsAggPartition(
     conn: EsConn,
     index: String,
@@ -824,9 +883,10 @@ private case class EsAggPartition(
     keywordSuffix: String
 ) extends InputPartition
 
-/** Scan for a pushed COUNT(*) [GROUP BY keys]: one input partition (the
-  * result is O(distinct groups), already reduced server-side), driving a
-  * paged composite aggregation — raw documents never cross the wire. */
+/** Scan for a pushed COUNT(*) [GROUP BY keys]: one input partition per
+  * search target (the result is O(distinct groups), already reduced
+  * server-side), each driving a paged composite aggregation — raw
+  * documents never cross the wire. */
 private class EsAggScan(
     conn: EsConn,
     index: String,
@@ -836,24 +896,20 @@ private class EsAggScan(
     groups: Array[EsGroupKey],
     timeField: String,
     keywordSuffix: String
-) extends Scan with Batch {
+) extends EsTargetScan(conn, index, pushed, timeField) {
   override def readSchema(): StructType =
     StructType(groups.map(g => StructField(g.name, g.dataType)) :+
       StructField("count(*)", LongType, nullable = false))
-  override def toBatch: Batch = this
   override def description(): String =
     s"es-scroll index=$index PushedAggregation: [COUNT(*)" +
       (if (groups.nonEmpty) s" GROUP BY ${groups.map(_.name).mkString(", ")}" else "") +
       s"], PushedEsQuery: $queryJson, PushedFilters: [${pushed.mkString(", ")}]"
-  /** Surviving indices comma-join into ONE multi-index search (the ES
-    * form) — the server merges buckets across them; window-pruned indices
-    * never appear in the path. */
-  override def planInputPartitions(): Array[InputPartition] = {
-    val kept = EsScrollSource.pruneByWindow(
-      EsScrollSource.resolveIndices(conn, index), pushed, timeField)
-    if (kept.isEmpty) Array.empty
-    else Array(EsAggPartition(conn, kept.mkString(","), queryJson, pageSize, groups, keywordSuffix))
-  }
+  /** One multi-index composite search per target: the server merges
+    * buckets across a target's indices, and Spark's final `sum(count)`
+    * merges the targets (the push is partial). */
+  override def planInputPartitions(): Array[InputPartition] =
+    targets.map(t =>
+      EsAggPartition(conn, t, queryJson, pageSize, groups, keywordSuffix): InputPartition).toArray
   override def createReaderFactory(): PartitionReaderFactory =
     new PartitionReaderFactory {
       override def createReader(p: InputPartition): PartitionReader[InternalRow] =
@@ -959,9 +1015,10 @@ private case class EsTopNPartition(
     n: Int
 ) extends InputPartition
 
-/** Scan for a pushed top-N: ONE partition issuing one sorted plain
-  * `_search` over the comma-joined surviving indices — the server merges
-  * the per-shard top-n, no scroll context is opened. */
+/** Scan for a pushed top-N: one partition per search target, each issuing
+  * one sorted plain `_search` — the server merges the per-shard top-n of a
+  * target's indices, Spark's kept sort/limit merges the targets, and no
+  * scroll context is opened. */
 private class EsTopNScan(
     conn: EsConn,
     index: String,
@@ -972,18 +1029,14 @@ private class EsTopNScan(
     sortJson: String,
     ordersDesc: String,
     n: Int
-) extends Scan with Batch {
+) extends EsTargetScan(conn, index, pushed, timeField) {
   override def readSchema(): StructType = required
-  override def toBatch: Batch = this
   override def description(): String =
     s"es-scroll index=$index PushedTopN: [$ordersDesc] LIMIT $n, PushedEsQuery: $queryJson, " +
       s"PushedFilters: [${pushed.mkString(", ")}]"
-  override def planInputPartitions(): Array[InputPartition] = {
-    val kept = EsScrollSource.pruneByWindow(
-      EsScrollSource.resolveIndices(conn, index), pushed, timeField)
-    if (kept.isEmpty) Array.empty
-    else Array(EsTopNPartition(conn, kept.mkString(","), queryJson, sortJson, required.json, n))
-  }
+  override def planInputPartitions(): Array[InputPartition] =
+    targets.map(t =>
+      EsTopNPartition(conn, t, queryJson, sortJson, required.json, n): InputPartition).toArray
   override def createReaderFactory(): PartitionReaderFactory =
     new PartitionReaderFactory {
       override def createReader(p: InputPartition): PartitionReader[InternalRow] =
@@ -1065,9 +1118,8 @@ private class EsScrollScan(
     pagination: String,
     cursorField: String = "event_id",
     maxIdsPerBatch: Long = 1000L
-) extends Scan with Batch {
+) extends EsTargetScan(conn, index, pushed, timeField) {
   override def readSchema(): StructType = required
-  override def toBatch: Batch = this
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
     new EsTailStream(conn, index, slices, pageSize, scroll, required,
       queryJson, cursorField, maxIdsPerBatch)
@@ -1075,16 +1127,17 @@ private class EsScrollScan(
     s"es-scroll index=$index slices=$slices pagination=$pagination PushedEsQuery: $queryJson, " +
       s"PushedFilters: [${pushed.mkString(", ")}]${limit.fold("")(l => s", PushedLimit: $l")}"
 
-  /** One partition per (surviving index × slice): pattern indices resolve
-    * via `_cat/indices` and day-suffixed ones outside the pushed ts window
-    * are pruned on the DRIVER (partition planning, exactly where Spark
-    * prunes catalog partitions) — executors scroll only surviving indices. */
+  /** `slices` partitions per search target — one target unless the
+    * surviving indices overflow a request line — each driving one slice of
+    * a sliced scroll (or PIT) over all of the target's indices. Pattern
+    * indices resolve via `_cat/indices` and day-suffixed ones outside the
+    * pushed ts window are pruned on the DRIVER (partition planning, exactly
+    * where Spark prunes catalog partitions) — executors never address a
+    * pruned index. */
   override def planInputPartitions(): Array[InputPartition] = {
     val n = math.max(1, slices)
-    val kept = EsScrollSource.pruneByWindow(
-      EsScrollSource.resolveIndices(conn, index), pushed, timeField)
-    (for { idx <- kept; i <- 0 until n } yield
-      EsSlicePartition(i, n, conn, idx, queryJson,
+    (for { t <- targets; i <- 0 until n } yield
+      EsSlicePartition(i, n, conn, t, queryJson,
         limit.fold(pageSize)(l => math.min(pageSize, math.max(1, l))),
         scroll, required.json, limit.getOrElse(-1), pagination): InputPartition
     ).toArray

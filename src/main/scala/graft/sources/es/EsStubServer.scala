@@ -69,6 +69,8 @@ class EsStubServer(
     * "null" via an auto-tupled options.get — keep it asserted). */
   @volatile var lastScrollKeepAlive: String = ""
   val searchCalls  = new AtomicLong(0)
+  /** Searches that opened a scroll context (`?scroll=`). */
+  val scrollSearchCalls = new AtomicLong(0)
   val scrollCalls  = new AtomicLong(0)
   val clearedScrolls = new AtomicLong(0)
   /** Total hits serialized over the wire (pushdown tests assert this). */
@@ -77,6 +79,12 @@ class EsStubServer(
   val rejected = new AtomicLong(0)
   /** `size:0` aggregation searches served (discovery-pushdown assertions). */
   val aggCalls = new AtomicLong(0)
+  /** `GET /_cat/indices` requests (pattern resolutions). */
+  val catCalls = new AtomicLong(0)
+  /** The longest request line served, in bytes (`POST /<target>/_search
+    * HTTP/1.1`); a real cluster rejects one longer than its
+    * `http.max_initial_line_length`, 4,096 bytes by default. */
+  val longestRequestLine = new AtomicLong(0)
   private val reqSeq = new AtomicLong(0)
   /** Per-index `_search` hit counts — index-pruning tests assert that a
     * pruned index never receives a request. */
@@ -116,6 +124,9 @@ class EsStubServer(
   private def handle(ex: HttpExchange): Unit = {
     val path = ex.getRequestURI.getPath
     val q = ex.getRequestURI.getQuery
+    val line = s"${ex.getRequestMethod} ${ex.getRequestURI} ${ex.getProtocol}"
+    longestRequestLine.accumulateAndGet(
+      line.getBytes(StandardCharsets.UTF_8).length, (a, b) => math.max(a, b))
     if (q != null && q.startsWith("scroll=")) lastScrollKeepAlive = q.stripPrefix("scroll=")
     val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
     // Authentication FIRST (real ES's security filter runs before the
@@ -143,7 +154,7 @@ class EsStubServer(
       val resp: String = (ex.getRequestMethod, path) match {
         case ("DELETE", "/_search/scroll") => clearScroll(body)
         case ("POST" | "GET", "/_search/scroll") => scrollNext(body)
-        case ("GET", "/_cat/indices") => catIndices()
+        case ("GET", "/_cat/indices") => catCalls.incrementAndGet(); catIndices()
         case ("GET", p) if p.endsWith("/_mapping") =>
           mappingOf(p.stripPrefix("/").stripSuffix("/_mapping"))
         case ("DELETE", "/_pit") => clearPit(body)
@@ -319,6 +330,7 @@ class EsStubServer(
       .toArray, data, req.path("sort"))
     val ctx = Ctx(data, ids, cols, size, req.path("from").asInt(0))
     if (!scroll) return pageResponse(null, ctx)
+    scrollSearchCalls.incrementAndGet()
     val id  = s"$index:${UUID.randomUUID().toString}"
     contexts.put(id, ctx)
     pageResponse(id, ctx)

@@ -112,7 +112,7 @@ class CliEsSpec extends SparkSpec {
       val slices     = 4  // Cli.runEs's export read
       val daily  = EsScrollSource.discoverDailyIndices(url, "events-*")
       val loDay  = daily.flatMap(_._2).max.plusDays(1).minusDays(windowDays)
-      val (kept, pruned) = daily.partition(_._2.get.compareTo(loDay) >= 0)
+      val pruned = daily.filter(_._2.get.isBefore(loDay))
       def perPruned() = pruned.map { case (n, _) => srv.searchCount(n) }
       def requests()  = srv.searchCalls.get() + srv.scrollCalls.get()
       def deltas(body: => Unit): (Seq[Long], Long, Long) = {
@@ -125,6 +125,7 @@ class CliEsSpec extends SparkSpec {
         Cli.esDiscoverMenu(spark, url, "events-*", Cli.esSchema(spark, url, "events-*", Map.empty), 10)
       }
       val out = graft.sources.ParquetSink.scratchDir(spark, "cli_es_traffic")
+      val scrolls0 = srv.scrollSearchCalls.get()
       val (callPruned, reqs, hits) = deltas {
         Cli.runEs(spark, url, "events-*", out, windowDays, topK = 10,
           interactive = false, eventTypeOpt = None, readLine = () => "").collect()
@@ -138,7 +139,9 @@ class CliEsSpec extends SparkSpec {
         "hits = schema sample + the top-100 sample + the exported window, each once")
       assert(callPruned === preludePruned, "the export sends no request to a pruned index")
       assert(srv.liveContexts + srv.livePits === 0, "no search context outlives the call")
-      assert(reqs <= 2 + 1 + kept.size * slices * 2 + 1,
+      assert(srv.scrollSearchCalls.get() - scrolls0 === slices,
+        "the write is one sliced scroll over the surviving indices, not one per index")
+      assert(reqs <= 2 + 1 + slices * 2 + 1,
         s"$reqs requests: schema + menu, the top-N, one scroll per slice, the per-day agg")
     }
   }

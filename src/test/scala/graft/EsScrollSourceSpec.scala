@@ -854,4 +854,107 @@ class EsScrollSourceSpec extends SparkSpec {
       assert(srv.liveContexts === 0)
     }
   }
+
+  /** A stub holding one index per day of the first 600 fixture events,
+    * handed over with those days in order. */
+  private def withDays[A](f: (EsStubServer, Seq[java.time.LocalDate]) => A): A = {
+    import spark.implicits._
+    val sample = events.limit(600)
+    val srv = EsStubServer.fromDayPartitionedDataFrame(sample, "events")
+    srv.start()
+    try f(srv, sample.select(to_date($"ts")).distinct().as[java.sql.Date]
+      .collect().map(_.toLocalDate).toSeq.sorted)
+    finally srv.stop()
+  }
+
+  private def dayIndex(d: java.time.LocalDate): String =
+    f"events-${d.getYear}%04d.${d.getMonthValue}%02d.${d.getDayOfMonth}%02d"
+
+  private def patternRead(url: String, schema: StructType, slices: Int, opts: (String, String)*): DataFrame =
+    spark.read
+      .format("graft.sources.es.EsScrollSource")
+      .schema(schema)
+      .option("url", url)
+      .option("index", "events-*")
+      .option("slices", slices)
+      .option("pageSize", 1000)
+      .options(opts.toMap)
+      .load()
+
+  test("a pattern read is `slices` partitions of one multi-index scroll, not indices × slices") {
+    import spark.implicits._
+    withDays { (srv, days) =>
+      val cutDay = days(days.length / 2)
+      val cut    = java.sql.Timestamp.from(cutDay.atStartOfDay(java.time.ZoneOffset.UTC).toInstant)
+      val (pruned, kept) = days.partition(_.isBefore(cutDay))
+      assert(kept.size >= 3 && pruned.nonEmpty, "the window must keep several days and prune some")
+      def read(slices: Int, opts: (String, String)*) =
+        patternRead(srv.url, events.schema, slices, opts: _*).where($"ts" >= lit(cut))
+      def perIndex(ds: Seq[java.time.LocalDate]) = ds.map(d => srv.searchCount(dayIndex(d)))
+
+      val (s0, c0) = (srv.scrollSearchCalls.get(), srv.clearedScrolls.get())
+      val (k0, p0) = (perIndex(kept), perIndex(pruned))
+      val sliced = bag(read(2))
+      assert(srv.scrollSearchCalls.get() - s0 === 2, "one scroll search per slice")
+      assert(srv.clearedScrolls.get() - c0 === 2, "one clear per slice")
+      assert(perIndex(kept).zip(k0).map { case (a, b) => a - b } === kept.map(_ => 2L),
+        "every surviving index is in both search paths")
+      assert(perIndex(pruned) === p0, "no pruned index gets a request")
+      assert(sliced === bag(read(1)), "two slices return the rows of one")
+      assert(sliced === bag(events.limit(600).where($"ts" >= lit(cut))))
+
+      val pits0 = srv.clearedPits.get()
+      assert(bag(read(2, "pagination" -> "search_after")) === sliced)
+      assert(srv.clearedPits.get() - pits0 === 2 && srv.livePits === 0, "exactly 2 PITs, both closed")
+
+      val h0 = srv.hitsServed.get()
+      assert(read(2).limit(5).collect().length === 5)
+      assert(srv.hitsServed.get() - h0 <= 2 * 5, "a pushed limit ships at most slices × limit hits")
+    }
+  }
+
+  test("one collect() resolves an index pattern once: a single _cat/indices per scan") {
+    import spark.implicits._
+    withDays { (srv, _) =>
+      def cats[A](body: => A): Long = { val c0 = srv.catCalls.get(); body; srv.catCalls.get() - c0 }
+      def read = patternRead(srv.url, events.schema, 2)
+      assert(cats(read.collect()) === 1, "scroll")
+      assert(cats(read.orderBy($"event_id").limit(5).collect()) === 1, "top-N")
+      assert(cats(read.groupBy(to_date($"ts")).count().collect()) === 1, "per-day count")
+    }
+  }
+
+  test("~300 day indices pack into request lines of at most 4 KB; reads equal the source rows") {
+    import spark.implicits._
+    // event i lands on day i mod 300 after 2023-01-01: 300 daily indices,
+    // whose names joined (5.4 KB) overflow one request line
+    val spread = events.withColumn("ts", timestamp_seconds(
+      lit(1672531200L) + pmod($"event_id", lit(300)) * 86400 + pmod($"event_id", lit(3600)))).cache()
+    val srv = EsStubServer.fromDayPartitionedDataFrame(spread, "events")
+    srv.start()
+    try {
+      val indices = EsScrollSource.discoverDailyIndices(srv.url, "events-*").map(_._1)
+      assert(indices.size === 300)
+      def read = patternRead(srv.url, spread.schema, 2)
+
+      assert(bag(read) === bag(spread), "scroll")
+      assert(srv.scrollSearchCalls.get() === 2 * 2, "two targets × two slices")
+      assert(indices.forall(srv.searchCount(_) === 2), "each index is in exactly one target")
+
+      val h0 = srv.hitsServed.get()
+      def top7(df: DataFrame) = bag(df.orderBy($"event_id".desc).limit(7))
+      assert(top7(read) === top7(spread), "top-N")
+      assert(srv.hitsServed.get() - h0 === 2 * 7, "one sorted search of 7 hits per target")
+      def perDay(df: DataFrame) = bag(df.groupBy(to_date($"ts")).count())
+      val h1 = srv.hitsServed.get()
+      assert(perDay(read) === perDay(spread), "per-day count")
+      assert(read.count() === spread.count(), "grand total")
+      assert(srv.hitsServed.get() === h1, "the counts are pushed aggregations")
+      assert(srv.longestRequestLine.get() <= 4096,
+        s"longest request line ${srv.longestRequestLine.get()} bytes")
+    } finally {
+      srv.stop()
+      spread.unpersist()
+    }
+  }
 }
