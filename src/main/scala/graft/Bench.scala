@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): run the headline queries on
   * SPARK_GRAFT_SF_DIR, print ONE JSON line with per-query seconds.
@@ -28,22 +27,6 @@ import org.apache.spark.sql.SparkSession
   * absent (e.g. on a real cluster); disable with SPARK_GRAFT_PAIR_ORACLE=0.
   */
 object Bench {
-
-  /** Minimal JSON string escaper for embedding oracle SQL in the temp
-    * oracle_sql.json handed to the DuckDB timer. */
-  private def jsonEscape(s: String): String = {
-    val b = new StringBuilder(s.length + 16)
-    s.foreach {
-      case '"'           => b.append("\\\"")
-      case '\\'          => b.append("\\\\")
-      case '\n'          => b.append("\\n")
-      case '\r'          => b.append("\\r")
-      case '\t'          => b.append("\\t")
-      case c if c < ' '  => b.append(f"\\u${c.toInt}%04x")
-      case c             => b.append(c)
-    }
-    b.toString
-  }
 
   /** A long-lived `time_oracle.py --serve` process: one timed DuckDB
     * execution per [[time]] call, interleaved with the caller's engine
@@ -140,25 +123,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Default to the machine's core count (the driver runs local[32]); a
-    // hardcoded small default would silently benchmark a 4-thread session.
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString
-    )
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // keep AQE's parallelism-first coalescing (the default): advisory-size
-      // coalescing was measured to collapse the shuffle-hash self-joins to
-      // 1-2 fat partitions at this scale (q67 1.1 s → 3.8 s)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.build()
     spark.sparkContext.setLogLevel("ERROR")
 
     def materialize(name: String): Double = {
@@ -182,7 +147,7 @@ object Bench {
           else {
             val tmp  = java.nio.file.Files.createTempDirectory("graft_bench_oracle")
             val json = sqls
-              .map { case (k, v) => "\"" + k + "\":\"" + jsonEscape(v) + "\"" }
+              .map { case (k, v) => s"${Verify.jsonStr(k)}:${Verify.jsonStr(v)}" }
               .mkString("{", ",", "}")
             java.nio.file.Files.write(tmp.resolve("oracle_sql.json"), json.getBytes("UTF-8"))
             // reverse-registration order: dir first so the file goes first

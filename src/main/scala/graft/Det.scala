@@ -10,8 +10,8 @@ import org.apache.spark.sql.types.DoubleType
   * Double summation is order-dependent, and Spark's shuffle merge order is
   * nondeterministic — so any float aggregate the DuckDB oracle hashes must
   * be order-independent. Exact decimal sums achieve that but run ~2× slower
-  * than primitive aggregation (Decimal boxing in the agg loop, measured via
-  * `graft.Probe adhoc`). Instead: round each term to `scale` true decimal
+  * than primitive aggregation (Decimal boxing in the agg loop; BASELINE.md
+  * round 1 and round 7). Instead: round each term to `scale` true decimal
   * digits, sum as LONG (exact, order-free, codegen-primitive), convert to
   * double once at the end. The scale is chosen so the grid point sits on the
   * value's true decimals (prices 2, price*(1-disc) 4, the charge product 6)
@@ -75,7 +75,7 @@ object Det {
     * misconfiguration (GridOverflowSpec pins the bound). Only the few
     * (groups × partitions) partials pay the DECIMAL(38) merge. Measured
     * +0.03–0.09 s over the unsafe single-level LONG at sf0.1, vs +0.35 s
-    * per sum for per-row decimal (Probe adhoc). The extra exchange moves
+    * per sum for per-row decimal (BASELINE.md round 7). The extra exchange moves
     * pre-aggregated rows only. */
   def gridPartial(c: Column, scale: Int): Column =
     sum(Kernels.roundLong(c * math.pow(10.0, scale)))

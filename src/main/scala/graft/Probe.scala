@@ -9,9 +9,10 @@ import org.apache.spark.sql.functions._
   * the build guide asks for. */
 object Probe {
 
-  /** Drain the Spark listener bus so TaskEnd metrics land before the
-    * counters are read (r14 ADVICE: a fixed sleep races late events on a
-    * loaded host and silently under-counts shuffle/spill bytes).
+  /** Drain the Spark listener bus so the sf100llm rung's q179
+    * `QueryExecutionListener` (its only caller) has received the rung
+    * write's executed plan before the plan is read; listener events arrive
+    * asynchronously, and a fixed sleep races them on a loaded host.
     * `LiveListenerBus.waitUntilEmpty` is `private[spark]` — which compiles
     * to a public method in bytecode — so reflection reaches it without a
     * spark-internal compile dependency; if the internals ever move, fall
@@ -58,12 +59,6 @@ object Probe {
         // packaged jar: one file, its own mtime identifies the build
         s"jar-mtime:${java.nio.file.Files.getLastModifiedTime(base).toMillis}"
     } catch { case scala.util.control.NonFatal(_) => "stamp:unknown" }
-
-  /** Physical partition count of a DataFrame — the r20diag layout loupe.
-    * The ONE .rdd touch in the codebase (DisciplineSpec-allowlisted): a
-    * read-only inspection of the materialized partitioning, never a data
-    * path; every diagnostic partition-count print routes through here. */
-  private def numParts(df: org.apache.spark.sql.DataFrame): Int = df.rdd.getNumPartitions
 
   /** Write one query's rung output plus its build stamp (all eight sf1/sf10/
     * sf100 materialization sites route through here). */
@@ -168,324 +163,6 @@ object Probe {
       val t0 = System.nanoTime()
       SparkEntry.queries(name)(spark, sfDir).write.mode("overwrite").format("noop").save()
       (System.nanoTime() - t0) / 1e9
-    }
-    if (which == "shufflebytes") {
-      // Evidence phase (r13 verdict task 1): total shuffle WRITE bytes and
-      // disk spill per declared query, summed from task metrics — the
-      // before/after record for the exploded-shingle payload shrink. Usage:
-      //   runMain graft.Probe <dir> shufflebytes <query> [<query> ...]
-      import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-      import java.util.concurrent.atomic.AtomicLong
-      val names = args.drop(2)
-      // deployment defaults: the same input-sized AQE fan-out the sf100
-      // rungs run with, so the recorded bytes reflect the shipped config
-      graft.Session.sizeShufflesForInput(spark, sfDir)
-      println(s"[shufflebytes] AQE initialPartitionNum=" +
-        spark.conf.get("spark.sql.adaptive.coalescePartitions.initialPartitionNum"))
-      val sw    = new AtomicLong(0)
-      val spill = new AtomicLong(0)
-      // per-stage attribution (r15): stageId → (write, spill, #rows written)
-      val byStage = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Long, Long)]()
-      spark.sparkContext.addSparkListener(new SparkListener {
-        override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-          if (e.taskMetrics != null) {
-            sw.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
-            spill.addAndGet(e.taskMetrics.diskBytesSpilled)
-            byStage.merge(
-              e.stageId,
-              (e.taskMetrics.shuffleWriteMetrics.bytesWritten,
-               e.taskMetrics.diskBytesSpilled,
-               e.taskMetrics.shuffleWriteMetrics.recordsWritten),
-              (a, b) => (a._1 + b._1, a._2 + b._2, a._3 + b._3)
-            )
-          }
-      })
-      names.foreach { n =>
-        sw.set(0); spill.set(0); byStage.clear()
-        val t0 = System.nanoTime()
-        SparkEntry.queries(n)(spark, sfDir).write.mode("overwrite").format("noop").save()
-        val sec = (System.nanoTime() - t0) / 1e9
-        drainListenerBus(spark.sparkContext) // deterministic listener drain (r14 ADVICE)
-        println(f"[shufflebytes] $n%-32s ${sec}%8.3f s  shuffleWrite=${sw.get / 1048576.0}%10.1f MB  diskSpill=${spill.get / 1048576.0}%10.1f MB")
-        import scala.jdk.CollectionConverters._
-        byStage.asScala.toSeq
-          .sortBy(-_._2._1)
-          .take(8)
-          .foreach { case (sid, (w, sp, rows)) =>
-            println(f"[shufflebytes]   stage $sid%4d  write=${w / 1048576.0}%9.1f MB  spill=${sp / 1048576.0}%9.1f MB  rows=$rows%12d")
-          }
-      }
-      spark.stop()
-      return
-    }
-    if (which == "jobcounts") {
-      // Walk-drift attribution phase (r18 verdict task 1): the iterative
-      // families read 3-7× above their r13 walk entries and the appendix
-      // attributed it to "per-job scheduling floor, not code" WITHOUT a
-      // measurement. This phase produces the two terms of that claim so it
-      // can be reconciled (or refuted) against the r13 build run with the
-      // identical instrument:
-      //   - per-query Spark JOB count (plus stages/tasks, wall, the sum of
-      //     per-job walls, and total executor task runtime) — if the loop
-      //     structure grew since r13 (extra probe rounds, extra eager
-      //     actions, extra checkpoint jobs), it shows up HERE;
-      //   - the empty-job floor — median wall of a 1-task and a 32-task
-      //     no-op RDD job on this host/session, the price every extra job
-      //     pays regardless of code.
-      // drift ≈ Δjobs × floor + Δ(task runtime)/slots; anything left over
-      // is driver-side planning between jobs (wall − Σ job walls).
-      // Usage: runMain graft.Probe <sfDir> jobcounts [<query> ...]
-      import org.apache.spark.scheduler._
-      import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
-      val aged  = args.contains("aged")
-      val names = {
-        val explicit = args.drop(2).toSeq.filterNot(t => t == "jobcounts" || t == "aged")
-        if (explicit.nonEmpty) explicit
-        else Seq(
-          "q107_kmeans_clusters", "q108_pagerank", "q111_recursive_reachability",
-          "q120_dedup_endgame", "q122_chain_components",
-          // non-iterative controls: single-action plans whose drift is
-          // pure floor+host, to separate the two effects
-          "q01_pricing_summary", "q65_minhash_lsh_pairs")
-      }
-      val jobs   = new AtomicInteger(0)
-      val stages = new AtomicInteger(0)
-      val tasks  = new AtomicInteger(0)
-      val jobNs  = new AtomicLong(0)
-      val execMs = new AtomicLong(0)
-      val gcMs   = new AtomicLong(0)
-      val spillB = new AtomicLong(0)
-      val t0s    = new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Long]()
-      spark.sparkContext.addSparkListener(new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); t0s.put(e.jobId, System.nanoTime())
-        }
-        override def onJobEnd(e: SparkListenerJobEnd): Unit = {
-          val s = t0s.remove(e.jobId)
-          if (s != null) jobNs.addAndGet(System.nanoTime() - s)
-        }
-        override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-          stages.incrementAndGet(); tasks.addAndGet(e.stageInfo.numTasks)
-        }
-        override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-          if (e.taskMetrics != null) {
-            execMs.addAndGet(e.taskMetrics.executorRunTime)
-            gcMs.addAndGet(e.taskMetrics.jvmGCTime)
-            spillB.addAndGet(e.taskMetrics.memoryBytesSpilled)
-          }
-      })
-      // empty-job floor FIRST (cold-start jobs excluded by a warmup batch):
-      // median of 40 one-task and 40 thirty-two-task no-op RDD jobs
-      def floorOf(slices: Int, n: Int): Double = {
-        val sc = spark.sparkContext
-        (1 to 5).foreach(_ => sc.parallelize(0 until slices, slices).count())
-        val ts = (1 to n).map { _ =>
-          val t0 = System.nanoTime()
-          sc.parallelize(0 until slices, slices).count()
-          (System.nanoTime() - t0) / 1e3 // µs
-        }.sorted
-        ts(n / 2) / 1e6 // s
-      }
-      val floor1  = floorOf(1, 40)
-      val floor32 = floorOf(32, 40)
-      println(f"[jobcounts] empty-job floor: 1-task=${floor1}%.4f s  32-task=${floor32}%.4f s")
-      if (aged) {
-        // `aged` mode: the walk tables are measured ~170 queries deep into
-        // one session, while a fresh-session jobcounts run is not — if the
-        // per-job floor or the iterative walls GROW with session age
-        // (AppStatusListener store, GC pressure, code-cache churn), that is
-        // the walk-vs-isolated gap. Age the session exactly the way the
-        // walk does (one pass over every declared query), then re-measure.
-        val t0 = System.nanoTime()
-        SparkEntry.queries.keys.toSeq.sorted.foreach { n =>
-          try SparkEntry.queries(n)(spark, sfDir).write.mode("overwrite").format("noop").save()
-          catch { case e: Exception => println(s"[jobcounts] aging pass: $n failed ${e.getMessage}") }
-        }
-        drainListenerBus(spark.sparkContext)
-        println(f"[jobcounts] session aged: full-surface pass took ${(System.nanoTime() - t0) / 1e9}%.1f s")
-        val f1a  = floorOf(1, 40)
-        val f32a = floorOf(32, 40)
-        println(f"[jobcounts] AGED empty-job floor: 1-task=${f1a}%.4f s  32-task=${f32a}%.4f s")
-        // what the pass left behind: cached RDDs (un-unpersisted
-        // cache()/localCheckpoint residue robs execution memory from the
-        // unified pool — the prime suspect for task-time inflation at
-        // identical plans) and broadcast/GC state
-        val sc   = spark.sparkContext
-        val prdd = sc.getPersistentRDDs
-        val cachedMB = sc.getExecutorMemoryStatus.values
-          .map { case (max, free) => (max - free) / 1048576.0 }.sum
-        println(f"[jobcounts] AGED residue: persistentRDDs=${prdd.size}%d  storageUsed=${cachedMB}%.0f MB " +
-          f"(ids ${prdd.keys.toSeq.sorted.takeRight(8).mkString(",")})")
-      }
-      names.foreach { n =>
-        // run 1 discarded (FileIndex listing, code paths JIT, broadcast
-        // warm); run 2 is the counted run — job counts are plan-determined
-        // and stable from run 2 on
-        SparkEntry.queries(n)(spark, sfDir).write.mode("overwrite").format("noop").save()
-        drainListenerBus(spark.sparkContext)
-        jobs.set(0); stages.set(0); tasks.set(0); jobNs.set(0); execMs.set(0)
-        gcMs.set(0); spillB.set(0); t0s.clear()
-        val t0  = System.nanoTime()
-        SparkEntry.queries(n)(spark, sfDir).write.mode("overwrite").format("noop").save()
-        val sec = (System.nanoTime() - t0) / 1e9
-        drainListenerBus(spark.sparkContext)
-        println(f"[jobcounts] $n%-32s wall=${sec}%7.3f s  jobs=${jobs.get}%4d  " +
-          f"stages=${stages.get}%4d  tasks=${tasks.get}%6d  " +
-          f"sumJobWall=${jobNs.get / 1e9}%7.3f s  execTaskTime=${execMs.get / 1e3}%8.1f s  " +
-          f"gcTime=${gcMs.get / 1e3}%7.1f s  memSpill=${spillB.get / 1048576.0}%8.1f MB  " +
-          f"jobsXfloor32=${jobs.get * floor32}%6.3f s")
-      }
-      spark.stop()
-      return
-    }
-    if (which == "q29ab") {
-      // Same-JVM interleaved A/B of the q29 median forms over the sf100
-      // slice (phase and page-cache effects cancel across the interleave):
-      // A = single-agg with percentile() (one scan, but the whole aggregate
-      // is forced onto interpreted ObjectHashAggregate), B = shipped
-      // histogram-median form (two pruned scans, all-codegen).
-      import spark.implicits._
-      spark.conf.set("spark.sql.shuffle.partitions", 256)
-      val dir = "/tmp/graft_sf100"
-      def oldForm() = Tables.lineitem(spark, dir)
-        .groupBy($"l_returnflag")
-        .agg(
-          count(lit(1)).cast("double").as("n"),
-          sum($"l_quantity".cast("long")).cast("double").as("sx"),
-          sum(($"l_quantity" * $"l_quantity").cast("long")).cast("double").as("sxx"),
-          sum(round($"l_extendedprice" * 100).cast("long")).cast("double").as("sy"),
-          sum(round($"l_extendedprice" * $"l_extendedprice" * 10000).cast("decimal(38,0)"))
-            .cast("double").as("syy"),
-          sum(round($"l_extendedprice" * $"l_quantity" * 100).cast("decimal(38,0)"))
-            .cast("double").as("sxy"),
-          sum(round($"l_discount" * 100).cast("long")).cast("double").as("sdc"),
-          sum(round($"l_discount" * $"l_quantity" * 100).cast("long")).cast("double").as("sxd"),
-          expr("percentile(l_quantity, 0.5)").as("median_qty"),
-          min($"l_quantity").as("min_qty"),
-          max($"l_quantity").as("max_qty")
-        )
-      def newForm() = graft.operators.Advanced.statsAgg(spark, dir)
-      def t(tag: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
-        val t0 = System.nanoTime()
-        df.write.mode("overwrite").format("noop").save()
-        println(f"[q29ab] $tag%-12s ${(System.nanoTime() - t0) / 1e9}%8.3f s")
-      }
-      t("warm-new")(newForm())
-      (1 to 3).foreach { i => t(s"old-$i")(oldForm()); t(s"new-$i")(newForm()) }
-      spark.stop()
-      return
-    }
-    if (which == "decontamab") {
-      // Same-JVM interleaved A/B of the two decontamination probe branches
-      // on a FIXED BOUNDED benchmark over the sf10 curation slice (500k
-      // unsalted docs) — the r16 verdict task-1 done-criterion: measure the
-      // corner where the broadcast probe should win (tiny benchmark × big
-      // corpus), rather than assert it. `<dir>` must hold a documents slice
-      // (default invocation: runMain graft.Probe /tmp/graft_sf10cur
-      // decontamab). Branch equality is hash-asserted per pair.
-      import spark.implicits._
-      val train = Tables.documents(spark, sfDir).select($"doc_id", $"text")
-      val bench = train
-        .filter($"doc_id" % 97 === 3)
-        .select(
-          $"doc_id".as("bench_id"),
-          expr(
-            "concat_ws(' ', slice(split(text, ' '), size(split(text, ' ')) div 3 + 1, " +
-              "greatest((size(split(text, ' ')) + 1) div 3, 1)))"
-          ).as("text")
-        )
-      val dec = graft.operators.Dedup.decontamDecision(train, bench)
-      println(s"[decontamab] dispatch decision on this slice: $dec")
-      def run(tag: String, plan: String): Double = {
-        val t0 = System.nanoTime()
-        graft.operators.Dedup.decontamVerdicts(train, bench, plan)
-          .write.mode("overwrite").format("noop").save()
-        val s = (System.nanoTime() - t0) / 1e9
-        println(f"[decontamab] $tag%-16s ${s}%8.3f s")
-        s
-      }
-      run("warm-broadcast", "broadcast")
-      val pairs = (1 to 3).map { i =>
-        (run(s"broadcast-$i", "broadcast"), run(s"shuffle_hash-$i", "shuffle_hash"))
-      }
-      val (bB, bS) = (pairs.map(_._1).min, pairs.map(_._2).min)
-      println(f"[decontamab] best broadcast=${bB}%.3f s  best shuffle_hash=${bS}%.3f s  " +
-        f"ratio=${bS / bB}%.2fx  decision=${dec.pick}")
-      // correctness cross-check, fully distributed (no driver collect):
-      // symmetric difference must be empty
-      val a = graft.operators.Dedup.decontamVerdicts(train, bench, "broadcast")
-      val b = graft.operators.Dedup.decontamVerdicts(train, bench, "shuffle_hash")
-      val diff = a.exceptAll(b).count() + b.exceptAll(a).count()
-      require(diff == 0L, "branches diverged — dispatch must be correctness-invisible")
-      println(s"[decontamab] branch outputs identical (${a.count()} verdict rows)")
-      spark.stop()
-      return
-    }
-    if (which == "ccdiag") {
-      import spark.implicits._
-      import graft.operators.Graph
-      val nodes = Tables.documents(spark, sfDir).select($"doc_id".as("node"))
-      def t[A](tag: String)(f: => A): A = {
-        val t0 = System.nanoTime(); val r = f
-        println(f"[ccdiag] $tag%-16s ${(System.nanoTime() - t0) / 1e9}%.3f s"); r
-      }
-      // warm
-      Graph.connectedComponents(spark, sfDir).write.mode("overwrite").format("noop").save()
-      val e = t("edges-build") {
-        val e0 = Graph.edges(spark, sfDir).cache(); e0.count(); e0
-      }
-      val comp = t("label-loop")(Graph.minLabelComponents(nodes, e))
-      t("final-agg") {
-        val sizes = comp.groupBy($"comp").agg(count(lit(1)).as("comp_size"))
-        comp.join(sizes, "comp").select($"node", $"comp", $"comp_size").orderBy($"node")
-          .write.mode("overwrite").format("noop").save()
-      }
-      t("full-query")(Graph.connectedComponents(spark, sfDir).write.mode("overwrite").format("noop").save())
-      spark.stop(); return
-    }
-    if (which == "egdiag") {
-      // dedup-endgame stage decomposition
-      import spark.implicits._
-      import graft.operators.{Dedup, Graph}
-      import org.apache.spark.sql.functions._
-      def t[A](tag: String)(f: => A): A = {
-        val t0 = System.nanoTime(); val r = f
-        println(f"[egdiag] $tag%-16s ${(System.nanoTime() - t0) / 1e9}%.3f s"); r
-      }
-      if (args.contains("aqecache"))
-        spark.conf.set("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // warm
-      Dedup.dedupEndgame(spark, sfDir).write.mode("overwrite").format("noop").save()
-      val pairs = t("pairs-cache") {
-        val p = Dedup.minhashPairsUnsorted(spark, sfDir)
-          .select($"id1".as("src"), $"id2".as("dst")).cache()
-        p.count(); p
-      }
-      val pnodes = t("pnodes") {
-        val n = pairs.select($"src".as("node"))
-          .unionByName(pairs.select($"dst".as("node"))).distinct()
-        n.count(); n
-      }
-      val comp = t("cc-loop")(Graph.minLabelComponents(pnodes, pairs, roundsPerAction = 3))
-      val finalDf = {
-        val corpus = Dedup.docsWithDups(spark, sfDir)
-        val sizes  = comp.groupBy($"comp").agg(count(lit(1)).as("cluster_size"))
-        val nonSurvivors = comp.filter($"node" =!= $"comp").select($"node".as("doc_id"))
-        corpus.join(nonSurvivors, Seq("doc_id"), "left_anti")
-          .join(sizes.select($"comp".as("doc_id"), $"cluster_size"), Seq("doc_id"), "left")
-          .select($"doc_id".as("survivor_id"),
-            coalesce($"cluster_size", lit(1L)).as("cluster_size"),
-            length($"text").as("text_len"))
-          .orderBy($"survivor_id")
-      }
-      t("comp-count")(comp.count())
-      t("nonsurv-count")(comp.filter($"node" =!= $"comp").count())
-      t("corpus-count")(Dedup.docsWithDups(spark, sfDir).count())
-      t("final-joins")(finalDf.write.mode("overwrite").format("noop").save())
-      t("final-joins-2")(finalDf.write.mode("overwrite").format("noop").save())
-      if (doExplain) println(finalDf.queryExecution.executedPlan.toString.take(8000))
-      t("full-query")(Dedup.dedupEndgame(spark, sfDir).write.mode("overwrite").format("noop").save())
-      spark.stop(); return
     }
     if (which == "scale") {
       // Engine-only scaling curve for the dedup family (no fixtures, no
@@ -2134,893 +1811,6 @@ object Probe {
       spark.stop()
       if (!ok) sys.exit(1)
       return
-    }
-    if (which == "dddiag") {
-      // Candidate-stage anatomy of the prefix-Jaccard plan on a dd slice:
-      // df histogram, prefix posting count, and the ordered candidate-pair
-      // mass Σ b·(b−1) over prefix buckets — pinpoints whether disk/spill
-      // pressure is the ranking stages or a candidate explosion.
-      import spark.implicits._
-      import org.apache.spark.sql.expressions.Window
-      import graft.functions.Kernels
-      import graft.functions.TextFns
-      val docs = graft.operators.Dedup.docsWithDups(spark, sfDir)
-        .repartition($"doc_id")
-        .select($"doc_id", array_distinct(Kernels.shingleHashes(TextFns.tokens($"text"), 3)).as("sh0"))
-        .groupBy($"doc_id").agg(first($"sh0").as("sh"))
-        .localCheckpoint()
-      val ex = docs.select($"doc_id", explode($"sh").as("shingle"))
-      val df = ex.groupBy($"shingle").agg(count(lit(1)).as("df"))
-      println(s"[dddiag] docs=${docs.count()} exploded=${ex.count()}")
-      df.groupBy($"df").agg(count(lit(1)).as("nShingles")).orderBy($"df").show(30, false)
-      val w   = Window.partitionBy($"doc_id").orderBy($"df".asc, $"shingle".asc)
-      val nsh = docs.select($"doc_id", size($"sh").as("n_sh"))
-      val pfx = ex.join(df, "shingle").withColumn("pos", row_number().over(w))
-        .join(nsh, "doc_id")
-        .filter($"pos" <= expr("n_sh - (3 * n_sh + 4) div 5 + 1"))
-        .select($"doc_id", $"shingle").localCheckpoint()
-      println(s"[dddiag] prefix postings=${pfx.count()}")
-      pfx.groupBy($"shingle").agg(count(lit(1)).as("b"))
-        .agg(sum($"b" * ($"b" - lit(1))).as("orderedCandPairs"), max($"b").as("maxBucket"))
-        .show(false)
-      spark.stop()
-      return
-    }
-    if (which == "dddiag2") {
-      // r15: TRUE-intersection distribution of the q147 candidate pairs —
-      // sizes the headroom a sketch-gated (histogram bound) pre-verify
-      // would have before the array-carrying verify exchange.
-      import spark.implicits._
-      import org.apache.spark.sql.expressions.Window
-      import graft.functions.Kernels
-      import graft.functions.TextFns
-      spark.conf.set("spark.sql.shuffle.partitions", 128) // hash builds at the 1M-doc slice
-      val docs = graft.operators.Dedup.docsWithDups(spark, sfDir)
-        .repartition($"doc_id")
-        .select($"doc_id", array_distinct(Kernels.shingleHashes(TextFns.tokens($"text"), 3)).as("sh0"))
-        .groupBy($"doc_id").agg(first($"sh0").as("sh"))
-        .localCheckpoint()
-      val ex = docs.select($"doc_id", size($"sh").as("n_sh"), explode($"sh").as("shingle"))
-      val dfr = ex.groupBy($"shingle").agg(count(lit(1)).as("df"))
-      val w   = Window.partitionBy($"doc_id").orderBy($"df".asc, $"shingle".asc)
-      val pfx = ex.join(dfr, "shingle").withColumn("pos", row_number().over(w))
-        .filter($"pos" <= expr("n_sh - (3 * n_sh + 4) div 5 + 1"))
-        .select($"doc_id", $"n_sh", $"pos", $"shingle").localCheckpoint()
-      val a = pfx.select($"doc_id".as("id1"), $"n_sh".as("na1"), $"pos".as("pos1"), $"shingle")
-      val b = pfx.select($"doc_id".as("id2"), $"n_sh".as("na2"), $"pos".as("pos2"), $"shingle".as("shingle2"))
-      val cand = a
-        .join(b, // no hash hint: the diag only needs the row set, SMJ is fine
-          $"shingle" === $"shingle2" && $"id1" < $"id2" &&
-            $"na2" * 3 <= $"na1" * 5 && $"na1" * 3 <= $"na2" * 5 &&
-            expr("1 + least(na1 - pos1, na2 - pos2) >= (3 * (na1 + na2) + 7) div 8"))
-        .groupBy($"id1", $"id2")
-        .agg(count(lit(1)).as("m"), max($"pos1").as("p1"), max($"pos2").as("p2"),
-          first($"na1").as("na1"), first($"na2").as("na2"))
-        .filter(expr("m + least(na1 - p1, na2 - p2) >= (3 * (na1 + na2) + 7) div 8"))
-        .select($"id1", $"id2").localCheckpoint()
-      println(s"[dddiag2] candidates=${cand.count()}")
-      val withInter = cand
-        .join(docs.select($"doc_id".as("id1"), $"sh".as("sh1")), "id1")
-        .join(docs.select($"doc_id".as("id2"), $"sh".as("sh2")), "id2")
-        .select(
-          size(array_intersect($"sh1", $"sh2")).as("n_inter"),
-          ((size($"sh1") + size($"sh2")) * 3 + 7).as("alpha8") // α = this div 8
-        )
-      withInter
-        .select(($"n_inter" * 8 >= $"alpha8").as("passes_alpha"),
-          floor($"n_inter" / 5).as("inter_bucket5"))
-        .groupBy($"passes_alpha", $"inter_bucket5")
-        .agg(count(lit(1)).as("n"))
-        .orderBy($"passes_alpha", $"inter_bucket5")
-        .show(50, false)
-      spark.stop()
-      return
-    }
-    if (which == "r19ab") {
-      // Round-19 optimization A/B harness (guide §1: measure first).
-      // Candidate plan variants for the bench queries, timed against the
-      // declared form before any declared query is touched. Nothing here is
-      // a declared query; hash equality of any adopted variant is proven
-      // separately via Verify + tools/check.py.
-      import spark.implicits._
-      import graft.functions.Kernels
-      val cpusN = spark.conf.get("spark.sql.shuffle.partitions").toInt
-      def t(tag: String)(mk: => org.apache.spark.sql.DataFrame): Unit = {
-        mk.write.mode("overwrite").format("noop").save() // warm
-        val runs = (1 to 3).map { _ =>
-          val t0 = System.nanoTime()
-          mk.write.mode("overwrite").format("noop").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        println(f"[r19ab] $tag%-16s best=${runs.min}%.3f runs=${runs.map(r => f"$r%.3f").mkString(",")}")
-      }
-      val sel: String => Boolean = {
-        val only = args.drop(2).filterNot(_ == "r19ab")
-        if (only.isEmpty) _ => true else n => only.exists(n.startsWith)
-      }
-      // ---------------------------------------------------------- q01 family
-      def q01v(spread: Boolean, c1: Boolean, fastRound: Boolean) = {
-        def gp(c: org.apache.spark.sql.Column, s: Int) =
-          if (fastRound) sum(Kernels.roundLong(c * math.pow(10.0, s)))
-          else Det.gridPartial(c, s)
-        var li: org.apache.spark.sql.DataFrame = Tables
-          .lineitem(spark, sfDir)
-          .filter($"l_shipdate" <= lit("1999-01-01").cast("timestamp"))
-        if (spread) li = li.repartition(cpusN)
-        val grid = li
-          .groupBy($"l_returnflag", $"l_linestatus", spark_partition_id().as("_pid"))
-          .agg(
-            sum($"l_quantity").as("p_qty"),
-            gp($"l_extendedprice", 2).as("p_base"),
-            gp($"l_extendedprice" * (lit(1.0) - $"l_discount"), 4).as("p_disc"),
-            gp($"l_extendedprice" * (lit(1.0) - $"l_discount") * (lit(1.0) + $"l_tax"), 6).as("p_charge"),
-            gp($"l_discount", 2).as("p_dsc"),
-            count(lit(1)).as("p_n")
-          )
-        val out = grid
-          .groupBy($"l_returnflag", $"l_linestatus")
-          .agg(
-            sum($"p_qty").as("sum_qty"),
-            (sum($"p_base").cast("double") / 100.0).as("sum_base_price"),
-            Det.gridMergeWide($"p_disc", 4).as("sum_disc_price"),
-            Det.gridMergeWide($"p_charge", 6).as("sum_charge"),
-            (sum($"p_qty") / sum($"p_n")).as("avg_qty"),
-            (sum($"p_base").cast("double") / 100.0 / sum($"p_n")).as("avg_price"),
-            (sum($"p_dsc").cast("double") / 100.0 / sum($"p_n")).as("avg_disc"),
-            sum($"p_n").as("count_order")
-          )
-        if (c1) out.coalesce(1).sortWithinPartitions($"l_returnflag", $"l_linestatus")
-        else out.orderBy($"l_returnflag", $"l_linestatus")
-      }
-      if (sel("q01")) {
-        t("q01-cur")(SparkEntry.queries("q01_pricing_summary")(spark, sfDir))
-        t("q01-c1")(q01v(spread = false, c1 = true, fastRound = false))
-        t("q01-sp")(q01v(spread = true, c1 = false, fastRound = false))
-        t("q01-spc1")(q01v(spread = true, c1 = true, fastRound = false))
-        t("q01-fr")(q01v(spread = false, c1 = false, fastRound = true))
-        t("q01-spc1fr")(q01v(spread = true, c1 = true, fastRound = true))
-      }
-      // ---------------------------------------------------------- q20 family
-      def q20v(spread: Boolean, c1: Boolean) = {
-        var li: org.apache.spark.sql.DataFrame = Tables.lineitem(spark, sfDir)
-        if (spread) li = li.repartition(cpusN)
-        val out = li
-          .groupBy($"l_returnflag")
-          .agg(
-            countDistinct($"l_orderkey").as("n_orders"),
-            countDistinct($"l_partkey").as("n_parts"),
-            count(lit(1)).as("n_rows")
-          )
-        if (c1) out.coalesce(1).sortWithinPartitions($"l_returnflag")
-        else out.orderBy($"l_returnflag")
-      }
-      if (sel("q20")) {
-        t("q20-cur")(SparkEntry.queries("q20_distinct_agg")(spark, sfDir))
-        t("q20-sp")(q20v(spread = true, c1 = false))
-        t("q20-spc1")(q20v(spread = true, c1 = true))
-      }
-      // ---------------------------------------------------------- q23 family
-      def q23v(spread: Boolean, c1: Boolean) = {
-        var li: org.apache.spark.sql.DataFrame = Tables.lineitem(spark, sfDir)
-        if (spread) li = li.repartition(cpusN)
-        val out = li
-          .cube($"l_returnflag", $"l_linestatus")
-          .agg(
-            sum($"l_quantity").as("sum_qty"),
-            count(lit(1)).as("n"),
-            grouping($"l_returnflag").cast("int").as("g_rf"),
-            grouping($"l_linestatus").cast("int").as("g_ls")
-          )
-          .select(
-            coalesce($"l_returnflag", lit("ALL")).as("returnflag"),
-            coalesce($"l_linestatus", lit("ALL")).as("linestatus"),
-            $"g_rf", $"g_ls", $"sum_qty", $"n"
-          )
-        if (c1) out.coalesce(1).sortWithinPartitions($"g_rf", $"g_ls", $"returnflag", $"linestatus")
-        else out.orderBy($"g_rf", $"g_ls", $"returnflag", $"linestatus")
-      }
-      if (sel("q23")) {
-        t("q23-cur")(SparkEntry.queries("q23_cube_lineitem")(spark, sfDir))
-        t("q23-sp")(q23v(spread = true, c1 = false))
-        t("q23-spc1")(q23v(spread = true, c1 = true))
-      }
-      // ---------------------------------------------------------- q11 family
-      def q11v(c1: Boolean) = {
-        val nat  = Tables.nation(spark, sfDir)
-        val reg  = Tables.region(spark, sfDir)
-        val cust = Tables.customer(spark, sfDir)
-        val ord  = Tables.orders(spark, sfDir)
-        val li   = Tables.lineitem(spark, sfDir)
-        val out = li
-          .join(ord, $"l_orderkey" === $"o_orderkey")
-          .join(cust, $"o_custkey" === $"c_custkey")
-          .join(broadcast(nat), $"c_nationkey" === $"n_nationkey")
-          .join(broadcast(reg), $"n_regionkey" === $"r_regionkey")
-          .groupBy($"r_name", $"n_name", spark_partition_id().as("_pid"))
-          .agg(
-            Det.gridPartial($"l_extendedprice" * (lit(1.0) - $"l_discount"), 4).as("p_rev"),
-            count(lit(1)).as("p_n")
-          )
-          .groupBy($"r_name", $"n_name")
-          .agg(Det.gridMergeWide($"p_rev", 4).as("revenue"), sum($"p_n").as("n_items"))
-        if (c1) out.coalesce(1).sortWithinPartitions($"r_name", $"n_name")
-        else out.orderBy($"r_name", $"n_name")
-      }
-      if (sel("q11")) {
-        t("q11-cur")(SparkEntry.queries("q11_join_revenue_by_nation")(spark, sfDir))
-        t("q11-c1")(q11v(c1 = true))
-      }
-      // ---------------------------------------------------------- q61 family
-      if (sel("q61")) {
-        import graft.functions.TextFns.tokens
-        val stop  = Seq("the", "a", "of", "and", "to", "in", "is", "it")
-        val sdocs = Tables.spread(Tables.documents(spark, sfDir))
-        t("q61-cur")(SparkEntry.queries("q61_quality_score")(spark, sfDir))
-        t("q61-toks")(sdocs.select($"doc_id", size(tokens($"text")).as("n")))
-        t("q61-stop")(
-          sdocs.select($"doc_id",
-            size(filter(tokens($"text"), t => t.isInCollection(stop))).as("n")))
-        t("q61-dist")(
-          sdocs.select($"doc_id", size(array_distinct(tokens($"text"))).as("n")))
-        t("q61-relen")(
-          sdocs.select($"doc_id", length(regexp_replace($"text", " ", "")).as("n")))
-        t("q61-trlen")(
-          sdocs.select($"doc_id", length(translate($"text", " ", "")).as("n")))
-      }
-      // ---------------------------------------------------------- q69 family
-      if (sel("q69")) {
-        import graft.operators.Similarity
-        t("q69-cur")(SparkEntry.queries("q69_cosine_topk")(spark, sfDir))
-        val e = Tables.spread(Tables.embeddings(spark, sfDir))
-          .select($"vec_id", $"embedding", sqrt(Kernels.dot($"embedding", $"embedding")).as("nrm"))
-        val q = e.filter($"vec_id" < 10)
-          .select($"vec_id".as("query_id"), $"embedding".as("qe"), $"nrm".as("qn"))
-        t("q69-dots")(
-          e.join(broadcast(q), $"vec_id" =!= $"query_id")
-            .select($"query_id", $"vec_id",
-              round(Kernels.dot($"qe", $"embedding") / ($"qn" * $"nrm"), 6).as("cos")))
-      }
-      // ---------------------------------------------------------- q80 family
-      if (sel("q80")) {
-        import graft.sources.{AvroAsvc, JsonDecode, SchemaInfer}
-        def q80v2() = {
-          val outDir = graft.sources.ParquetSink.scratchDir(spark, "export_pipeline")
-          val ev = Tables.events(spark, sfDir)
-          val mx = ev.agg(max($"ts")).head().getTimestamp(0)
-          val lo = java.sql.Timestamp.from(mx.toInstant.minus(java.time.Duration.ofDays(30)))
-          val windowed = ev.filter($"ts" >= lit(lo)).filter($"event_type" === "purchase")
-          val sampleRows: Array[String] =
-            windowed.orderBy($"event_id").limit(100).select($"props").as[String].take(100)
-          val propsSchema = SchemaInfer.allNullable(
-            SchemaInfer.infer(spark, spark.createDataset(sampleRows.toIndexedSeq)))
-          SchemaInfer.persist(propsSchema, s"$outDir/schema.json")
-          sampleRows.headOption.foreach { first =>
-            AvroAsvc.persist("purchase", first, s"$outDir/schema.asvc")
-          }
-          val (good, bad) = JsonDecode.decodeWithDeadLetter(windowed, "props", propsSchema.toDDL)
-          good
-            .select($"event_id", $"user_id", $"ts", $"value", $"_parsed.*", to_date($"ts").as("day"))
-            .repartition($"day")
-            .write.mode("overwrite").partitionBy("day").parquet(s"$outDir/data")
-          val exported = spark.read.parquet(s"$outDir/data")
-            .groupBy($"day").agg(count(lit(1)).as("n_rows"))
-          val dead = bad.groupBy(to_date($"ts").as("day")).agg(count(lit(1)).as("n_dead"))
-          exported
-            .join(dead, Seq("day"), "full_outer")
-            .select($"day", coalesce($"n_rows", lit(0L)).as("n_rows"),
-              coalesce($"n_dead", lit(0L)).as("n_dead"))
-            .orderBy($"day")
-        }
-        t("q80-cur")(SparkEntry.queries("q80_export_pipeline")(spark, sfDir))
-        t("q80-v2")(q80v2())
-      }
-      // ------------------------------------------------- round-2 variants
-      // q10/q11 join order: dims-first so the fact side joins ONE
-      // pre-reduced side (locally AQE broadcasts it and the fact is never
-      // shuffled; at scale it degrades to the same shuffle joins as now).
-      if (sel("j10")) {
-        t("j10-cur")(SparkEntry.queries("q10_join_revenue_by_order")(spark, sfDir))
-        val cust = Tables.customer(spark, sfDir).filter($"c_mktsegment" === "BUILDING")
-        val ord  = Tables.orders(spark, sfDir)
-        val li   = Tables.lineitem(spark, sfDir)
-        t("j10-dimfirst")(
-          li.join(ord.join(cust, $"o_custkey" === $"c_custkey"), $"l_orderkey" === $"o_orderkey")
-            .groupBy($"l_orderkey", to_date($"o_orderdate").as("order_date"))
-            .agg(Det.decSum($"l_extendedprice" * (lit(1.0) - $"l_discount"), 4).as("revenue"))
-            .orderBy($"revenue".desc, $"l_orderkey")
-            .limit(20))
-      }
-      if (sel("j11")) {
-        t("j11-cur")(SparkEntry.queries("q11_join_revenue_by_nation")(spark, sfDir))
-        val nat  = Tables.nation(spark, sfDir)
-        val reg  = Tables.region(spark, sfDir)
-        val cust = Tables.customer(spark, sfDir)
-        val ord  = Tables.orders(spark, sfDir)
-        val li   = Tables.lineitem(spark, sfDir)
-        t("j11-dimfirst") {
-          val dims = ord
-            .join(cust, $"o_custkey" === $"c_custkey")
-            .join(broadcast(nat), $"c_nationkey" === $"n_nationkey")
-            .join(broadcast(reg), $"n_regionkey" === $"r_regionkey")
-            .select($"o_orderkey", $"r_name", $"n_name")
-          li.join(dims, $"l_orderkey" === $"o_orderkey")
-            .groupBy($"r_name", $"n_name", spark_partition_id().as("_pid"))
-            .agg(
-              Det.gridPartial($"l_extendedprice" * (lit(1.0) - $"l_discount"), 4).as("p_rev"),
-              count(lit(1)).as("p_n"))
-            .groupBy($"r_name", $"n_name")
-            .agg(Det.gridMergeWide($"p_rev", 4).as("revenue"), sum($"p_n").as("n_items"))
-            .coalesce(1).sortWithinPartitions($"r_name", $"n_name")
-        }
-      }
-      // q69: the spread exchange costs more than it buys (the per-row work
-      // is 10 dot products) — single-task scan + an unshuffled broadcast side
-      if (sel("s69")) {
-        import org.apache.spark.sql.expressions.Window
-        t("s69-cur")(SparkEntry.queries("q69_cosine_topk")(spark, sfDir))
-        def q69v(spreadE: Boolean) = {
-          val base = Tables.embeddings(spark, sfDir)
-          val e0   = if (spreadE) Tables.spread(base) else base
-          val e    = e0.select($"vec_id", $"embedding", sqrt(Kernels.dot($"embedding", $"embedding")).as("nrm"))
-          val q = base
-            .filter($"vec_id" < 10)
-            .select($"vec_id".as("query_id"), $"embedding".as("qe"),
-              sqrt(Kernels.dot($"embedding", $"embedding")).as("qn"))
-          val w = Window.partitionBy($"query_id").orderBy($"cos".desc, $"vec_id")
-          e.join(broadcast(q), $"vec_id" =!= $"query_id")
-            .withColumn("cos", round(Kernels.dot($"qe", $"embedding") / ($"qn" * $"nrm"), 6))
-            .withColumn("rk", row_number().over(w))
-            .filter($"rk" <= 10)
-            .select($"query_id", $"rk", $"vec_id".as("cand_id"), $"cos")
-            .orderBy($"query_id", $"rk")
-        }
-        t("s69-nospread")(q69v(spreadE = false))
-      }
-      // q20: split the two distincts into separate aggregation pipelines
-      // (no Expand; each side collapses map-side) joined at the end
-      if (sel("s20")) {
-        t("s20-cur")(SparkEntry.queries("q20_distinct_agg")(spark, sfDir))
-        t("s20-split") {
-          val li = Tables.lineitem(spark, sfDir)
-          val no = li.groupBy($"l_returnflag", $"l_orderkey").agg(count(lit(1)).as("c"))
-            .groupBy($"l_returnflag").agg(count(lit(1)).as("n_orders"), sum($"c").as("n_rows"))
-          val np = li.groupBy($"l_returnflag", $"l_partkey").agg(count(lit(1)).as("c2"))
-            .groupBy($"l_returnflag").agg(count(lit(1)).as("n_parts"))
-          no.join(np, Seq("l_returnflag"))
-            .select($"l_returnflag", $"n_orders", $"n_parts", $"n_rows")
-            .coalesce(1).sortWithinPartitions($"l_returnflag")
-        }
-      }
-      // q67: lossless candidate-row prefilter — a pair can only reach
-      // jaccard >= 0.6 if 0.6*(n1+n2) <= 1.6*min(n1,n2); rows failing it
-      // produce groups the post-agg filter would drop anyway
-      if (sel("s67")) {
-        t("s67-cur")(SparkEntry.queries("q67_ngram_jaccard_pairs")(spark, sfDir))
-        t("s67-bound") {
-          import graft.functions.TextFns.tokens
-          val docs = graft.operators.Dedup.docsWithDups(spark, sfDir)
-            .repartition($"doc_id")
-            .select($"doc_id", array_distinct(Kernels.shingleHashes(tokens($"text"), 3)).as("sh0"))
-            .groupBy($"doc_id")
-            .agg(first($"sh0").as("sh"))
-            .select($"doc_id", size($"sh").as("n_sh"), explode($"sh").as("shingle"))
-            .repartition($"shingle")
-          val a = docs.select($"doc_id".as("id1"), $"n_sh".as("n1"), $"shingle")
-          val b = docs.select($"doc_id".as("id2"), $"n_sh".as("n2"), $"shingle".as("shingle2"))
-          a.hint("shuffle_hash")
-            .join(b.hint("shuffle_hash"),
-              $"shingle" === $"shingle2" && $"id1" < $"id2" &&
-                least($"n1", $"n2") * 1.6 >= ($"n1" + $"n2") * 0.6)
-            .groupBy($"id1", $"id2", $"n1", $"n2")
-            .agg(count(lit(1)).as("n_inter"))
-            .withColumn("jaccard", round($"n_inter" / ($"n1" + $"n2" - $"n_inter"), 6))
-            .filter($"jaccard" >= 0.6)
-            .select($"id1", $"id2", $"jaccard")
-            .orderBy($"id1", $"id2")
-        }
-      }
-      // ------------------------------------------------- round-3 variants
-      // Scoped AQE coalescing mode: parallelismFirst=false lets AQE
-      // collapse KILOBYTE-sized post-shuffle stages (CC label loops) to
-      // one task instead of 32; measured per-task overhead ~50 ms makes
-      // 32-task tiny stages the iterative families' main cost.
-      def withPfOff[T](body: => T): T = {
-        val k = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
-        val old = spark.conf.get(k, "true")
-        spark.conf.set(k, "false")
-        try body finally spark.conf.set(k, old)
-      }
-      if (sel("pf")) {
-        t("pf-120-cur")(SparkEntry.queries("q120_dedup_endgame")(spark, sfDir))
-        withPfOff { t("pf-120-off")(SparkEntry.queries("q120_dedup_endgame")(spark, sfDir)) }
-        t("pf-179-cur")(SparkEntry.queries("q179_image_dedup_endgame")(spark, sfDir))
-        withPfOff { t("pf-179-off")(SparkEntry.queries("q179_image_dedup_endgame")(spark, sfDir)) }
-        // regression check on the shuffle-hash self-join heads (the r13
-        // note: advisory-size coalescing collapsed their fat partitions)
-        t("pf-67-cur")(SparkEntry.queries("q67_ngram_jaccard_pairs")(spark, sfDir))
-        withPfOff { t("pf-67-off")(SparkEntry.queries("q67_ngram_jaccard_pairs")(spark, sfDir)) }
-        t("pf-65-cur")(SparkEntry.queries("q65_minhash_lsh_pairs")(spark, sfDir))
-        withPfOff { t("pf-65-off")(SparkEntry.queries("q65_minhash_lsh_pairs")(spark, sfDir)) }
-      }
-      // q21: single-distinct + HLL — both ride the (rf, orderkey) dedup
-      // pipeline (the HLL sketch is duplicate-insensitive, so the estimate
-      // over deduplicated keys is bit-identical), no Expand at all
-      if (sel("s21")) {
-        t("s21-cur")(SparkEntry.queries("q21_approx_distinct")(spark, sfDir))
-        t("s21-split") {
-          Tables.lineitem(spark, sfDir)
-            .groupBy($"l_returnflag", $"l_orderkey")
-            .agg(count(lit(1)).as("c"))
-            .groupBy($"l_returnflag")
-            .agg(
-              approx_count_distinct($"l_orderkey", 0.02).as("est"),
-              count($"l_orderkey").as("n_orders_exact"))
-            .select(
-              $"l_returnflag",
-              $"n_orders_exact",
-              (abs($"est" - $"n_orders_exact") <= $"n_orders_exact" * 0.05).as("within_tolerance"))
-            .coalesce(1).sortWithinPartitions($"l_returnflag")
-        }
-      }
-      // ------------------------------------------------- round-4 variants
-      // q80: lazily localCheckpoint the decoded frame so the audit's dead
-      // branch reuses the write pass's parse instead of re-decoding
-      if (sel("v80")) {
-        import graft.sources.{AvroAsvc, JsonDecode, SchemaInfer}
-        t("v80-cur")(SparkEntry.queries("q80_export_pipeline")(spark, sfDir))
-        t("v80-ckpt") {
-          val outDir = graft.sources.ParquetSink.scratchDir(spark, "export_pipeline")
-          val ev = Tables.events(spark, sfDir)
-          val mx = ev.agg(max($"ts")).head().getTimestamp(0)
-          val lo = java.sql.Timestamp.from(mx.toInstant.minus(java.time.Duration.ofDays(30)))
-          val windowed = ev.filter($"ts" >= lit(lo)).filter($"event_type" === "purchase")
-          val sampleRows: Array[String] =
-            windowed.orderBy($"event_id").limit(100).select($"props").as[String].take(100)
-          val propsSchema = SchemaInfer.allNullable(
-            SchemaInfer.infer(spark, spark.createDataset(sampleRows.toIndexedSeq)))
-          SchemaInfer.persist(propsSchema, s"$outDir/schema.json")
-          sampleRows.headOption.foreach(AvroAsvc.persist("purchase", _, s"$outDir/schema.asvc"))
-          // inline decodeWithDeadLetter with ONE lazy checkpoint of the
-          // parsed frame: the write pass fills it, the audit's dead branch
-          // re-reads it instead of re-decoding
-          val st = org.apache.spark.sql.types.StructType
-            .fromDDL(propsSchema.toDDL)
-            .add("_corrupt", org.apache.spark.sql.types.StringType)
-          val parsedCk = windowed
-            .withColumn("_parsed",
-              from_json($"props", st, Map("columnNameOfCorruptRecord" -> "_corrupt")))
-            .localCheckpoint(false)
-          val isBad = $"props".isNull || $"_parsed".isNull ||
-            $"_parsed".getField("_corrupt").isNotNull
-          val good = parsedCk.filter(!isBad)
-          val bad  = parsedCk.filter(isBad).drop("_parsed")
-          good
-            .select($"event_id", $"user_id", $"ts", $"value", $"_parsed.*", to_date($"ts").as("day"))
-            .repartition($"day")
-            .write.mode("overwrite").partitionBy("day").parquet(s"$outDir/data")
-          val exported = spark.read.parquet(s"$outDir/data")
-            .groupBy($"day").agg(count(lit(1)).as("n_rows"))
-          val dead = bad.groupBy(to_date($"ts").as("day")).agg(count(lit(1)).as("n_dead"))
-          exported
-            .join(dead, Seq("day"), "full_outer")
-            .select($"day", coalesce($"n_rows", lit(0L)).as("n_rows"),
-              coalesce($"n_dead", lit(0L)).as("n_dead"))
-            .coalesce(1).sortWithinPartitions($"day")
-        }
-      }
-      // q145: split the 4-way countDistinct Expand into per-column dedup
-      // pipelines beside one min/max/null pass
-      if (sel("v145")) {
-        t("v145-cur")(SparkEntry.queries("q145_table_profile")(spark, sfDir))
-        t("v145-split") {
-          val li = Tables.lineitem(spark, sfDir)
-          def nd(c: String) = li.groupBy(col(c)).agg(count(lit(1)).as("cc"))
-            .agg(count(col(c)).as(s"${c}_distinct"))
-          val base = li.agg(
-            count(lit(1)).as("n"),
-            sum($"l_quantity".isNull.cast("long")).as("qty_nulls"),
-            min($"l_quantity").cast("double").as("qty_min"),
-            max($"l_quantity").cast("double").as("qty_max"),
-            sum($"l_extendedprice".isNull.cast("long")).as("ep_nulls"),
-            min($"l_extendedprice").cast("double").as("ep_min"),
-            max($"l_extendedprice").cast("double").as("ep_max"),
-            sum($"l_shipdate".isNull.cast("long")).as("sd_nulls"),
-            min(unix_micros($"l_shipdate")).cast("double").as("sd_min"),
-            max(unix_micros($"l_shipdate")).cast("double").as("sd_max"),
-            sum($"l_returnflag".isNull.cast("long")).as("rf_nulls"),
-            min($"l_returnflag").as("rf_min"),
-            max($"l_returnflag").as("rf_max"))
-          val joined = base
-            .crossJoin(nd("l_quantity").withColumnRenamed("l_quantity_distinct", "qty_distinct"))
-            .crossJoin(nd("l_extendedprice").withColumnRenamed("l_extendedprice_distinct", "ep_distinct"))
-            .crossJoin(nd("l_shipdate").withColumnRenamed("l_shipdate_distinct", "sd_distinct"))
-            .crossJoin(nd("l_returnflag").withColumnRenamed("l_returnflag_distinct", "rf_distinct"))
-          joined.select(
-            $"n".as("n_rows"),
-            expr("""stack(4,
-              'l_quantity',      qty_nulls, qty_distinct, qty_min, qty_max, CAST(NULL AS STRING), CAST(NULL AS STRING),
-              'l_extendedprice', ep_nulls,  ep_distinct,  ep_min,  ep_max,  CAST(NULL AS STRING), CAST(NULL AS STRING),
-              'l_shipdate',      sd_nulls,  sd_distinct,  sd_min,  sd_max,  CAST(NULL AS STRING), CAST(NULL AS STRING),
-              'l_returnflag',    rf_nulls,  rf_distinct,  CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE), rf_min, rf_max)
-              AS (col_name, n_null, n_distinct, min_num, max_num, min_str, max_str)""")
-          ).select(
-            $"col_name", $"n_rows", $"n_null", $"n_distinct",
-            $"min_num", $"max_num", $"min_str", $"max_str"
-          ).coalesce(1).sortWithinPartitions($"col_name")
-        }
-      }
-      spark.stop(); return
-    }
-    if (which == "r20diag") {
-      // Round-20 diagnostics (guide §1: measure before believing).
-      // (a) q157: partition counts of the classifier's checkpointed tables
-      //     under default vs size-first coalescing — the r20 scope change
-      //     moved no task counts, this pins down why.
-      // (b) q179: stage decomposition of the new single-codec-pass endgame
-      //     (hash fill / pair fill / CC / final action), interleaved with
-      //     the r19 lazy form, same JVM, warm.
-      import spark.implicits._
-      import graft.operators.{Graph, Multimodal}
-      import graft.functions.TextFns
-      def t[A](tag: String)(f: => A): A = {
-        val t0 = System.nanoTime(); val r = f
-        println(f"[r20diag] $tag%-22s ${(System.nanoTime() - t0) / 1e9}%.3f s"); r
-      }
-      // ---- (a) q157 internals
-      locally {
-        val QcBuckets = 63
-        def featsOf(): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-          val docs = Tables.spread(Tables.documents(spark, sfDir))
-            .withColumn("toks", TextFns.tokens($"text"))
-            .withColumn("cpos", size(filter($"toks", t => t.isInCollection(Seq("spark", "fast")))))
-            .withColumn("cneg", size(filter($"toks", t => t.isInCollection(Seq("slow", "batch")))))
-            .select($"doc_id", when($"cpos" > $"cneg", 1L).otherwise(-1L).as("y"), $"toks")
-          val feats = docs
-            .select($"doc_id", $"y", explode($"toks").as("tok"))
-            .withColumn("f", (TextFns.h60($"tok") % QcBuckets).cast("int"))
-            .groupBy($"doc_id", $"y", $"f")
-            .agg(count(lit(1)).cast("long").as("x"))
-            .unionByName(docs.select($"doc_id", $"y", lit(QcBuckets).as("f"), lit(1L).as("x")))
-            .localCheckpoint()
-          val docFeats = feats
-            .groupBy($"doc_id", $"y")
-            .agg(collect_list(struct($"f", $"x")).as("fx"))
-            .localCheckpoint()
-          (feats, docFeats)
-        }
-        val (f1, d1) = featsOf()
-        println(s"[r20diag] q157 default-mode: feats=${numParts(f1)} docFeats=${numParts(d1)} partitions")
-        val (f2, d2) = Session.withSizeFirstCoalescing(spark)(featsOf())
-        println(s"[r20diag] q157 size-first:   feats=${numParts(f2)} docFeats=${numParts(d2)} partitions")
-      }
-      // ---- (b) q179 endgame decomposition, new form vs lazy form
-      def endgameInline(checkpointHashes: Boolean): Unit = {
-        val raw = Multimodal.imagePhashes(spark, sfDir)
-        val hashTbl = if (checkpointHashes) t("  hash-fill")(raw.localCheckpoint(true)) else raw
-        val hashes = hashTbl.repartition($"b0", $"b1", $"b2", $"b3")
-        val groups = hashes
-          .groupBy($"b0", $"b1", $"b2", $"b3")
-          .agg(min($"doc_id").as("rep_id"), count(lit(1)).as("n_copies"))
-        val repPairs = t("  pair-fill")(Session.withSizeFirstCoalescing(spark) {
-          Multimodal.phashBandPairs(
-            groups.select($"rep_id".as("doc_id"), $"b0", $"b1", $"b2", $"b3")
-          ).select($"id1".as("src"), $"id2".as("dst")).localCheckpoint(true)
-        })
-        val pnodes = repPairs
-          .select($"src".as("node"))
-          .unionByName(repPairs.select($"dst".as("node")))
-          .distinct()
-        val comp = t("  cc-loop")(Graph.autoComponents(pnodes, repPairs))
-        t("  final-action") {
-          val repComp = groups
-            .join(comp, $"rep_id" === $"node", "left")
-            .select($"b0", $"b1", $"b2", $"b3", $"rep_id", $"n_copies",
-              coalesce($"comp", $"rep_id").as("cluster_id"))
-          val clusterMass = repComp
-            .groupBy($"cluster_id")
-            .agg(sum($"n_copies").as("cluster_images"))
-          hashes
-            .join(repComp, Seq("b0", "b1", "b2", "b3"))
-            .join(clusterMass, "cluster_id")
-            .select($"doc_id", $"rep_id", $"cluster_id", $"cluster_images",
-              ($"doc_id" === $"cluster_id").as("is_kept"))
-            .orderBy($"doc_id")
-            .write.mode("overwrite").format("noop").save()
-        }
-      }
-      // ---- (d) q36 variants: declared histogram form vs the r19 two-
-      //      interpreted-aggregates form vs a spread histogram — warmed
-      //      best-of-3 in one JVM (the r19ab discipline)
-      def t3(tag: String)(mk: => org.apache.spark.sql.DataFrame): Unit = {
-        mk.write.mode("overwrite").format("noop").save() // warm
-        val runs = (1 to 3).map { _ =>
-          val t0 = System.nanoTime()
-          mk.write.mode("overwrite").format("noop").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        println(f"[r20diag] $tag%-16s best=${runs.min}%.3f runs=${runs.map(r => f"$r%.3f").mkString(",")}")
-      }
-      if (args.contains("q36")) {
-        def q36old() = Tables
-          .lineitem(spark, sfDir)
-          .groupBy($"l_returnflag")
-          .agg(
-            expr("approx_percentile(l_extendedprice, array(0.25, 0.5, 0.75), 10000)").as("aq"),
-            expr("percentile(l_extendedprice, array(0.25, 0.5, 0.75))").as("xq")
-          )
-          .select(
-            $"l_returnflag",
-            round($"xq".getItem(0), 6).as("p25_exact"),
-            round($"xq".getItem(1), 6).as("p50_exact"),
-            round($"xq".getItem(2), 6).as("p75_exact"),
-            (abs($"aq".getItem(0) - $"xq".getItem(0)) <= $"xq".getItem(0) * 0.02 &&
-              abs($"aq".getItem(1) - $"xq".getItem(1)) <= $"xq".getItem(1) * 0.02 &&
-              abs($"aq".getItem(2) - $"xq".getItem(2)) <= $"xq".getItem(2) * 0.02)
-              .as("within_tolerance")
-          )
-          .orderBy($"l_returnflag")
-        def q36hist(spread: Boolean) = {
-          import org.apache.spark.sql.expressions.Window
-          val byFlag = Window.partitionBy($"l_returnflag")
-          val cumW = byFlag.orderBy($"l_extendedprice")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-          var li = Tables.lineitem(spark, sfDir).filter($"l_extendedprice".isNotNull)
-          if (spread) li = li.repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt)
-          val w = li
-            .groupBy($"l_returnflag", $"l_extendedprice")
-            .agg(count(lit(1)).as("cnt"))
-            .withColumn("cum", sum($"cnt").over(cumW))
-            .withColumn("ntot", sum($"cnt").over(byFlag))
-          def atRank(r: org.apache.spark.sql.Column) =
-            max(when($"cum" - $"cnt" <= r && r < $"cum", $"l_extendedprice"))
-          def exactQ(q: Double) = {
-            val pos = lit(q) * ($"ntot" - 1).cast("double")
-            val lo  = floor(pos).cast("long")
-            val hi  = least(lo + 1, $"ntot" - 1)
-            val wLo = max(lo.cast("double") + 1d - pos)
-            val wHi = max(pos - lo.cast("double"))
-            atRank(lo) * wLo + atRank(hi) * wHi
-          }
-          def approxQ(q: Double) =
-            atRank(floor(lit(q) * ($"ntot" - 1).cast("double")).cast("long"))
-          w.groupBy($"l_returnflag")
-            .agg(exactQ(0.25).as("x25"), exactQ(0.50).as("x50"), exactQ(0.75).as("x75"),
-              approxQ(0.25).as("a25"), approxQ(0.50).as("a50"), approxQ(0.75).as("a75"))
-            .select($"l_returnflag",
-              round($"x25", 6).as("p25_exact"), round($"x50", 6).as("p50_exact"),
-              round($"x75", 6).as("p75_exact"),
-              (abs($"a25" - $"x25") <= $"x25" * 0.02 && abs($"a50" - $"x50") <= $"x50" * 0.02 &&
-                abs($"a75" - $"x75") <= $"x75" * 0.02).as("within_tolerance"))
-            .transform(Tables.sortSmall(_, $"l_returnflag"))
-        }
-        (1 to 2).foreach { _ =>
-          t3("q36-old")(q36old())
-          t3("q36-hist")(q36hist(spread = false))
-          t3("q36-histsp")(q36hist(spread = true))
-          t3("q36-cur")(SparkEntry.queries("q36_approx_percentile")(spark, sfDir))
-        }
-        // decomposition: where does the ~1.7 s go?
-        val li = Tables.lineitem(spark, sfDir).filter($"l_extendedprice".isNotNull)
-        println(s"[r20diag] q36 distinct (rf, price) = " +
-          li.select($"l_returnflag", $"l_extendedprice").distinct().count())
-        t3("q36-scan")(li.select($"l_returnflag", $"l_extendedprice"))
-        val h0 = li.groupBy($"l_returnflag", $"l_extendedprice").agg(count(lit(1)).as("cnt"))
-        t3("q36-histagg")(h0)
-        locally {
-          import org.apache.spark.sql.expressions.Window
-          val byFlag = Window.partitionBy($"l_returnflag")
-          val cumW = byFlag.orderBy($"l_extendedprice")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-          t3("q36-cumonly")(h0.withColumn("cum", sum($"cnt").over(cumW)))
-          t3("q36-bothwin")(
-            h0.withColumn("cum", sum($"cnt").over(cumW))
-              .withColumn("ntot", sum($"cnt").over(byFlag)))
-        }
-        spark.stop(); return
-      }
-      if (args.contains("q80")) {
-        (1 to 3).foreach { _ =>
-          t3("q80-cur")(SparkEntry.queries("q80_export_pipeline")(spark, sfDir))
-        }
-        spark.stop(); return
-      }
-      if (args.contains("heads")) {
-        // verdict task 7: can a SESSION-LEVEL advisory/coalescing change
-        // shrink the floor-bound heads' job counts without hurting the
-        // walk? Jobs are counted per query under each config; q67 rides
-        // along as the harm canary (the known size-first 3x regression).
-        import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-        val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-        spark.sparkContext.addSparkListener(new SparkListener {
-          override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-        })
-        val heads = Seq("q02_top_event_types", "q26_global_topk", "q64_exact_dedup",
-          "q73_session_window", "q67_ngram_jaccard_pairs")
-        def runSet(tag: String): Unit = heads.foreach { n =>
-          val mk = () => SparkEntry.queries(n)(spark, sfDir)
-            .write.mode("overwrite").format("noop").save()
-          mk() // warm
-          drainListenerBus(spark.sparkContext); jobs.set(0)
-          val runs = (1 to 3).map { _ =>
-            val t0 = System.nanoTime(); mk(); (System.nanoTime() - t0) / 1e9
-          }
-          drainListenerBus(spark.sparkContext)
-          println(f"[r20diag] heads/$tag $n%-28s best=${runs.min}%.3f jobs3runs=${jobs.get()}")
-        }
-        runSet("default")
-        spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "256m")
-        runSet("advisory256m")
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-        runSet("adv256m+sizefirst")
-        spark.stop(); return
-      }
-      // warm both paths once
-      endgameInline(checkpointHashes = true)
-      (1 to 2).foreach { _ =>
-        t("eg179-ckpt")(endgameInline(checkpointHashes = true))
-        t("eg179-lazy")(endgameInline(checkpointHashes = false))
-      }
-      // ---- (c) the CC loop itself, phase-timed: where do 5-15 s go for a
-      //      ~500-node pair graph? Inline replica of minLabelComponents
-      //      with per-action timers on cache-fill count, observation reads
-      //      and checkpoint rotation.
-      locally {
-        import org.apache.spark.sql.Observation
-        val raw     = Multimodal.imagePhashes(spark, sfDir)
-        val hashTbl = raw.localCheckpoint(true)
-        val groups = hashTbl.repartition($"b0", $"b1", $"b2", $"b3")
-          .groupBy($"b0", $"b1", $"b2", $"b3")
-          .agg(min($"doc_id").as("rep_id"), count(lit(1)).as("n_copies"))
-        val repPairs = Session.withSizeFirstCoalescing(spark) {
-          Multimodal.phashBandPairs(
-            groups.select($"rep_id".as("doc_id"), $"b0", $"b1", $"b2", $"b3")
-          ).select($"id1".as("src"), $"id2".as("dst")).localCheckpoint(true)
-        }
-        println(s"[r20diag] repPairs parts=${numParts(repPairs)} rows=${repPairs.count()}")
-        val pnodes = repPairs.select($"src".as("node"))
-          .unionByName(repPairs.select($"dst".as("node"))).distinct()
-        (1 to 2).foreach { rep =>
-          Session.withSizeFirstCoalescing(spark) {
-            val e   = repPairs
-            val sym = e.unionByName(e.select($"dst".as("src"), $"src".as("dst")))
-            def step(lbl: org.apache.spark.sql.DataFrame, obs: Observation) = {
-              val nbrMin = sym.join(lbl, $"dst" === $"node").groupBy($"src")
-                .agg(min($"comp").as("nbr_comp"))
-              lbl.join(nbrMin, $"node" === $"src", "left")
-                .select($"node", least($"comp", coalesce($"nbr_comp", $"comp")).as("comp"),
-                  when($"nbr_comp" < $"comp", 1L).otherwise(0L).as("ch"))
-                .observe(obs, sum($"ch").as("changed"))
-                .select($"node", $"comp")
-            }
-            var labels  = t(s"  r$rep init-cache")(pnodes.select($"node", $"node".as("comp")).cache())
-            var changed = 1L
-            var action  = 0
-            while (changed > 0 && action < 3) {
-              val obss = (1 to 3).map(r => Observation(s"d_a${action}_r$r"))
-              val next = obss.foldLeft(labels)((l, o) => step(l, o)).cache()
-              t(s"  r$rep a$action count")(next.count())
-              changed = t(s"  r$rep a$action obs")(obss.last.get("changed") match {
-                case n: Number => n.longValue(); case _ => 0L
-              })
-              val prev = labels; labels = next; prev.unpersist()
-              action += 1
-            }
-            val res = t(s"  r$rep final-ckpt")(labels.localCheckpoint(true))
-            labels.unpersist()
-            res.count()
-          }
-        }
-      }
-      spark.stop(); return
-    }
-    if (which == "adhoc") {
-      // decimal vs double vs scaled-long aggregation cost on lineitem
-      import spark.implicits._
-      val li = Tables.lineitem(spark, sfDir)
-      def t(tag: String)(mk: => org.apache.spark.sql.DataFrame): Unit = {
-        mk.write.mode("overwrite").format("noop").save() // warm
-        val runs = (1 to 3).map { _ =>
-          val t0 = System.nanoTime()
-          mk.write.mode("overwrite").format("noop").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        println(f"[adhoc] $tag%-12s best=${runs.min}%.3f")
-      }
-      t("double") {
-        li.groupBy($"l_returnflag", $"l_linestatus")
-          .agg(sum($"l_extendedprice" * (lit(1.0) - $"l_discount")).as("s"), count(lit(1)).as("n"))
-      }
-      t("decimal") {
-        li.groupBy($"l_returnflag", $"l_linestatus")
-          .agg(Det.decSum($"l_extendedprice" * (lit(1.0) - $"l_discount"), 4).as("s"), count(lit(1)).as("n"))
-      }
-      t("scaledlong") {
-        li.groupBy($"l_returnflag", $"l_linestatus")
-          .agg((sum(round($"l_extendedprice" * (lit(1.0) - $"l_discount") * 10000).cast("long")) / 10000.0).as("s"), count(lit(1)).as("n"))
-      }
-      t("widesum") {
-        li.groupBy($"l_returnflag", $"l_linestatus")
-          .agg(Det.decSumWide($"l_extendedprice" * (lit(1.0) - $"l_discount"), 4).as("s"), count(lit(1)).as("n"))
-      }
-      // two-level: per-(group, input partition) LONG partials (codegen-
-      // primitive over the full data), DECIMAL only across the few partials
-      t("twolevel") {
-        li.groupBy($"l_returnflag", $"l_linestatus", spark_partition_id().as("pid"))
-          .agg(
-            sum(round($"l_extendedprice" * (lit(1.0) - $"l_discount") * 10000).cast("long")).as("p"),
-            count(lit(1)).as("pn")
-          )
-          .groupBy($"l_returnflag", $"l_linestatus")
-          .agg(
-            (sum($"p".cast("decimal(38,0)")).cast("double") / 10000.0).as("s"),
-            sum($"pn").as("n")
-          )
-      }
-      t("scan-only")(li.select($"l_extendedprice", $"l_discount"))
-      t("scan-all")(li)
-      // q11 star-join shapes: one-level scaled-long (unsafe at SF>2e4),
-      // one-level decimal, and the two-level long-then-decimal it now uses
-      locally {
-        val nat  = Tables.nation(spark, sfDir)
-        val reg  = Tables.region(spark, sfDir)
-        val cust = Tables.customer(spark, sfDir)
-        val ord  = Tables.orders(spark, sfDir)
-        def joined =
-          li.join(ord, $"l_orderkey" === $"o_orderkey")
-            .join(broadcast(cust), $"o_custkey" === $"c_custkey")
-            .join(broadcast(nat), $"c_nationkey" === $"n_nationkey")
-            .join(broadcast(reg), $"n_regionkey" === $"r_regionkey")
-        t("q11-long") {
-          joined
-            .groupBy($"r_name", $"n_name")
-            .agg(Det.decSum($"l_extendedprice" * (lit(1.0) - $"l_discount"), 4).as("revenue"))
-        }
-        t("q11-wide") {
-          joined
-            .groupBy($"r_name", $"n_name")
-            .agg(Det.decSumWide($"l_extendedprice" * (lit(1.0) - $"l_discount"), 4).as("revenue"))
-        }
-        t("q11-2level") {
-          joined
-            .groupBy($"r_name", $"n_name", spark_partition_id().as("_pid"))
-            .agg(
-              sum(round($"l_extendedprice" * (lit(1.0) - $"l_discount") * 10000).cast("long"))
-                .as("p_rev"),
-              count(lit(1)).as("p_n")
-            )
-            .groupBy($"r_name", $"n_name")
-            .agg(
-              (sum($"p_rev".cast("decimal(38,0)")).cast("double") / 10000.0).as("revenue"),
-              sum($"p_n").as("n_items")
-            )
-        }
-      }
-      // minhash stage decomposition
-      import graft.functions.TextFns._
-      import graft.operators.Dedup
-      val docs = Dedup.docsWithDups(spark, sfDir)
-      t("mh-shingle")(docs.select($"doc_id", array_distinct(shingles3(tokens($"text"))).as("dsh")))
-      t("mh-hash")(docs.select($"doc_id", minhashBaseHashes(array_distinct(shingles3(tokens($"text")))).as("hs")))
-      t("mh-sig") {
-        docs.select($"doc_id", minhashBaseHashes(array_distinct(shingles3(tokens($"text")))).as("hs"))
-          .repartition($"doc_id")
-          .select($"doc_id", minhashSigFromHashes($"hs", 16).as("sig"))
-      }
-      t("mh-full")(Dedup.minhashLshPairs(spark, sfDir))
-      // simhash decomposition
-      import graft.functions.Kernels
-      val sdocs = Tables.spread(Dedup.docsWithDups(spark, sfDir))
-      t("sh-split")(sdocs.select($"doc_id", split($"text", " ").as("t")))
-      t("sh-distinct")(sdocs.select($"doc_id", array_distinct(split($"text", " ")).as("t")))
-      t("sh-md5")(sdocs.select($"doc_id", Kernels.md5Array60(array_distinct(split($"text", " "))).as("h")))
-      t("sh-shift")(sdocs.select($"doc_id", transform(Kernels.md5Array60(array_distinct(split($"text", " "))), h => shiftright(h, 12)).as("h")))
-      t("sh-simhash") {
-        sdocs.select($"doc_id", transform(Kernels.md5Array60(array_distinct(split($"text", " "))), h => shiftright(h, 12)).as("tokh"))
-          .repartition($"doc_id")
-          .select($"doc_id", Kernels.simhash($"tokh").as("s"))
-      }
-      t("sh-full")(Dedup.simhashPairs(spark, sfDir))
-      spark.stop(); return
     }
     if (which == "sf1") {
       // Stretch validation past the fixture range (/root/testdata tops out

@@ -4,34 +4,46 @@ import org.apache.spark.sql.SparkSession
 
 /** SparkSession factory for the graft engine.
   *
-  * Single place that pins the settings every entry point (Verify, Bench,
-  * tests) must share for oracle parity and local-mode sanity:
-  *   - UTC session time zone (DuckDB hashes must agree on timestamps)
-  *   - shuffle partitions sized to the local core count, not the 200 default
+  * [[confs]] is the single list of settings every session graft builds
+  * shares (Verify, Bench, Probe, the CLI, the benchmark harness and the
+  * test session): oracle parity for the results ([[readConfs]]) plus the
+  * local-mode execution settings:
   *   - AQE on (runtime coalescing / skew-join handling — the 100 TB story)
-  *   - `nanosAsLong` so the ns-precision `events.ts` parquet column loads
-  *     (Spark has no TIMESTAMP(NANOS) type; see Tables.events for the cast)
+  *   - shuffle partitions sized to the local core count, not the 200 default
+  *   - lz4 shuffle/spill codec: zstd cut the 5M-doc dedup rung's spill by
+  *     ~20% at equal q147 runtime but cost q168 +18%, and the rung's disk
+  *     capacity problem is gone (BASELINE.md "Codec note",
+  *     OPTIMIZATION_r19.md)
   */
 object Session {
-  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  def cpus: String =
+    sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
+
+  /** The settings results depend on — [[tune]] applies these to a session
+    * graft did not build:
+    *   - UTC session time zone (DuckDB hashes must agree on timestamps)
+    *   - `nanosAsLong` so the ns-precision `events.ts` parquet column loads
+    *     (Spark has no TIMESTAMP(NANOS) type; see Tables.events for the cast)
+    *   - µs-precision fixtures carry isAdjustedToUTC=false; read them as
+    *     plain TimestampType (UTC session) so values match DuckDB's naive
+    *     read */
+  val readConfs: Seq[(String, String)] = Seq(
+    "spark.sql.session.timeZone"                  -> "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong"        -> "true",
+    "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false"
+  )
+
+  /** Every setting [[build]] gives a session. */
+  def confs: Seq[(String, String)] = readConfs ++ Seq(
+    "spark.sql.adaptive.enabled"   -> "true",
+    "spark.sql.extensions"         -> "graft.plans.GraftExtensions",
+    "spark.ui.enabled"             -> "false",
+    "spark.sql.shuffle.partitions" -> cpus,
+    "spark.io.compression.codec"   -> "lz4"
+  )
 
   def build(master: String = s"local[$cpus]", appName: String = "graft"): SparkSession = {
-    val spark = SparkSession
-      .builder()
-      .master(master)
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // shuffle/spill codec, env-overridable for A/B (GRAFT_IO_CODEC):
-      // the 5M-doc dedup rung is scratch-DISK bound (r14: ENOSPC at 61 GB
-      // free) — codec choice is a pure capacity lever there
-      .config("spark.io.compression.codec", sys.env.getOrElse("GRAFT_IO_CODEC", "lz4"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkSession.builder().master(master).appName(appName).config(confs.toMap).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
@@ -97,19 +109,14 @@ object Session {
     finally spark.conf.set(k, old)
   }
 
-  /** Apply the parity configs to an externally-built session (the driver
+  /** Apply [[readConfs]] to an externally-built session (the driver
     * may smoke-call `SparkEntry.entry` with its own session). Best-effort:
     * anything static in that session is skipped rather than failed. */
   def tune(spark: SparkSession): SparkSession = {
-    def trySet(k: String, v: String): Unit =
+    readConfs.foreach { case (k, v) =>
       try spark.conf.set(k, v)
       catch { case _: org.apache.spark.sql.AnalysisException => () }
-    trySet("spark.sql.session.timeZone", "UTC")
-    // events.ts is parquet TIMESTAMP(NANOS); without this the read fails
-    trySet("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // µs-precision fixtures carry isAdjustedToUTC=false; read them as plain
-    // TimestampType (UTC session) so values match DuckDB's naive read
-    trySet("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    }
     spark
   }
 }

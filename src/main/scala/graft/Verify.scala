@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,23 +11,7 @@ object Verify {
       case Some(pats) => { val ps = pats.split(','); (n: String) => ps.exists(n.contains) }
       case None       => _ => true
     }
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString
-    )
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts is parquet TIMESTAMP(NANOS); load as long, Tables casts µs
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // µs NTZ fixtures → plain TimestampType (UTC session = DuckDB's naive read)
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(q => nameFilter(q._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -47,7 +30,8 @@ object Verify {
   /** JSON string escape: backslash, quote, and ALL control chars (<0x20)
     * — a tab or CR in builder-authored SQL would otherwise make the
     * driver's json.load fail and silently zero the round's correctness.
-    * Shared with Probe's sf1 oracle-subset dump. */
+    * The one JSON string escaper: Bench's oracle file and Probe's sf1
+    * oracle-subset dump use it too. */
   private[graft] def jsonStr(s: String): String = "\"" + s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"

@@ -78,7 +78,7 @@ object Advanced {
     * `percentile`/`quantile_cont` exactly: pos = 0.5·(n−1) on the 0-based
     * sorted ranks, v_lo + frac·(v_hi − v_lo) — bit-exact here because the
     * neighbors are integral doubles and frac ∈ {0, 0.5}. (Same-JVM
-    * interleaved A/B at the 600M-row sf100 rung, `Probe q29ab`: local
+    * interleaved A/B at the 600M-row sf100 rung, BASELINE.md round 12: local
     * wall-clock is scan-arithmetic-bound so the forms read parity to
     * slightly-ahead — pairwise 83.9→85.5, 85.9→80.0, 63.6→54.4 s under
     * host phase drift; the rewrite's claim is the plan shape, which is

@@ -595,8 +595,8 @@ object Curation {
     // checkpointed tables ALREADY land at 1 partition (feats carries the
     // 32-way spread union branch by design — its consumers are one-shot
     // aggregations), so no per-round tiny-stage waste exists to collapse;
-    // a size-first scope was A/B'd and measured a no-op (r20diag:
-    // feats=33/docFeats=1 partitions under BOTH modes). The residual wall
+    // a size-first scope was A/B'd and measured a no-op (OPTIMIZATION_r20.md
+    // §4: feats=33/docFeats=1 partitions under BOTH modes). The residual wall
     // is QcRounds sequential collect actions — irreducible without
     // changing the declared training semantics (round r+1's margins need
     // round r's collected weights).

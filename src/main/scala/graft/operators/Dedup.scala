@@ -55,7 +55,7 @@ object Dedup {
   /** [[minhashLshPairs]] without the presentation sort — the form consumers
     * like [[dedupEndgame]] compose (their next stage is a shuffle anyway,
     * so a global sort here would be pure waste). */
-  private[graft] def minhashPairsUnsorted(spark: SparkSession, sfDir: String): DataFrame = {
+  private def minhashPairsUnsorted(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     // Whole signature computed by compiled kernels in one projection (md5
     // shingle hashes + 16 affine min-lanes; distinct-ness of shingles is
@@ -313,7 +313,7 @@ object Dedup {
     val a = pfx.select($"doc_id".as("id1"), $"n_sh".as("na1"), $"pos".as("pos1"), $"shingle")
     val b = pfx.select($"doc_id".as("id2"), $"n_sh".as("na2"), $"pos".as("pos2"), $"shingle".as("shingle2"))
     // The PPJoin candidate cuts (both LOSSLESS at t = 0.6 = 3/5, both exact
-    // integer arithmetic — the dddiag probe measured the unfiltered
+    // integer arithmetic — BASELINE.md round 14 records the unfiltered
     // candidate mass at 450× the true pairs on the fixture's df≈10 trigram
     // distribution, and the verify of that junk was the real sf100 cost):
     //   - length filter: J ≥ 3/5 forces 3·n1 ≤ 5·n2 and 3·n2 ≤ 5·n1;
@@ -354,7 +354,7 @@ object Dedup {
     // Sketch-gated verify (r15): attach each doc's 64-byte bucket
     // histogram (not its 330-byte shingle array) to the candidate rows and
     // drop pairs whose PROVABLE intersection ceiling Σ min(h1,h2) is below
-    // α — lossless (see Kernels.shingleHist64). The dddiag2 probe measured
+    // α — lossless (see Kernels.shingleHist64). BASELINE.md round 15 records
     // 98.9% of the 15.9M candidates at the 1M-doc slice with true
     // intersection < 5 against α ≥ 6, so the full-array verify exchange —
     // the 6.4 GB whale stage, 64% of q147's shuffle write — shrinks to the

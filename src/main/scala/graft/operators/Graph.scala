@@ -124,8 +124,6 @@ object Graph {
       val next = obss.foldLeft(labels)((lbl, obs) => step(lbl, obs)).cache()
       next.count() // the action: fills cache + every round's observation
       changed = metric(obss.last)
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(s"[cc] action=$action changed=${obss.map(metric).mkString(",")}")
       val prev = labels
       labels = next
       prev.unpersist()
@@ -340,8 +338,6 @@ object Graph {
       e = observedCheckpoint(smallStar(largeStar(e)), obs)
       prev = cur
       cur = fp(obs)
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(s"[cc2] round=$round edges=${cur._1}")
       round += 1
     }
     // a silent exit with an unconverged edge set would label components

@@ -603,7 +603,7 @@ object Multimodal {
     }
   }
 
-  private[graft] def imagePhashes(spark: SparkSession, sfDir: String): DataFrame = {
+  private def imagePhashes(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     imageCorpusIds(spark, sfDir)
       .mapPartitions { rows =>
@@ -622,7 +622,7 @@ object Multimodal {
     * shuffle_hash discipline is q65/q66's: both self-join sides reuse ONE
     * exchange, and band buckets are unbounded at corpus scale so a
     * broadcast would be the wrong plan. */
-  private[graft] def phashBandPairs(hashes: DataFrame): DataFrame = {
+  private def phashBandPairs(hashes: DataFrame): DataFrame = {
     import hashes.sparkSession.implicits._
     val bands = hashes
       .select(

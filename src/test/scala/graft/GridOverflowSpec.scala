@@ -130,8 +130,7 @@ class GridOverflowSpec extends SparkSpec {
     // through decSumWide / the two-level idiom) instead of shipping an
     // unaudited grid. Registered: query-side sites (Det.decSum +
     // decSumWide + gridPartial bodies, Advanced x6, Similarity,
-    // Clustering x2, Skew x2, TimeSeries, Curation) + Probe diagnostics
-    // outside the audit's scope.
+    // Clustering x2, Skew x2, TimeSeries, Curation).
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala/graft")
     require(java.nio.file.Files.isDirectory(root), s"run from the repo root: $root not found")
@@ -166,11 +165,7 @@ class GridOverflowSpec extends SparkSpec {
 
       "operators/Similarity.scala"  -> 1,
       "operators/Skew.scala"        -> 2,
-      "operators/TimeSeries.scala"  -> 1,
-      // diagnostics outside the audit's bound table (+3 in the q29ab phase:
-      // a frozen copy of q29's pre-rewrite percentile form, same grids the
-      // Advanced.scala table already bounds; +1 in the r19ab A/B harness)
-      "Probe.scala"                 -> 7
+      "operators/TimeSeries.scala"  -> 1
     )
     val got = hits.groupBy(_._1).view.mapValues(_.size).toMap
     assert(

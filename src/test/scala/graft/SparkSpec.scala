@@ -4,24 +4,21 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM-wide session keeps the test
-  * run fast; configs mirror Session/Verify for parity). */
+  * run fast). Built from [[Session.confs]], the list every graft session
+  * uses, overriding only the master, the shuffle partitions and the
+  * warehouse dir. */
 object TestSession {
+  val overrides: Map[String, String] = Map(
+    "spark.sql.shuffle.partitions" -> "4",
+    "spark.sql.warehouse.dir"      -> java.nio.file.Files.createTempDirectory("graft_warehouse").toString
+  )
+
   lazy val spark: SparkSession = {
     val s = SparkSession
       .builder()
       .master("local[4]")
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config(
-        "spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_warehouse").toString
-      )
-      .config("spark.ui.enabled", "false")
+      .config(Session.confs.toMap ++ overrides)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
