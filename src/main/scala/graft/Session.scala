@@ -14,6 +14,14 @@ import org.apache.spark.sql.SparkSession
   *     ~20% at equal q147 runtime but cost q168 +18%, and the rung's disk
   *     capacity problem is gone (BASELINE.md "Codec note",
   *     OPTIMIZATION_r19.md)
+  *   - a 4,096-entry generated-code cache: Spark's default of 100 classes
+  *     is below what the 17 bench queries alone need (274 distinct
+  *     classes; the 173-query catalog needs 3,004), so the LRU evicted
+  *     every class before the next pass returned to it and each warm
+  *     pass recompiled ~280 classes with Janino at ~10 ms each
+  *     (BASELINE.md "Codegen cache note"). The conf is static, and Spark
+  *     sizes the JVM-wide cache once, from the first session's conf, so
+  *     it lives here and not in [[readConfs]].
   */
 object Session {
   def cpus: String =
@@ -35,11 +43,12 @@ object Session {
 
   /** Every setting [[build]] gives a session. */
   def confs: Seq[(String, String)] = readConfs ++ Seq(
-    "spark.sql.adaptive.enabled"   -> "true",
-    "spark.sql.extensions"         -> "graft.plans.GraftExtensions",
-    "spark.ui.enabled"             -> "false",
-    "spark.sql.shuffle.partitions" -> cpus,
-    "spark.io.compression.codec"   -> "lz4"
+    "spark.sql.adaptive.enabled"         -> "true",
+    "spark.sql.extensions"               -> "graft.plans.GraftExtensions",
+    "spark.ui.enabled"                   -> "false",
+    "spark.sql.shuffle.partitions"       -> cpus,
+    "spark.io.compression.codec"         -> "lz4",
+    "spark.sql.codegen.cache.maxEntries" -> "4096"
   )
 
   def build(master: String = s"local[$cpus]", appName: String = "graft"): SparkSession = {

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import org.apache.hadoop.fs.Path
 
 /** Readers for the driver-generated testdata tables (TESTDATA.md).
   *
@@ -31,7 +33,8 @@ object Tables {
     * for every representable value in ANY session zone. Covers every
     * regenerated timestamp column (events.ts, o_orderdate, l_shipdate). */
   private def read(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val raw = spark.read.parquet(s"$sfDir/$name.parquet")
+    val path = s"$sfDir/$name.parquet"
+    val raw  = spark.read.schema(parquetSchema(spark, path)).parquet(path)
     val ntzCols = raw.schema.fields.collect {
       case f if f.dataType == org.apache.spark.sql.types.TimestampNTZType => f.name
     }
@@ -43,6 +46,48 @@ object Tables {
           minute(col(c)).cast("long") * 60000000L +
           (date_part(lit("SECOND"), col(c)) * 1000000L).cast("long")
       df.withColumn(c, timestamp_micros(us))
+    }
+  }
+
+  /** The confs whose session values change what Parquet schema inference
+    * returns for the same file. */
+  private val InferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.caseSensitive"
+  )
+
+  private final case class SchemaKey(path: String, files: Seq[(String, Long, Long)], confs: Seq[String])
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[SchemaKey, StructType]()
+
+  /** What `spark.read.parquet(path)` infers for `path`, inferred once per
+    * JVM. Inference is a Spark job that reads a footer (23 of the 102 jobs
+    * of a bench pass before this cache); a read with the cached schema runs
+    * none. The key is the qualified path, every data file's path, length
+    * and modification time (so a rewritten table misses), and the session
+    * values of [[InferenceConfs]] (so a session that reads the same file
+    * differently misses). */
+  private[graft] def parquetSchema(spark: SparkSession, path: String): StructType = {
+    val p  = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val qualified = fs.makeQualified(p)
+    // a missing path is not cached: the plain read fails as it always did
+    if (!fs.exists(qualified)) spark.read.parquet(path).schema
+    else {
+      val files = Seq.newBuilder[(String, Long, Long)]
+      val it    = fs.listFiles(qualified, true)
+      while (it.hasNext) {
+        val f = it.next()
+        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      val key = SchemaKey(qualified.toString, files.result(), InferenceConfs.map(spark.conf.get))
+      Option(schemas.get(key)).getOrElse {
+        val inferred = spark.read.parquet(path).schema
+        schemas.put(key, inferred)
+        inferred
+      }
     }
   }
 
@@ -93,10 +138,6 @@ object Tables {
     df
   }
 
-  /** events with `ts` normalized to a microsecond-precision TimestampType.
-    * Raw fixture column is TIMESTAMP(NANOS); `ts div 1000` truncates ns→µs
-    * (matching DuckDB's read of the same file). If a future fixture ships
-    * µs-precision instead, the column is already TimestampType and is kept. */
   /** Round-robin repartition to the session's shuffle parallelism — put
     * before compute-bound per-row stages (hashing, shingling, vector math).
     * The local fixtures are single-row-group parquet files, so a scan is ONE
@@ -121,6 +162,10 @@ object Tables {
   def sortSmall(df: DataFrame, cols: org.apache.spark.sql.Column*): DataFrame =
     df.coalesce(1).sortWithinPartitions(cols: _*)
 
+  /** events with `ts` normalized to a microsecond-precision TimestampType.
+    * Raw fixture column is TIMESTAMP(NANOS); `ts div 1000` truncates ns→µs
+    * (matching DuckDB's read of the same file). If a future fixture ships
+    * µs-precision instead, the column is already TimestampType and is kept. */
   def events(spark: SparkSession, sfDir: String): DataFrame = {
     val raw = read(spark, sfDir, "events")
     // NTZ normalization happens in read(); only the legacy nanosAsLong

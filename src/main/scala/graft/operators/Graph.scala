@@ -57,12 +57,13 @@ object Graph {
     * cluster sync). Size it to the expected component diameter: near-dup
     * clusters are diameter-≤2 almost always, so 3 rounds converge AND
     * prove the fixpoint in a single action. The convergence metric rides
-    * the cache-populating count via `observe` (a `CollectMetrics` node per
-    * round, no separate filtered-count job); a zero-change round is a
-    * fixpoint, so stopping on the last round's counter is exact. Every
-    * `checkpointEvery` actions the cached labels are `localCheckpoint`ed
-    * to truncate the join-on-join lineage — at 100 TB a deep cached-plan
-    * chain is a recompute bomb if an executor loses a cache block. */
+    * the cache-populating count via `observe` (one `CollectMetrics` node,
+    * on the action's last round, no separate filtered-count job); a
+    * zero-change round is a fixpoint, so stopping on the last round's
+    * counter is exact. Every `checkpointEvery` actions the cached labels
+    * are `localCheckpoint`ed to truncate the join-on-join lineage — at
+    * 100 TB a deep cached-plan chain is a recompute bomb if an executor
+    * loses a cache block. */
   def minLabelComponents(
       nodes: DataFrame,
       edgeList: DataFrame,
@@ -84,9 +85,9 @@ object Graph {
     val callerCached = edgeList.storageLevel != org.apache.spark.storage.StorageLevel.NONE
     val e            = if (callerCached) edgeList else edgeList.cache()
     val sym = e.unionByName(e.select($"dst".as("src"), $"src".as("dst")))
-    // one min-label round: neighborhood-min join + label update, with the
-    // changed-row count observed in-pass
-    def step(lbl: DataFrame, obs: Observation): DataFrame = {
+    // one min-label round: neighborhood-min join + label update; the last
+    // round of an action also observes its changed-row count in-pass
+    def step(lbl: DataFrame, obs: Option[Observation]): DataFrame = {
       // deliberately UNHINTED joins: both sides are cached, so AQE plans
       // each round from ACCURATE runtime sizes — broadcast while the label
       // table provably fits (fast on fixtures), shuffle-on-key once it
@@ -99,15 +100,14 @@ object Graph {
         .join(lbl, $"dst" === $"node")
         .groupBy($"src")
         .agg(min($"comp").as("nbr_comp"))
-      lbl
+      val next = lbl
         .join(nbrMin, $"node" === $"src", "left")
         .select(
           $"node",
           least($"comp", coalesce($"nbr_comp", $"comp")).as("comp"),
           when($"nbr_comp" < $"comp", 1L).otherwise(0L).as("ch")
         )
-        .observe(obs, sum($"ch").as("changed"))
-        .select($"node", $"comp")
+      obs.fold(next)(o => next.observe(o, sum($"ch").as("changed"))).select($"node", $"comp")
     }
     def metric(obs: Observation): Long = obs.get("changed") match {
       case n: Number => n.longValue()
@@ -120,10 +120,12 @@ object Graph {
     val rounds     = math.max(roundsPerAction, 1)
     val maxActions = (maxIter + rounds - 1) / rounds
     while (changed > 0 && action < maxActions) {
-      val obss = (1 to rounds).map(r => Observation(s"cc_a${action}_r$r"))
-      val next = obss.foldLeft(labels)((lbl, obs) => step(lbl, obs)).cache()
-      next.count() // the action: fills cache + every round's observation
-      changed = metric(obss.last)
+      val obs  = Observation(s"cc_a$action")
+      val next = (1 to rounds)
+        .foldLeft(labels)((lbl, r) => step(lbl, if (r == rounds) Some(obs) else None))
+        .cache()
+      next.count() // the action: fills the cache + the last round's observation
+      changed = metric(obs)
       val prev = labels
       labels = next
       prev.unpersist()
@@ -163,17 +165,6 @@ object Graph {
     }
   }
 
-  /** Diameter-adaptive components: probe with [[minLabelComponents]] for a
-    * fixed round budget (near-dup clusters are diameter-≤2 almost always,
-    * so the probe both converges and proves the fixpoint in one or two
-    * actions), and on non-convergence — a pathological corpus such as a
-    * chain of paraphrase edits — switch to [[twoPhaseComponents]], whose
-    * O(log² n) rounds are diameter-free. The probe's wasted work is
-    * bounded by `probeRounds` cheap passes over the (small) pair subgraph;
-    * the alternative — always running two-phase — pays its higher
-    * per-round constant (two half-rounds, distinct()) on the 99% case.
-    * Callers should cache `edgeList` when it is an expensive plan: both
-    * attempts then share the one materialization. */
   /** Driver fast-path budget for [[autoComponents]] (r20): a MATERIALIZED
     * pair table at or under this many edges is solved with an in-memory
     * union-find instead of the iterative DataFrame loop. Why: each loop
@@ -190,6 +181,17 @@ object Graph {
     * cached/checkpointed, so the count is one metadata-cheap job). */
   private[graft] val CcDriverEdgeBudget = 2000000L
 
+  /** Diameter-adaptive components: probe with [[minLabelComponents]] for a
+    * fixed round budget (near-dup clusters are diameter-≤2 almost always,
+    * so the probe both converges and proves the fixpoint in one or two
+    * actions), and on non-convergence — a pathological corpus such as a
+    * chain of paraphrase edits — switch to [[twoPhaseComponents]], whose
+    * O(log² n) rounds are diameter-free. The probe's wasted work is
+    * bounded by `probeRounds` cheap passes over the (small) pair subgraph;
+    * the alternative — always running two-phase — pays its higher
+    * per-round constant (two half-rounds, distinct()) on the 99% case.
+    * Callers should cache `edgeList` when it is an expensive plan: both
+    * attempts then share the one materialization. */
   def autoComponents(
       nodes: DataFrame,
       edgeList: DataFrame,

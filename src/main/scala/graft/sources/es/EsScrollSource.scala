@@ -1334,11 +1334,12 @@ private[es] case class EsCursor(last: Long) extends StreamOffset {
   *     at most `maxIdsPerBatch` cursor values per epoch (admission
   *     control, the scroll-page analog).
   *   - Epoch (start, end] compiles to a `range` clause ANDed onto the base
-  *     query; each of the N slices drives an independent PIT +
-  *     search_after read of that range — the same executor fan-out as the
-  *     batch path, per epoch.
+  *     query; each of the N slices of each search target drives an
+  *     independent PIT + search_after read of that range — the same
+  *     executor fan-out as the batch path, per epoch.
   *   - Index patterns resolve ONCE at stream construction (the same
-  *     `_cat/indices` discovery as the batch path); the resolved set is
+  *     `_cat/indices` discovery and request-line packing as the batch
+  *     path, [[EsScrollSource.searchTargets]]); the resolved set is
   *     searched multi-index per epoch. Indices created after the stream
   *     starts join on the next restart — the cursor lives in the
   *     checkpoint, so a restart is cheap and loses nothing.
@@ -1365,22 +1366,27 @@ private class EsTailStream(
   private val mapper = new ObjectMapper
   @volatile private var snapshotMax: Option[Long] = None // set by AvailableNow
 
-  /** A wildcard pattern resolved to the concrete comma-joined index list —
-    * without this, a literal `events-*` path would 400 (and per-epoch
-    * cursor admission would be meaningless across unknown indices). */
-  private val resolvedIndex: String = {
-    val names = EsScrollSource.resolveIndices(conn, index)
-    require(names.nonEmpty, s"es tail: index pattern '$index' matched no indices")
-    names.mkString(",")
+  /** A wildcard pattern resolved to concrete comma-joined index lists, one
+    * per [[EsScrollSource.searchTargets]] target so every request line
+    * stays within ES's limit — without this, a literal `events-*` path
+    * would 400 (and per-epoch cursor admission would be meaningless across
+    * unknown indices). */
+  private val targets: Seq[String] = {
+    val ts = EsScrollSource.searchTargets(conn, index, Array.empty, "")
+    require(ts.nonEmpty, s"es tail: index pattern '$index' matched no indices")
+    ts
   }
 
-  /** Current server-side max of the cursor field (−1 on an empty index):
-    * one aggregation request, zero documents over the wire. */
+  /** Current server-side max of the cursor field over every target (−1
+    * when all are empty): one aggregation request per target, zero
+    * documents over the wire. */
   private def serverMax(): Long = {
     val body = s"""{"size":0,"query":$queryJson,"aggs":{"m":{"max":{"field":"$cursorField"}}}}"""
-    val v = mapper.readTree(EsScrollSource.post(conn, s"/$resolvedIndex/_search", body))
-      .path("aggregations").path("m").path("value")
-    if (v.isNumber) v.asLong() else -1L
+    targets.map { t =>
+      val v = mapper.readTree(EsScrollSource.post(conn, s"/$t/_search", body))
+        .path("aggregations").path("m").path("value")
+      if (v.isNumber) v.asLong() else -1L
+    }.max
   }
 
   override def prepareForTriggerAvailableNow(): Unit = snapshotMax = Some(serverMax())
@@ -1415,10 +1421,9 @@ private class EsTailStream(
     val ranged =
       s"""{"bool":{"must":[$queryJson,{"range":{"$cursorField":{"gt":$s,"lte":$e}}}]}}"""
     val n = math.max(1, slices)
-    (0 until n).map { i =>
-      EsSlicePartition(i, n, conn, resolvedIndex, ranged, pageSize, scroll,
-        required.json, -1, "search_after"): InputPartition
-    }.toArray
+    (for (t <- targets; i <- 0 until n)
+      yield EsSlicePartition(i, n, conn, t, ranged, pageSize, scroll,
+        required.json, -1, "search_after"): InputPartition).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

@@ -52,16 +52,17 @@ object Streaming {
 
   /** Streaming entry: replay the events table as a file stream (one file =
     * one micro-batch analog of the reference's daily indices). The file
-    * source needs a directory + the RAW schema (ts is a nanos long on disk);
-    * the same ns→µs normalization as [[Tables.events]] is applied on top. */
+    * source needs a directory + the RAW schema (ts is a nanos long on disk),
+    * taken from [[Tables.parquetSchema]]'s cache; the same ns→µs
+    * normalization as [[Tables.events]] is applied on top. */
   def replayStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
+    val raw = Tables.parquetSchema(spark, s"$sfDir/events.parquet")
     val stream = spark.readStream
-      .schema(raw.schema)
+      .schema(raw)
       .option("pathGlobFilter", "events.parquet")
       .option("maxFilesPerTrigger", 1)
       .parquet(sfDir)
-    raw.schema("ts").dataType match {
+    raw("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         stream.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
       case _ => stream

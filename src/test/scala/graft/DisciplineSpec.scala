@@ -149,6 +149,14 @@ class DisciplineSpec extends AnyFunSuite {
     assert(sites.isEmpty, s"inline Files.walk — use ParquetSink.deleteRecursively (or allowlist a read-only walk):\n${sites.mkString("\n")}")
   }
 
+  test("every fixture table read goes through Tables") {
+    // Tables fixes the fixture's type quirks in one place and infers each
+    // table's schema once per JVM; a direct read of a fixture file pays
+    // the inference job again on every call
+    val sites = hits("""\.parquet\(s"\$\{?sfDir\}?/""")
+    assert(sites.isEmpty, s"fixture read outside Tables:\n${sites.mkString("\n")}")
+  }
+
   test("operators read no environment variables") {
     // an operator's result and plan depend on its inputs and the session
     // conf only: a sys.env read is a hidden option that no test, oracle or

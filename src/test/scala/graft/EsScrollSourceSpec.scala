@@ -924,12 +924,15 @@ class EsScrollSourceSpec extends SparkSpec {
     }
   }
 
+  /** The events with event i on day i mod 300 after 2023-01-01: 300 daily
+    * indices, whose names joined (5.4 KB) overflow one request line. */
+  private def overThreeHundredDays(): DataFrame =
+    events.withColumn("ts", timestamp_seconds(
+      lit(1672531200L) + pmod(col("event_id"), lit(300)) * 86400 + pmod(col("event_id"), lit(3600)))).cache()
+
   test("~300 day indices pack into request lines of at most 4 KB; reads equal the source rows") {
     import spark.implicits._
-    // event i lands on day i mod 300 after 2023-01-01: 300 daily indices,
-    // whose names joined (5.4 KB) overflow one request line
-    val spread = events.withColumn("ts", timestamp_seconds(
-      lit(1672531200L) + pmod($"event_id", lit(300)) * 86400 + pmod($"event_id", lit(3600)))).cache()
+    val spread = overThreeHundredDays()
     val srv = EsStubServer.fromDayPartitionedDataFrame(spread, "events")
     srv.start()
     try {
@@ -954,6 +957,35 @@ class EsScrollSourceSpec extends SparkSpec {
         s"longest request line ${srv.longestRequestLine.get()} bytes")
     } finally {
       srv.stop()
+      spread.unpersist()
+    }
+  }
+
+  test("a streaming tail over ~300 day indices keeps request lines within 4 KB and drains every row") {
+    val spread = overThreeHundredDays()
+    val srv    = EsStubServer.fromDayPartitionedDataFrame(spread, "events")
+    srv.start()
+    val ckpt = java.nio.file.Files.createTempDirectory("es_tail_wide").toString
+    val name = s"es_tail_wide_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+    try {
+      val q = spark.readStream
+        .format("graft.sources.es.EsScrollSource")
+        .schema(spread.schema)
+        .option("url", srv.url)
+        .option("index", "events-*")
+        .option("slices", 2)
+        .option("cursorField", "event_id")
+        .option("maxIdsPerBatch", 400)
+        .load()
+        .writeStream.format("memory").queryName(name)
+        .option("checkpointLocation", ckpt).start()
+      try q.processAllAvailable() finally q.stop()
+      assert(bag(spark.table(name)) === bag(spread))
+      assert(srv.longestRequestLine.get() <= 4096,
+        s"longest request line ${srv.longestRequestLine.get()} bytes")
+    } finally {
+      srv.stop()
+      spark.catalog.dropTempView(name)
       spread.unpersist()
     }
   }

@@ -70,6 +70,42 @@ class GraphSpec extends SparkSpec {
       "CC loop joins must be planned adaptively (runtime sizes), not statically")
   }
 
+  test("each label-loop action observes only its last round: one CollectMetrics per action") {
+    import org.apache.spark.sql.execution.{CollectMetricsExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import spark.implicits._
+    val nodes = (1L to 10L).toDF("node")
+    val edges = (1L until 10L).map(i => (i, i + 1)).toDF("src", "dst")
+    val marker = s"graph_spec_marker_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+    val counts = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val seen   = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        if (qe.analyzed.output.exists(_.name == marker)) seen.countDown()
+        else if (f == "count") { counts.add(qe.executedPlan); () }
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val comp = Graph.minLabelComponents(nodes, edges, roundsPerAction = 3).as[(Long, Long)].collect().toMap
+      assert(comp === (1L to 10L).map(_ -> 1L).toMap)
+      spark.range(1).toDF(marker).collect()
+      assert(seen.await(60, java.util.concurrent.TimeUnit.SECONDS), "the marker query never reached the listener")
+    } finally spark.listenerManager.unregister(listener)
+    // each count fills the cache of the action's labels: the plan it runs
+    // is that cached relation's plan, whose cached inputs (the previous
+    // labels) were computed by earlier actions
+    object Plans extends AdaptiveSparkPlanHelper
+    val actions = counts.toArray(Array.empty[SparkPlan]).toSeq.map { p =>
+      Plans.collect(p) { case s: InMemoryTableScanExec => s.relation.cachedPlan }
+        .map(Plans.collect(_) { case m: CollectMetricsExec => m }.size).sum
+    }
+    // 9 rounds to reach the tail + 1 zero-change round at 3 per action
+    assert(actions.size === 4, s"count actions: $actions")
+    assert(actions.forall(_ == 1), s"CollectMetrics nodes per action: $actions")
+  }
+
   test("two-phase components equal min-label components on the hand graph") {
     import spark.implicits._
     val nodes = Seq(1L, 2L, 3L, 4L, 5L, 6L, 7L).toDF("node")

@@ -18,7 +18,8 @@ class SessionSpec extends AnyFunSuite {
         "spark.sql.extensions"                        -> "graft.plans.GraftExtensions",
         "spark.ui.enabled"                            -> "false",
         "spark.sql.shuffle.partitions"                -> cpus,
-        "spark.io.compression.codec"                  -> "lz4"
+        "spark.io.compression.codec"                  -> "lz4",
+        "spark.sql.codegen.cache.maxEntries"          -> "4096"
       )
     )
     assert(Session.confs.map(_._1).distinct.size == Session.confs.size, "a key set twice")
