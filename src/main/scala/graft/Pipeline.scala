@@ -129,7 +129,9 @@ object Pipeline {
     // the totals side prunes to (ts) with the same pushed filters — the
     // dead-letter count costs a metadata-cheap scan, not a decode. Every
     // exported day has window rows by construction, so the left join from
-    // the totals side covers both all-good and all-bad days.
+    // the totals side covers both all-good and all-bad days. The join is
+    // null-safe: without a window bound null-ts rows are exported too,
+    // under the null `day` partition, and must match the null totals row.
     val exported = spark.read
       .parquet(s"$outDir/data")
       .groupBy($"day")
@@ -138,9 +140,9 @@ object Pipeline {
       .groupBy(to_date($"ts").as("day"))
       .agg(count(lit(1)).as("n_win"))
     totals
-      .join(exported, Seq("day"), "left")
+      .join(exported, totals("day") <=> exported("day"), "left")
       .select(
-        $"day",
+        totals("day"),
         coalesce($"n_rows", lit(0L)).as("n_rows"),
         ($"n_win" - coalesce($"n_rows", lit(0L))).as("n_dead")
       )

@@ -316,15 +316,16 @@ object Probe {
       return
     }
     if (which == "scalecc") {
-      // Engine-only scaling curve for the connected-components family
-      // (q94/q122 shapes) on synthetic graphs straight from range():
+      // Engine-only scaling curve for twoPhaseComponents on the two
+      // connected-components shapes (q94/q122), synthetic graphs straight
+      // from range():
       //  - CHAIN: one path through all n nodes — worst-case diameter, the
       //    q122 shape; twoPhaseComponents must converge in O(log n) rounds
       //    (round count may grow only logarithmically with n — a
       //    diameter-bound regression would blow the round budget).
       //  - CLUSTER: stars of 10 consecutive nodes — the bounded-diameter
-      //    99% case, the q94 shape; minLabelComponents' executed rounds
-      //    must stay CONSTANT across sizes.
+      //    99% case, the q94 shape; the executed rounds must stay
+      //    CONSTANT across sizes.
       // Tripwires (exit 1): super-linear time (>5x per 4x data step),
       // chain round growth >2 per 4x step, cluster rounds varying at all,
       // or wrong component counts.
@@ -339,7 +340,7 @@ object Probe {
         df.agg(count_distinct($"comp")).head().getLong(0)
       // warm: JIT + codegen at the smallest size, untimed
       nComp(Graph.twoPhaseComponents(nodesOf(25000), chainEdges(25000)))
-      nComp(Graph.minLabelComponents(nodesOf(25000), clusterEdges(25000)))
+      nComp(Graph.twoPhaseComponents(nodesOf(25000), clusterEdges(25000)))
       var ok = true
       val steps = Seq(25000L, 100000L, 400000L).map { n =>
         var rCh = 0
@@ -348,7 +349,7 @@ object Probe {
         val sCh = (System.nanoTime() - t0) / 1e9
         var rCl = 0
         val t1  = System.nanoTime()
-        val cCl = nComp(Graph.minLabelComponents(nodesOf(n), clusterEdges(n), onDone = rCl = _))
+        val cCl = nComp(Graph.twoPhaseComponents(nodesOf(n), clusterEdges(n), onDone = rCl = _))
         val sCl = (System.nanoTime() - t1) / 1e9
         println(f"[scalecc] n=$n%7d chain: comps=$cCh rounds=$rCh time=$sCh%7.2f s | cluster: comps=$cCl rounds=$rCl time=$sCl%7.2f s")
         if (cCh != 1L) { println(s"[scalecc] VIOLATION chain must be 1 component, got $cCh"); ok = false }

@@ -8,12 +8,15 @@ import org.apache.hadoop.fs.Path
 /** Readers for the driver-generated testdata tables (TESTDATA.md).
   *
   * All queries go through these so that type quirks are fixed in exactly one
-  * place. The interesting one is `events.ts`: the fixture stores parquet
-  * TIMESTAMP(NANOS), which Spark has no native type for. With
-  * `spark.sql.legacy.parquet.nanosAsLong=true` (set in [[Session]] / Verify /
-  * Bench) the column loads as nanosecond epoch LongType; we truncate to
-  * microseconds — exactly what DuckDB does when it reads the same file — so
-  * both engines see identical timestamp values.
+  * place. Every fixture (the sf0.001/0.01/0.1 testdata and
+  * `bench/fixture/sf0.01`) stores its timestamps as `timestamp[us]`
+  * (`isAdjustedToUTC=false`), which [[read]] hands DuckDB's values for.
+  * A TIMESTAMP(NANOS) file is the other case: Spark has no native type for
+  * it, and with `spark.sql.legacy.parquet.nanosAsLong=true` (set in
+  * [[Session.readConfs]]) the column loads as nanosecond epoch LongType,
+  * which [[events]] truncates to microseconds — exactly what DuckDB does
+  * when it reads such a file. No fixture takes that branch; `TablesSpec`'s
+  * hand-written NANOS file covers it.
   */
 object Tables {
 
@@ -163,13 +166,15 @@ object Tables {
     df.coalesce(1).sortWithinPartitions(cols: _*)
 
   /** events with `ts` normalized to a microsecond-precision TimestampType.
-    * Raw fixture column is TIMESTAMP(NANOS); `ts div 1000` truncates ns→µs
-    * (matching DuckDB's read of the same file). If a future fixture ships
-    * µs-precision instead, the column is already TimestampType and is kept. */
+    * Every fixture stores `timestamp[us]`, which loads as TimestampType and
+    * is kept. A TIMESTAMP(NANOS) file loads as a nanos long under
+    * `nanosAsLong`, and `ts div 1000` truncates it ns→µs (matching DuckDB's
+    * read of the same file); `TablesSpec`'s hand-written file covers that
+    * branch. */
   def events(spark: SparkSession, sfDir: String): DataFrame = {
     val raw = read(spark, sfDir, "events")
     // NTZ normalization happens in read(); only the legacy nanosAsLong
-    // (ns-precision fixture) path still needs the ns→µs truncation here.
+    // (ns-precision file) path still needs the ns→µs truncation here.
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))

@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * one key shuffle — the Pregel/Lloyd plan GraphX and MLlib execute. The
   * driver only coordinates the constant-bounded loop; no per-row data ever
   * lands on it. At 100 TB, add `localCheckpoint` every few iterations to
-  * truncate lineage (same note as [[Graph.minLabelComponents]]).
+  * truncate lineage (the `CheckpointEvery` cadence below).
   */
 object Clustering {
 
@@ -67,9 +67,8 @@ object Clustering {
     * exercising the full assign/update cycle; production runs loop the same
     * two operators to convergence. */
   /** Lineage-truncation cadence for the iterative loops below: every
-    * CheckpointEvery rounds the loop state is localCheckpointed, exactly
-    * the [[Graph.minLabelComponents]] pattern — without it an
-    * adaptive-round caller rebuilds a plan tree that grows by one
+    * CheckpointEvery rounds the loop state is localCheckpointed — without
+    * it an adaptive-round caller rebuilds a plan tree that grows by one
     * join+agg PER ROUND and eventually stalls the optimizer (the lineage
     * bomb). The final round is exempt (the consumer's action materializes
     * it anyway). At the default fixed round counts (2 and 3) the cadence

@@ -1595,7 +1595,7 @@ object Dedup {
 
   /** The dedup ENDGAME — the composition a real pipeline actually runs to
     * shrink a corpus: near-dup pair generation (MinHash+LSH, [[minhashLshPairs]])
-    * → connected components over the pair graph ([[Graph.minLabelComponents]],
+    * → connected components over the pair graph ([[Graph.autoComponents]],
     * duplicate CLUSTERS, not just pairs — transitivity matters: A≈B, B≈C
     * dedups A,B,C together even when A,C never paired) → survivor election
     * (min doc_id per component = the component label itself) → the corpus
@@ -1603,26 +1603,28 @@ object Dedup {
     *
     * Scale shape: one shuffle per stage, and the ITERATIVE stage runs on
     * the duplicate SUBGRAPH only — docs that appear in no pair are their
-    * own singleton component by construction, so label propagation is over
-    * the pair endpoints (cost ∝ duplicate rate, not corpus size; at a few
-    * percent duplication that is a 10-100× smaller loop than propagating
-    * the whole corpus). The CC loop's joins are planned adaptively from
-    * runtime cache stats (see [[Graph.minLabelComponents]]) — the pair set
-    * is only ever broadcast when AQE PROVES it small, never on a static
-    * guess; survivor election reuses the component labels
-    * (survivor == comp needs no extra aggregation); the final corpus
-    * anti-join/size-join are plain equi-shuffles on doc_id. */
+    * own singleton component by construction, so components are taken
+    * over the pair endpoints (cost ∝ duplicate rate, not corpus size; at a
+    * few percent duplication that is a 10-100× smaller graph than the
+    * whole corpus). An in-budget pair table is solved on the driver by
+    * union-find; a larger one runs the two-phase rounds, whose joins AQE
+    * plans from runtime sizes — the pair set is only ever broadcast when
+    * AQE PROVES it small, never on a static guess; survivor election
+    * reuses the component labels (survivor == comp needs no extra
+    * aggregation); the final corpus anti-join/size-join are plain
+    * equi-shuffles on doc_id. */
   def dedupEndgame(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val corpus = docsWithDups(spark, sfDir)
     // localCheckpoint the pair set (r19; was cache): both the endpoint
-    // node list and the CC loop's edge reference it, so minhash runs once
-    // EITHER way — but with cache() every loop action still re-ANALYZES
-    // the full minhash logical tree on the driver (execution hits memory,
-    // planning does not), and that planning time dominated the loop. The
-    // eager checkpoint truncates the lineage to a scan (q179 measured
-    // 17.7 -> 5.7 s from the same change); blocks are freed by the
-    // context cleaner once the lineage-free comp result drops them.
+    // node list and the CC edges reference it, so minhash runs once
+    // EITHER way — but with cache() every CC round still re-ANALYZES the
+    // full minhash logical tree on the driver (execution hits memory,
+    // planning does not), and that planning time dominated the rounds.
+    // The eager checkpoint truncates the lineage to a scan (q179 measured
+    // 17.7 -> 5.7 s from the same change) and makes the pair table
+    // eligible for autoComponents' driver union-find; blocks are freed by
+    // the context cleaner once the lineage-free comp result drops them.
     val pairs = minhashPairsUnsorted(spark, sfDir)
       .select($"id1".as("src"), $"id2".as("dst"))
       .localCheckpoint(true)
@@ -1630,12 +1632,7 @@ object Dedup {
       .select($"src".as("node"))
       .unionByName(pairs.select($"dst".as("node")))
       .distinct()
-    // 3 rounds per action: near-dup clusters are diameter-<=2 almost
-    // always, so one action both converges and proves the fixpoint; a
-    // pathological chain-of-edits corpus trips the probe's convergence
-    // guard and reroutes through the diameter-free two-phase algorithm
-    // (pairs is cached above, so both attempts share one minhash run)
-    val comp = Graph.autoComponents(pnodes, pairs, roundsPerAction = 3)
+    val comp = Graph.autoComponents(pnodes, pairs)
     val sizes = comp.groupBy($"comp").agg(count(lit(1)).as("cluster_size"))
     val nonSurvivors = comp.filter($"node" =!= $"comp").select($"node".as("doc_id"))
     corpus

@@ -675,9 +675,9 @@ object Multimodal {
     *      diversity, not corpus size; two distinct hashes differ in ≥1
     *      bit, so the exact-dup class never re-enters);
     *   3. connected components over the representative pair graph (the
-    *      q120 endgame discipline, [[Graph.autoComponents]]: min-label
-    *      with the two-phase O(log² n) fallback), electing the min-id
-    *      cluster survivor;
+    *      q120 endgame discipline, [[Graph.autoComponents]]: driver
+    *      union-find in budget, two-phase O(log² n) rounds beyond),
+    *      electing the min-id cluster survivor;
     *   4. every image inherits its verdict through its hash group — one
     *      row per image: exact representative, near-dup cluster id,
     *      cluster image mass, and the keep flag.

@@ -52,9 +52,12 @@ object Streaming {
 
   /** Streaming entry: replay the events table as a file stream (one file =
     * one micro-batch analog of the reference's daily indices). The file
-    * source needs a directory + the RAW schema (ts is a nanos long on disk),
-    * taken from [[Tables.parquetSchema]]'s cache; the same ns→µs
-    * normalization as [[Tables.events]] is applied on top. */
+    * source needs a directory + the RAW schema, taken from
+    * [[Tables.parquetSchema]]'s cache. Every fixture stores `ts` as
+    * `timestamp[us]` and streams as is; a TIMESTAMP(NANOS) file loads as a
+    * nanos long under `nanosAsLong` and gets the same ns→µs truncation as
+    * [[Tables.events]] (whose copy of the branch `TablesSpec`'s
+    * hand-written NANOS file covers). */
   def replayStream(spark: SparkSession, sfDir: String): DataFrame = {
     val raw = Tables.parquetSchema(spark, s"$sfDir/events.parquet")
     val stream = spark.readStream

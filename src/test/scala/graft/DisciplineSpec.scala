@@ -164,4 +164,21 @@ class DisciplineSpec extends AnyFunSuite {
     val sites = hits("""sys\.env|System\.getenv""").filter(_.startsWith("operators/"))
     assert(sites.isEmpty, s"environment read in an operator:\n${sites.mkString("\n")}")
   }
+
+  test("tools/run_probe.sh opens the same JDK packages as build.sbt") {
+    // the launcher copies build.sbt's forked javaOptions; a package added
+    // to one list and not the other fails only at run time, in whichever
+    // Spark code path first reflects into it
+    def read(p: String) = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)), "UTF-8")
+    val sbtList = """(?s)val jdk17AddOpens = Seq\((.*?)\)""".r
+      .findFirstMatchIn(read("build.sbt")).map(_.group(1)).getOrElse(fail("no jdk17AddOpens in build.sbt"))
+    val fromSbt = """"java\.base/([\w.]+)"""".r.findAllMatchIn(sbtList).map(_.group(1)).toSeq
+    val script  = read("tools/run_probe.sh")
+    val shList = """(?s)for p in (.*?); do""".r
+      .findFirstMatchIn(script).map(_.group(1)).getOrElse(fail("no package loop in tools/run_probe.sh"))
+    val fromSh = shList.replace("\\\n", " ").split("\\s+").filter(_.nonEmpty).toSeq
+    assert(fromSbt.nonEmpty)
+    assert(fromSh === fromSbt)
+    assert(script.contains("--add-opens java.base/$p=ALL-UNNAMED"))
+  }
 }

@@ -50,6 +50,27 @@ class PipelineSpec extends SparkSpec {
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$out/schema.json")))
   }
 
+  test("without a window bound, null-ts rows are audited under the null day") {
+    import spark.implicits._
+    // every 10th purchase loses its ts, every 20th also its props: the
+    // null day holds exported rows and dead letters, and its audit row
+    // must count both (a plain equi-join on day never matches null)
+    val purchases = Tables.events(spark, sf).where($"event_type" === "purchase")
+    val ev = purchases
+      .withColumn("ts", when($"event_id" % 10 === 0, lit(null).cast("timestamp")).otherwise($"ts"))
+      .withColumn("props", when($"event_id" % 20 === 0, lit("not json")).otherwise($"props"))
+    val nullTs   = purchases.where($"event_id" % 10 === 0).count()
+    val nullDead = purchases.where($"event_id" % 20 === 0).count()
+    assert(nullTs > nullDead && nullDead > 0)
+    val out   = java.nio.file.Files.createTempDirectory("graft_pipe_null_ts").toString
+    val audit = Pipeline.exportEvents(ev, out, "purchase", None).collect()
+    val nullDay = audit.filter(_.isNullAt(0))
+    assert(nullDay.length === 1, audit.mkString(", "))
+    assert(nullDay.head.getAs[Long]("n_rows") === nullTs - nullDead)
+    assert(nullDay.head.getAs[Long]("n_dead") === nullDead)
+    assert(audit.map(r => r.getAs[Long]("n_rows") + r.getAs[Long]("n_dead")).sum === purchases.count())
+  }
+
   test("foreachBatch parquet sink appends each micro-batch") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
