@@ -1,25 +1,33 @@
 package graft
 
-import graft.sources.SchemaInfer
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sources.{AvroAsvc, SchemaInfer}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.ParquetReadOptions
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DateType, LongType, StructField, StructType}
 
 /** The reference's complete workflow, end-to-end and Spark-first
   * (Bootstrap.main → EsParquetWriter.call, SURVEY.md §3): resolve the recent
   * time window (O2), slice by one event type (O4, the rule_name analog),
   * infer the JSON props schema from samples (O5-O8), persist it beside the
   * output (O9), decode tolerantly with dead-letter isolation (O10-O11),
-  * export day-partitioned parquet (O12), and return the re-read audit counts
-  * (O14). Parallelism is Spark's task scheduling (O13) — the reference's
-  * thread pool has no analog here.
+  * export day-partitioned parquet (O12), and return the per-day audit
+  * counts (O14). Parallelism is Spark's task scheduling (O13) — the
+  * reference's thread pool has no analog here.
   *
   * Scale shape: one pruned scan → per-row decode (no shuffle) → partitioned
-  * write; the audit is a group-count over the committed files, verifying the
-  * round trip rather than trusting an in-flight counter. Over the ES
-  * connector only the write reads the window's documents: the schema
-  * sample's `orderBy(event_id).limit(100)` is a pushed top-N (one sorted
-  * search shipping 100 hits) and the audit's per-day window count a pushed
-  * `date_histogram` aggregation (zero hits).
+  * write. The audit reads the committed files' footers, verifying the
+  * round trip rather than trusting an in-flight counter: the row counts
+  * the Parquet footers of each `day=` directory record, against the
+  * window's per-day counts. Over the ES connector only the write reads the
+  * window's documents: the schema sample's `orderBy(event_id).limit(100)`
+  * is a pushed top-N (one sorted search shipping 100 hits) and the
+  * audit's per-day window count a pushed `date_histogram` aggregation
+  * (zero hits; one job when the window is one search target).
   */
 object Pipeline {
 
@@ -85,10 +93,18 @@ object Pipeline {
     // the whole export; with no such sample there is no .asvc to write
     // (and a stale one from an earlier export is removed).
     SchemaInfer.persist(propsSchema, s"$outDir/schema.json")
+    // A first object with a nested (object or array) value has no .asvc
+    // either: the writer renders the reference's flat primitive surface
+    // only, and a guessed rendering of kite's nested records could not be
+    // checked against the reference.
     val asvc = java.nio.file.Paths.get(s"$outDir/schema.asvc")
     sampleRows.find(isJsonObject) match {
-      case Some(first) => graft.sources.AvroAsvc.persist(eventType, first, asvc.toString)
-      case None        => java.nio.file.Files.deleteIfExists(asvc)
+      case Some(first) if AvroAsvc.renders(first) => AvroAsvc.persist(eventType, first, asvc.toString)
+      case first =>
+        if (first.isDefined)
+          System.err.println(s"[pipeline] '$eventType': the first sampled props object has a " +
+            "nested value, which the .asvc writer does not render; no schema.asvc is written")
+        java.nio.file.Files.deleteIfExists(asvc)
     }
 
     // O10-O11: tolerant decode, dead letters kept auditable. Same split
@@ -99,8 +115,9 @@ object Pipeline {
     // executor-local and non-fault-tolerant — the at-scale caveat in the
     // r19 ADVICE): the audit never needs the decoded rows, because the
     // window partitions EXACTLY into good ∪ bad, so per-day dead counts are
-    // per-day WINDOW totals minus the re-read exported counts — a ts-only
-    // column-pruned scan with the same pushed filters, no second from_json.
+    // per-day WINDOW totals minus the committed footers' row counts — a
+    // ts-only column-pruned scan with the same pushed filters, no second
+    // from_json.
     val corruptSt = org.apache.spark.sql.types.StructType
       .fromDDL(propsSchema.toDDL)
       .add("_corrupt", org.apache.spark.sql.types.StringType)
@@ -124,30 +141,63 @@ object Pipeline {
       .partitionBy("day")
       .parquet(s"$outDir/data")
 
-    // O14: audit = re-read counts joined with the per-day WINDOW totals.
-    // good/bad partition the window exactly, so n_dead = n_window − n_rows;
-    // the totals side prunes to (ts) with the same pushed filters — the
-    // dead-letter count costs a metadata-cheap scan, not a decode. Every
-    // exported day has window rows by construction, so the left join from
-    // the totals side covers both all-good and all-bad days. The join is
-    // null-safe: without a window bound null-ts rows are exported too,
-    // under the null `day` partition, and must match the null totals row.
-    val exported = spark.read
-      .parquet(s"$outDir/data")
-      .groupBy($"day")
-      .agg(count(lit(1)).as("n_rows"))
-    val totals = windowed
+    // O14: audit = the committed footers' row counts per day against the
+    // per-day WINDOW totals. good/bad partition the window exactly, so
+    // n_dead = n_window − n_rows; the totals prune to (ts) with the same
+    // pushed filters — the dead-letter count costs a metadata-cheap scan
+    // (over ES a pushed aggregation), not a decode. Every exported day has
+    // window rows by construction, so the totals' days cover both all-good
+    // and all-bad days (the latter have no directory: n_rows = 0). The
+    // null day matches null-safely (the `<=>` rule): without a window bound
+    // null-ts rows are exported too, under the default partition. The
+    // totals are one row per day in the window, so they are collected and
+    // the audit is a local frame: no read, join or sort job.
+    val exported = footerRowsByDay(spark, s"$outDir/data")
+    val audit = windowed
       .groupBy(to_date($"ts").as("day"))
       .agg(count(lit(1)).as("n_win"))
-    totals
-      .join(exported, totals("day") <=> exported("day"), "left")
-      .select(
-        totals("day"),
-        coalesce($"n_rows", lit(0L)).as("n_rows"),
-        ($"n_win" - coalesce($"n_rows", lit(0L))).as("n_dead")
-      )
-      // bounded output (one row per day inside the export window)
-      .transform(Tables.sortSmall(_, $"day"))
+      .collect()
+      .map { r =>
+        val day  = Option(r.getDate(0))
+        val rows = exported.getOrElse(day.map(_.toString), 0L)
+        Row(day.orNull, rows, r.getLong(1) - rows)
+      }
+      .sortBy(r => Option(r.getDate(0)).map(_.toLocalDate.toEpochDay)) // null day first
+    spark.createDataFrame(java.util.Arrays.asList(audit: _*), AuditSchema)
+  }
+
+  /** The audit's columns: a nullable day (the null day holds null-ts rows)
+    * and non-null counts. */
+  private val AuditSchema = StructType(Seq(
+    StructField("day", DateType),
+    StructField("n_rows", LongType, nullable = false),
+    StructField("n_dead", LongType, nullable = false)))
+
+  /** Rows per `day=` partition of a committed day-partitioned Parquet
+    * directory, summed from the file footers on the driver; the default
+    * (null) partition is keyed None. Files whose names start with `_` or
+    * `.` (`_SUCCESS`, checksums) are skipped, as Spark's reader skips them. */
+  private[graft] def footerRowsByDay(spark: SparkSession, dir: String): Map[Option[String], Long] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(dir)
+    val fs   = root.getFileSystem(conf)
+    def visible(st: FileStatus) = !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith(".")
+    // plain read options: open(file) without them builds Hadoop read
+    // options by copying the whole Configuration, ~10 ms per file
+    val opts = ParquetReadOptions.builder().build()
+    def footerRows(st: FileStatus): Long = {
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf), opts)
+      try reader.getRecordCount
+      finally reader.close()
+    }
+    fs.listStatus(root).iterator
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith("day="))
+      .map { st =>
+        val value = ExternalCatalogUtils.unescapePathName(st.getPath.getName.stripPrefix("day="))
+        val day   = Option(value).filter(_ != ExternalCatalogUtils.DEFAULT_PARTITION_NAME)
+        day -> fs.listStatus(st.getPath).iterator.filter(f => f.isFile && visible(f)).map(footerRows).sum
+      }
+      .toMap
   }
 
   private def isJsonObject(s: String): Boolean =

@@ -22,6 +22,15 @@ import org.apache.spark.sql.SparkSession
   *     (BASELINE.md "Codegen cache note"). The conf is static, and Spark
   *     sizes the JVM-wide cache once, from the first session's conf, so
   *     it lives here and not in [[readConfs]].
+  *   - `fs.file.impl` = [[NioLocalFileSystem]]: stock Hadoop forks
+  *     `/bin/chmod` for every permission it sets on a local file when
+  *     libhadoop is not loaded, and Spark's jars ship without it. Under JFR
+  *     an es_export call started 28 `chmod` processes (from the Parquet
+  *     writers and the commit protocol's job setup and commit) and a
+  *     four-pass query_mix run 542 (q80's export, and the first pass's
+  *     result files); with this entry both start none (BASELINE.md "Local
+  *     FS note"). Set on the SparkContext, so the driver and the local
+  *     executors share it.
   */
 object Session {
   def cpus: String =
@@ -48,7 +57,8 @@ object Session {
     "spark.ui.enabled"                   -> "false",
     "spark.sql.shuffle.partitions"       -> cpus,
     "spark.io.compression.codec"         -> "lz4",
-    "spark.sql.codegen.cache.maxEntries" -> "4096"
+    "spark.sql.codegen.cache.maxEntries" -> "4096",
+    "spark.hadoop.fs.file.impl"          -> classOf[NioLocalFileSystem].getName
   )
 
   def build(master: String = s"local[$cpus]", appName: String = "graft"): SparkSession = {

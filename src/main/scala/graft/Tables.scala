@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 
 /** Readers for the driver-generated testdata tables (TESTDATA.md).
   *
@@ -79,13 +79,14 @@ object Tables {
     // a missing path is not cached: the plain read fails as it always did
     if (!fs.exists(qualified)) spark.read.parquet(path).schema
     else {
-      val files = Seq.newBuilder[(String, Long, Long)]
-      val it    = fs.listFiles(qualified, true)
-      while (it.hasNext) {
-        val f = it.next()
-        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
-      }
-      val key = SchemaKey(qualified.toString, files.result(), InferenceConfs.map(spark.conf.get))
+      // listStatus, not listFiles: the LocatedFileStatus that listFiles
+      // builds loads each local file's permissions, which forks `ls -ld`
+      // per file when libhadoop is not loaded
+      def walk(st: FileStatus): Seq[(String, Long, Long)] =
+        if (st.isDirectory) fs.listStatus(st.getPath).toSeq.sortBy(_.getPath.toString).flatMap(walk)
+        else Seq((st.getPath.toString, st.getLen, st.getModificationTime))
+      val files = walk(fs.getFileStatus(qualified))
+      val key   = SchemaKey(qualified.toString, files, InferenceConfs.map(spark.conf.get))
       Option(schemas.get(key)).getOrElse {
         val inferred = spark.read.parquet(path).schema
         schemas.put(key, inferred)
@@ -152,7 +153,7 @@ object Tables {
 
   /** Total-order presentation sort for BOUNDED-cardinality outputs —
     * grouped aggregates over fixed domains (returnflag×linestatus,
-    * region×nation, order priorities, a ≤31-day audit window): at most a
+    * region×nation, order priorities, one row per day of a window): at most a
     * few hundred rows at ANY scale factor. A global `orderBy` plans a
     * range exchange whose RangePartitioner runs a separate sampling JOB
     * before the sort stage; for a handful of rows that is pure scheduling
@@ -172,13 +173,18 @@ object Tables {
     * read of the same file); `TablesSpec`'s hand-written file covers that
     * branch. */
   def events(spark: SparkSession, sfDir: String): DataFrame = {
-    val raw = read(spark, sfDir, "events")
     // NTZ normalization happens in read(); only the legacy nanosAsLong
     // (ns-precision file) path still needs the ns→µs truncation here.
-    raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case _ => raw
-    }
+    microsTs(read(spark, sfDir, "events"))
   }
+
+  /** `events` with a nanos-long `ts` (a TIMESTAMP(NANOS) file read under
+    * `nanosAsLong`) truncated to a µs TimestampType; any other `ts` is
+    * kept. The batch read ([[events]]) and the file replay
+    * (`Streaming.replayStream`) share it. */
+  private[graft] def microsTs(ev: DataFrame): DataFrame =
+    ev.schema("ts").dataType match {
+      case org.apache.spark.sql.types.LongType => ev.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+      case _                                   => ev
+    }
 }

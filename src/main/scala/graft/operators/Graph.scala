@@ -169,12 +169,18 @@ object Graph {
     // per-round plan CUT the logical tree grows 8^k — analysis alone
     // becomes exponential long before execution (caching breaks execution
     // lineage but not logical-plan growth). The checkpointed state is
-    // tiny: at most one star edge per non-root node. Old rounds'
-    // checkpoint blocks are released by the context cleaner once
-    // unreferenced.
+    // tiny: at most one star edge per non-root node. A round's checkpoint
+    // is released as soon as the next round has materialized from it (that
+    // round's own checkpoint cut the lineage), not left to the context
+    // cleaner, which unpersists only after a GC happens to collect the
+    // round's Dataset.
     def observedCheckpoint(df: DataFrame, obs: Observation): DataFrame =
       df.observe(obs, count(lit(1)).as("cnt"), bit_xor(xxhash64($"u", $"v")).as("cxor"))
         .localCheckpoint(true)
+    def release(checkpointed: DataFrame): Unit =
+      checkpointed.queryExecution.analyzed.collectFirst {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+      }.foreach(_.unpersist(blocking = false))
     def fp(obs: Observation): (Long, Long) = {
       def l(k: String): Long = obs.get(k) match {
         case n: Number => n.longValue()
@@ -192,8 +198,10 @@ object Graph {
     var prev  = (-1L, 0L)
     var round = 0
     while (cur != prev && round < maxRounds) {
-      val obs = Observation(s"cc2_r${round + 1}")
-      e = observedCheckpoint(smallStar(largeStar(e)), obs)
+      val obs  = Observation(s"cc2_r${round + 1}")
+      val next = observedCheckpoint(smallStar(largeStar(e)), obs)
+      release(e)
+      e = next
       prev = cur
       cur = fp(obs)
       round += 1

@@ -1,6 +1,7 @@
 package graft.sources
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import scala.jdk.CollectionConverters._
 
 /** Byte-format-exact Avro `.asvc` schema persistence — the reference's
   * on-disk schema artifact (Bootstrap.java:182-194), reproduced quirk for
@@ -44,6 +45,14 @@ object AvroAsvc {
       throw new IllegalArgumentException(
         s"asvc writer handles the reference's flat primitive surface; got ${node.getNodeType}"
       )
+
+  /** Whether [[fromSampleJson]] renders `sampleJson`: a JSON object whose
+    * values are all primitives or null. */
+  def renders(sampleJson: String): Boolean =
+    try {
+      val root = mapper.readTree(sampleJson)
+      root.isObject && !root.elements().asScala.exists(_.isContainerNode)
+    } catch { case _: Exception => false }
 
   /** One field of the rendered schema. `sampleLiteral` is the exact JSON
     * serialization of the sampled value (quotes included for strings). */

@@ -75,7 +75,8 @@ import scala.jdk.CollectionConverters._
   *     `composite` aggregation; a `CAST(timeField AS DATE)` key (Spark's
   *     `to_date(ts)` under the default ANSI mode) is a 1-day
   *     `date_histogram` source in the session time zone — a per-day count
-  *     ships zero documents.
+  *     ships zero documents. A read with one search target is pushed
+  *     whole (no final aggregate in Spark's plan).
   *   - **Tolerant decode**: missing fields → null, type mismatches → null
   *     (the reference's ExtendedJsonDecoder default-injection philosophy);
   *     a hit whose `_source` is not an object is skipped and counted, the
@@ -721,6 +722,13 @@ private class EsScanBuilder(
   private var topN: Array[SortOrder] = null // null = no top-N pushed; its limit is `limit`
   private var aggGroups: Array[EsGroupKey] = null // null = no aggregate pushed
 
+  /** The read's search targets ([[EsScrollSource.searchTargets]]),
+    * resolved at most once per builder: by [[supportCompletePushDown]]
+    * during planning, else by the built scan when it plans its partitions.
+    * Either way one action sends one `_cat/indices`. Filters are pushed
+    * before either can ask. */
+  private lazy val targets: Seq[String] = EsScrollSource.searchTargets(conn, index, pushed, timeField)
+
   override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
 
   /** Pushdown with per-mode exactness: in `term` mode every supported
@@ -804,22 +812,30 @@ private class EsScanBuilder(
     * SKIPS documents missing the group field, while Spark's groupBy emits
     * a null group); grand-total COUNT(*) uses `track_total_hits`. A key is
     * a plain column (`terms` source) or `CAST(timeField AS DATE)`
-    * (`date_histogram` source, see [[groupKey]]). Partial pushdown
-    * (supportCompletePushDown stays false): the scan emits exact
-    * (group, count) rows and Spark's final aggregate merges — a no-op over
-    * the single result partition, but keeps the plan correct if Spark ever
-    * splits the scan. Refused when a post-scan filter exists (phrase-mode
-    * string equality): the server would count analyzer-matched docs, not
-    * Spark-equal ones. */
+    * (`date_histogram` source, see [[groupKey]]). The scan reads one
+    * composite aggregation per search target. A read that resolves to
+    * exactly one target is pushed whole ([[supportCompletePushDown]]): its
+    * one partition holds every group once with its exact count, so Spark
+    * plans no final aggregate, no shuffle and no second job over it. A
+    * multi-target read is pushed partially: each target's partition holds
+    * that target's counts and Spark's final `sum(count)` merges them (a
+    * group spans targets when its documents do). Refused when a post-scan
+    * filter exists (phrase-mode string equality): the server would count
+    * analyzer-matched docs, not Spark-equal ones. */
   override def pushAggregation(agg: Aggregation): Boolean = {
-    val keys = agg.groupByExpressions.map(groupKey)
-    val ok = keys.forall(_.isDefined) &&
+    val ok = pushable(agg)
+    if (ok) aggGroups = agg.groupByExpressions.map(groupKey(_).get)
+    ok
+  }
+
+  override def supportCompletePushDown(agg: Aggregation): Boolean =
+    pushable(agg) && targets.size == 1
+
+  private def pushable(agg: Aggregation): Boolean =
+    agg.groupByExpressions.forall(groupKey(_).isDefined) &&
       agg.aggregateExpressions.length == 1 &&
       agg.aggregateExpressions.head.isInstanceOf[CountStar] &&
       limit.isEmpty && postScan.isEmpty
-    if (ok) aggGroups = keys.map(_.get)
-    ok
-  }
 
   /** A group key the server can bucket exactly as Spark groups. Spark
     * translates `to_date(ts)` to a V2 `CAST(ts AS DATE)` only under ANSI
@@ -848,29 +864,25 @@ private class EsScanBuilder(
         pushed.flatMap(EsScrollSource.stringEqFields).distinct.toSeq,
         keywordSuffix)
     val query = EsScrollSource.toEsQuery(pushed, stringEquality, keywordSuffix)
+    val resolve = () => targets
     if (aggGroups != null)
-      new EsAggScan(conn, index, pageSize, query, pushed, aggGroups, timeField, keywordSuffix)
+      new EsAggScan(conn, index, pageSize, query, pushed, aggGroups, resolve, keywordSuffix)
     else if (topN != null)
-      new EsTopNScan(conn, index, required, query, pushed, timeField,
+      new EsTopNScan(conn, index, required, query, pushed, resolve,
         sortJson, topN.mkString(", "), limit.get)
     else
       new EsScrollScan(conn, index, slices, pageSize, scroll, required, query,
-        pushed, limit, timeField, pagination, cursorField, maxIdsPerBatch)
+        pushed, limit, resolve, pagination, cursorField, maxIdsPerBatch)
   }
 }
 
 /** A batch scan over the search targets of
-  * [[EsScrollSource.searchTargets]], resolved once per scan: Spark may plan
-  * one scan's partitions more than once, and each action builds a new scan,
-  * so one action sends one `_cat/indices` and plans over one index list. */
-private abstract class EsTargetScan(
-    conn: EsConn,
-    index: String,
-    pushed: Array[Filter],
-    timeField: String
-) extends Scan with Batch {
-  protected lazy val targets: Seq[String] =
-    EsScrollSource.searchTargets(conn, index, pushed, timeField)
+  * [[EsScrollSource.searchTargets]], which its builder resolves at most
+  * once: Spark may plan one scan's partitions more than once, and each
+  * action builds a new scan, so one action sends one `_cat/indices` and
+  * plans over one index list. */
+private abstract class EsTargetScan(resolveTargets: () => Seq[String]) extends Scan with Batch {
+  protected def targets: Seq[String] = resolveTargets()
   override def toBatch: Batch = this
 }
 
@@ -894,9 +906,9 @@ private class EsAggScan(
     queryJson: String,
     pushed: Array[Filter],
     groups: Array[EsGroupKey],
-    timeField: String,
+    resolveTargets: () => Seq[String],
     keywordSuffix: String
-) extends EsTargetScan(conn, index, pushed, timeField) {
+) extends EsTargetScan(resolveTargets) {
   override def readSchema(): StructType =
     StructType(groups.map(g => StructField(g.name, g.dataType)) :+
       StructField("count(*)", LongType, nullable = false))
@@ -905,8 +917,8 @@ private class EsAggScan(
       (if (groups.nonEmpty) s" GROUP BY ${groups.map(_.name).mkString(", ")}" else "") +
       s"], PushedEsQuery: $queryJson, PushedFilters: [${pushed.mkString(", ")}]"
   /** One multi-index composite search per target: the server merges
-    * buckets across a target's indices, and Spark's final `sum(count)`
-    * merges the targets (the push is partial). */
+    * buckets across a target's indices. One target's partition is the
+    * whole answer; Spark's final `sum(count)` merges several. */
   override def planInputPartitions(): Array[InputPartition] =
     targets.map(t =>
       EsAggPartition(conn, t, queryJson, pageSize, groups, keywordSuffix): InputPartition).toArray
@@ -1025,11 +1037,11 @@ private class EsTopNScan(
     required: StructType,
     queryJson: String,
     pushed: Array[Filter],
-    timeField: String,
+    resolveTargets: () => Seq[String],
     sortJson: String,
     ordersDesc: String,
     n: Int
-) extends EsTargetScan(conn, index, pushed, timeField) {
+) extends EsTargetScan(resolveTargets) {
   override def readSchema(): StructType = required
   override def description(): String =
     s"es-scroll index=$index PushedTopN: [$ordersDesc] LIMIT $n, PushedEsQuery: $queryJson, " +
@@ -1114,11 +1126,11 @@ private class EsScrollScan(
     queryJson: String,
     pushed: Array[Filter],
     limit: Option[Int],
-    timeField: String,
+    resolveTargets: () => Seq[String],
     pagination: String,
     cursorField: String = "event_id",
     maxIdsPerBatch: Long = 1000L
-) extends EsTargetScan(conn, index, pushed, timeField) {
+) extends EsTargetScan(resolveTargets) {
   override def readSchema(): StructType = required
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
     new EsTailStream(conn, index, slices, pageSize, scroll, required,

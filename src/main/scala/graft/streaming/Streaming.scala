@@ -55,22 +55,15 @@ object Streaming {
     * source needs a directory + the RAW schema, taken from
     * [[Tables.parquetSchema]]'s cache. Every fixture stores `ts` as
     * `timestamp[us]` and streams as is; a TIMESTAMP(NANOS) file loads as a
-    * nanos long under `nanosAsLong` and gets the same ns→µs truncation as
-    * [[Tables.events]] (whose copy of the branch `TablesSpec`'s
-    * hand-written NANOS file covers). */
-  def replayStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val raw = Tables.parquetSchema(spark, s"$sfDir/events.parquet")
-    val stream = spark.readStream
-      .schema(raw)
+    * nanos long under `nanosAsLong` and gets [[Tables.events]]' ns→µs
+    * truncation ([[Tables.microsTs]]; `TablesSpec` streams its hand-written
+    * NANOS file through both). */
+  def replayStream(spark: SparkSession, sfDir: String): DataFrame =
+    Tables.microsTs(spark.readStream
+      .schema(Tables.parquetSchema(spark, s"$sfDir/events.parquet"))
       .option("pathGlobFilter", "events.parquet")
       .option("maxFilesPerTrigger", 1)
-      .parquet(sfDir)
-    raw("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        stream.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case _ => stream
-    }
-  }
+      .parquet(sfDir))
 
   /** Watermarked variant for unbounded sources (late data beyond 10 minutes
     * dropped; state for closed windows evicted). */

@@ -60,7 +60,7 @@ class DisciplineSpec extends AnyFunSuite {
     assert(fixed.isEmpty, s"fixed-name temp views (use the UUID sfx pattern):\n${fixed.mkString("\n")}")
   }
 
-  test("driver-side collect() stays confined to the thirteen audited sites") {
+  test("driver-side collect() stays confined to the fourteen audited sites") {
     // .collect() of row DATA on the driver is the anti-distributed smell;
     // the audited sites are CLI display (x4: the parquet-mode menu+audit
     // pair and the --es wire-mode menu+audit pair — the wire menu is a
@@ -85,14 +85,17 @@ class DisciplineSpec extends AnyFunSuite {
     // collect (Graph.scala) — BUDGET-GUARDED by CcDriverEdgeBudget = 2e6
     // (src, dst) pairs ≈ 32 MB, the broadcast-build-side class, taken only
     // when the caller already paid to materialize AND count the pair
-    // table; over-budget graphs run the distributed loop unchanged.
+    // table; over-budget graphs run the distributed loop unchanged,
+    // plus the export audit's per-day window counts (Pipeline.scala) —
+    // one row per day of the export window, O(days) like the CLI's audit
+    // collect, joined on the driver with the committed footers' row counts.
     // Scalar .head() pulls are fine and not counted.
     val sites   = hits("""\.collect\(\)""")
     val allowed = Set("Cli.scala", "operators/Chunking.scala", "operators/Curation.scala", "Probe.scala",
-      "sources/es/EsStubServer.scala", "operators/Graph.scala")
+      "sources/es/EsStubServer.scala", "operators/Graph.scala", "Pipeline.scala")
     val strays  = sites.filterNot(s => allowed.exists(s.startsWith))
     assert(strays.isEmpty, s"new driver collect() site — justify and allowlist or redesign:\n${strays.mkString("\n")}")
-    assert(sites.size <= 13, s"collect() sites grew within allowed files: $sites")
+    assert(sites.size <= 14, s"collect() sites grew within allowed files: $sites")
   }
 
   test("no Scala UDFs; the single typed-Aggregator UDAF is the declared surface") {
@@ -122,7 +125,11 @@ class DisciplineSpec extends AnyFunSuite {
   }
 
   test("no raw RDD usage in operators (DataFrame/Dataset only)") {
-    val sites = hits("""\.rdd\b""")
+    // one audited line: twoPhaseComponents releases a superseded round's
+    // local checkpoint, whose RDD only the checkpointed plan holds (no
+    // Dataset API unpersists a local checkpoint); it computes nothing
+    val sites = hits("""\.rdd\b""",
+      exceptLines = Set("operators/Graph.scala" -> "case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd"))
     assert(sites.isEmpty, s"raw .rdd usage:\n${sites.mkString("\n")}")
   }
 
@@ -163,6 +170,16 @@ class DisciplineSpec extends AnyFunSuite {
     // benchmark run sets
     val sites = hits("""sys\.env|System\.getenv""").filter(_.startsWith("operators/"))
     assert(sites.isEmpty, s"environment read in an operator:\n${sites.mkString("\n")}")
+  }
+
+  test("no Hadoop listFiles or listLocatedStatus in main code") {
+    // both build LocatedFileStatus, which loads each local file's
+    // permissions, and without libhadoop that forks `ls -ld` once per file
+    // (92 forks in one query_mix pass through Tables.parquetSchema);
+    // listStatus reads the same paths, lengths and times fork-free.
+    // java.io.File.listFiles() takes no path and is not matched.
+    val sites = hits("""\.listFiles\([^)]+,|\.listLocatedStatus\(""")
+    assert(sites.isEmpty, s"forking directory walk (use listStatus):\n${sites.mkString("\n")}")
   }
 
   test("tools/run_probe.sh opens the same JDK packages as build.sbt") {

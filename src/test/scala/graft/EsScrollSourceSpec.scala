@@ -961,6 +961,53 @@ class EsScrollSourceSpec extends SparkSpec {
     }
   }
 
+  /** A plan's final-aggregate and shuffle nodes. */
+  private def mergeNodes(df: DataFrame): Seq[String] = {
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("PushedAggregation"), plan)
+    Seq("Exchange", "HashAggregate").filter(plan.contains)
+  }
+
+  test("a one-target count is pushed whole: no Exchange and no HashAggregate in the plan") {
+    import spark.implicits._
+    withDays { (srv, _) =>
+      val sample = events.limit(600)
+      def read = patternRead(srv.url, events.schema, 2)
+      def menu(df: DataFrame) = df.groupBy($"event_type").agg(count(lit(1)).as("doc_count"))
+        .orderBy($"doc_count".desc, $"event_type").limit(10)
+      def perDay(df: DataFrame) = df.groupBy(to_date($"ts").as("day")).agg(count(lit(1)).as("n_win"))
+      val h0 = srv.hitsServed.get()
+      Seq[(String, DataFrame => DataFrame)](
+        "menu" -> menu, "per-day count" -> perDay, "grand total" -> (_.groupBy().count())
+      ).foreach { case (name, q) =>
+        assert(mergeNodes(q(read)).isEmpty, name)
+        assert(bag(q(read)) === bag(q(sample)), name)
+      }
+      assert(srv.hitsServed.get() === h0, "the counts ship no hits")
+    }
+  }
+
+  test("a two-target count keeps Spark's final merge and equals the source counts") {
+    import spark.implicits._
+    val spread = overThreeHundredDays()
+    val srv = EsStubServer.fromDayPartitionedDataFrame(spread, "events")
+    srv.start()
+    try {
+      def read = patternRead(srv.url, spread.schema, 2)
+      Seq[(String, DataFrame => DataFrame)](
+        "by type" -> (_.groupBy($"event_type").count()),
+        "per-day count" -> (_.groupBy(to_date($"ts")).count()),
+        "grand total" -> (_.groupBy().count())
+      ).foreach { case (name, q) =>
+        assert(mergeNodes(q(read)).contains("HashAggregate"), name)
+        assert(bag(q(read)) === bag(q(spread)), name)
+      }
+    } finally {
+      srv.stop()
+      spread.unpersist()
+    }
+  }
+
   test("a streaming tail over ~300 day indices keeps request lines within 4 KB and drains every row") {
     val spread = overThreeHundredDays()
     val srv    = EsStubServer.fromDayPartitionedDataFrame(spread, "events")

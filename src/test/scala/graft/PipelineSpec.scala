@@ -71,6 +71,89 @@ class PipelineSpec extends SparkSpec {
     assert(audit.map(r => r.getAs[Long]("n_rows") + r.getAs[Long]("n_dead")).sum === purchases.count())
   }
 
+  /** Per-day (n_rows, n_dead) of an audit, keyed by the day's string. */
+  private def byDay(audit: Array[org.apache.spark.sql.Row]): Map[Option[String], (Long, Long)] =
+    audit.map(r => Option(r.getDate(0)).map(_.toString) -> (r.getLong(1), r.getLong(2))).toMap
+
+  test("a day whose rows are all dead letters reports n_rows = 0 and n_dead = n_win") {
+    import spark.implicits._
+    val purchases = Tables.events(spark, sf).where($"event_type" === "purchase")
+    val perDay = purchases.groupBy(to_date($"ts").cast("string")).count()
+      .as[(String, Long)].collect().toMap
+    val dead = perDay.keys.flatMap(Option(_)).max
+    val ev = purchases.withColumn("props",
+      when(to_date($"ts").cast("string") === dead, lit("not json")).otherwise($"props"))
+    val out   = java.nio.file.Files.createTempDirectory("graft_pipe_dead_day").toString
+    val audit = byDay(Pipeline.exportEvents(ev, out, "purchase", None).collect())
+    assert(audit === perDay.map { case (d, n) => Option(d) -> (if (d == dead) (0L, n) else (n, 0L)) })
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$out/data/day=$dead")),
+      "an all-dead day writes no directory")
+  }
+
+  test("the footer counts skip what Spark's reader skips: checksums, _SUCCESS, hidden files") {
+    import spark.implicits._
+    import java.nio.file.{Files, Paths}
+    val out = Files.createTempDirectory("graft_pipe_footers").toString
+    Pipeline.exportByType(spark, sf, out, "purchase", 30).collect()
+    val data = Paths.get(s"$out/data")
+    assert(Files.exists(data.resolve("_SUCCESS")))
+    val dayDir = Files.list(data).filter(_.getFileName.toString.startsWith("day=")).findFirst().get()
+    val files  = Files.list(dayDir).toArray.map(_.asInstanceOf[java.nio.file.Path])
+    assert(files.exists(_.getFileName.toString.endsWith(".crc")), "the write leaves checksum files")
+    // two readable copies of a data file that the reader must not count
+    val part = files.find(_.getFileName.toString.endsWith(".parquet")).get
+    Files.copy(part, dayDir.resolve("_copy.parquet"))
+    Files.copy(part, dayDir.resolve(".copy.parquet"))
+    val viaReader = spark.read.parquet(data.toString).groupBy($"day").count()
+      .collect().map(r => Option(r.getDate(0)).map(_.toString) -> r.getLong(1)).toMap
+    assert(Pipeline.footerRowsByDay(spark, data.toString) === viaReader)
+  }
+
+  test("the audit's columns are a nullable date day and non-null long counts") {
+    import org.apache.spark.sql.types._
+    val out = java.nio.file.Files.createTempDirectory("graft_pipe_schema").toString
+    assert(Pipeline.exportByType(spark, sf, out, "purchase", 30).schema === StructType(Seq(
+      StructField("day", DateType, nullable = true),
+      StructField("n_rows", LongType, nullable = false),
+      StructField("n_dead", LongType, nullable = false))))
+  }
+
+  test("a nested first sample exports every row, over Parquet and over the stub, without an .asvc") {
+    import spark.implicits._
+    import java.nio.file.{Files, Paths}
+    val purchases = Tables.events(spark, sf).where($"event_type" === "purchase")
+    val first     = purchases.agg(min($"event_id")).head().getLong(0)
+    val ev = purchases.withColumn("props", when($"event_id" === first,
+      lit("""{"k": 8, "tags": ["a", "b"], "geo": {"lat": 1.5}}""")).otherwise($"props")).cache()
+    val truth = ev.groupBy(to_date($"ts").cast("string")).count().as[(String, Long)].collect()
+      .map { case (d, n) => Option(d) -> (n, 0L) }.toMap
+    val srv = graft.sources.es.EsStubServer.fromDataFrame(ev, "events")
+    srv.start()
+    try {
+      val overEs = spark.read.format("graft.sources.es.EsScrollSource").schema(ev.schema)
+        .option("url", srv.url).option("index", "events").load()
+      Seq("parquet" -> ev, "stub" -> overEs).foreach { case (source, in) =>
+        val out  = Files.createTempDirectory(s"graft_pipe_nested_$source").toString
+        val asvc = Paths.get(s"$out/schema.asvc")
+        Files.writeString(asvc, "stale")
+        val audit = byDay(Pipeline.exportEvents(in, out, "purchase", None).collect())
+        assert(audit === truth, source)
+        val st = org.apache.spark.sql.types.DataType
+          .fromJson(Files.readString(Paths.get(s"$out/schema.json")))
+          .asInstanceOf[org.apache.spark.sql.types.StructType]
+        assert(Seq("k", "tags", "geo").forall(st.fieldNames.contains), s"$source: $st")
+        assert(!Files.exists(asvc), s"$source: a nested sample renders no .asvc")
+        val back = spark.read.parquet(s"$out/data")
+        assert(back.count() === ev.count(), source)
+        assert(back.where($"event_id" === first).select($"geo.lat", $"tags").head() ===
+          org.apache.spark.sql.Row(1.5, Seq("a", "b")), source)
+      }
+    } finally {
+      srv.stop()
+      ev.unpersist()
+    }
+  }
+
   test("foreachBatch parquet sink appends each micro-batch") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext

@@ -19,7 +19,8 @@ class SessionSpec extends AnyFunSuite {
         "spark.ui.enabled"                            -> "false",
         "spark.sql.shuffle.partitions"                -> cpus,
         "spark.io.compression.codec"                  -> "lz4",
-        "spark.sql.codegen.cache.maxEntries"          -> "4096"
+        "spark.sql.codegen.cache.maxEntries"          -> "4096",
+        "spark.hadoop.fs.file.impl"                   -> "graft.NioLocalFileSystem"
       )
     )
     assert(Session.confs.map(_._1).distinct.size == Session.confs.size, "a key set twice")

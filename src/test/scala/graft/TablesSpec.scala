@@ -99,6 +99,19 @@ class TablesSpec extends SparkSpec {
     dir.toString
   }
 
+  test("a TIMESTAMP(NANOS) file streams through replayStream with Tables.events' ts values") {
+    val dir  = nanosEvents()
+    val name = s"replay_ns_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+    val q = graft.streaming.Streaming.replayStream(spark, dir).writeStream
+      .format("memory").queryName(name).start()
+    try {
+      q.processAllAvailable()
+      val streamed = spark.table(name)
+      assert(streamed.schema("ts").dataType == org.apache.spark.sql.types.TimestampType)
+      assert(rows(streamed) == rows(Tables.events(spark, dir)))
+    } finally q.stop()
+  }
+
   test("the cache misses when a session reads Parquet differently") {
     val dir  = nanosEvents()
     val path = s"$dir/events.parquet"
