@@ -163,6 +163,16 @@ object Cli {
     Pipeline.exportEvents(events, out, chosen, lo)
   }
 
+  /** The export's closing report in both modes: each day's exported rows,
+    * then the totals of exported and dead-lettered rows. */
+  private def printAudit(audit: org.apache.spark.sql.DataFrame, out: String): Unit = {
+    val days = audit.collect()
+    days.foreach(r => println(s"[cli]   ${r.getAs[java.sql.Date]("day")}: ${r.getAs[Long]("n_rows")} rows"))
+    val total = days.map(_.getAs[Long]("n_rows")).sum
+    val dead  = days.map(_.getAs[Long]("n_dead")).sum
+    println(s"[cli] done: $total rows exported, $dead dead-lettered, schema at $out/schema.json")
+  }
+
   def main(args: Array[String]): Unit = {
     val opts = args
       .sliding(2, 2)
@@ -197,13 +207,8 @@ object Cli {
       ).collect { case (k, Some(v)) => k -> v }.toMap
       val spark = Session.build(appName = "graft-cli-es")
       try {
-        val audit = runEs(spark, url, opts.getOrElse("index", "events-*"), out,
-          windowDays, topK, interactive, opts.get("event-type"), stdinLine, auth).collect()
-        val total = audit.map(_.getAs[Long]("n_rows")).sum
-        val dead  = audit.map(_.getAs[Long]("n_dead")).sum
-        audit.foreach(r =>
-          println(s"[cli]   ${r.getAs[java.sql.Date]("day")}: ${r.getAs[Long]("n_rows")} rows"))
-        println(s"[cli] done: $total rows exported, $dead dead-lettered, schema at $out/schema.json")
+        printAudit(runEs(spark, url, opts.getOrElse("index", "events-*"), out,
+          windowDays, topK, interactive, opts.get("event-type"), stdinLine, auth), out)
       } finally spark.stop()
       return
     }
@@ -231,13 +236,7 @@ object Cli {
         else opts.getOrElse("event-type", buckets.head.getString(0))
       println(s"[cli] exporting event_type='$chosen', last $windowDays days -> $out")
 
-      val audit = Pipeline.exportByType(spark, sfDir, out, chosen, windowDays).collect()
-      val total = audit.map(_.getAs[Long]("n_rows")).sum
-      val dead  = audit.map(_.getAs[Long]("n_dead")).sum
-      audit.foreach(r =>
-        println(s"[cli]   ${r.getAs[java.sql.Date]("day")}: ${r.getAs[Long]("n_rows")} rows")
-      )
-      println(s"[cli] done: $total rows exported, $dead dead-lettered, schema at $out/schema.json")
+      printAudit(Pipeline.exportByType(spark, sfDir, out, chosen, windowDays), out)
     } finally spark.stop()
   }
 }

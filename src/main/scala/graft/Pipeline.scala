@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.{AvroAsvc, SchemaInfer}
+import graft.sources.{AvroAsvc, JsonDecode, SchemaInfer}
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.ParquetReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
@@ -107,8 +107,8 @@ object Pipeline {
         java.nio.file.Files.deleteIfExists(asvc)
     }
 
-    // O10-O11: tolerant decode, dead letters kept auditable. Same split
-    // predicate as JsonDecode.decodeWithDeadLetter. The decode runs exactly
+    // O10-O11: tolerant decode, dead letters kept auditable: the good side
+    // of JsonDecode.decodeWithDeadLetter's split. The decode runs exactly
     // ONCE — inside the write pass below. r19 shared it with the audit's
     // dead-letter branch through a localCheckpoint of the whole decoded
     // window; r20 removes that materialization entirely (it was data-sized,
@@ -118,17 +118,7 @@ object Pipeline {
     // per-day WINDOW totals minus the committed footers' row counts — a
     // ts-only column-pruned scan with the same pushed filters, no second
     // from_json.
-    val corruptSt = org.apache.spark.sql.types.StructType
-      .fromDDL(propsSchema.toDDL)
-      .add("_corrupt", org.apache.spark.sql.types.StringType)
-    val parsed = windowed
-      .withColumn(
-        "_parsed",
-        from_json($"props", corruptSt, Map("columnNameOfCorruptRecord" -> "_corrupt"))
-      )
-    val isBad = $"props".isNull || $"_parsed".isNull ||
-      $"_parsed".getField("_corrupt").isNotNull
-    val good = parsed.filter(!isBad)
+    val (good, _) = JsonDecode.decodeWithDeadLetter(windowed, "props", propsSchema.toDDL)
 
     // O12: day-partitioned export of the decoded rows — repartitioned by
     // day first so each partition is one file (the reference's

@@ -81,10 +81,14 @@ import scala.jdk.CollectionConverters._
   *     (the reference's ExtendedJsonDecoder default-injection philosophy);
   *     a hit whose `_source` is not an object is skipped and counted, the
   *     reference's per-record try/catch-skip (EsParquetWriter.java:73-81).
-  *   - **Scroll hygiene**: every reader clears its scroll context
-  *     (`DELETE /_search/scroll`) on close — long-running exports don't pin
-  *     server search contexts — and a slice that has consumed the exact
-  *     `hits.total` it was promised ends without the empty trailing page.
+  *     One page loop, [[EsHitsReader]], decodes every document a read
+  *     ships: the scroll, PIT and top-N readers only fetch pages and say
+  *     which page is the last.
+  *   - **Scroll hygiene**: the scroll reader clears its context
+  *     (`DELETE /_search/scroll`) and the PIT reader closes its PIT on
+  *     close — long-running exports don't pin server search contexts — and
+  *     a scroll slice that has consumed the exact `hits.total` it was
+  *     promised ends without the empty trailing page.
   *
   * String-equality semantics (`stringEquality` option): against a real ES
   * endpoint `match_phrase` performs ANALYZED matching (a doc with
@@ -688,7 +692,8 @@ private class EsScrollTable(schema0: StructType, props: Map[String, String])
       options.getInt("pageSize", 1000),
       EsScrollSource.optOrElse(options, "scroll", "3m"), // the reference's TimeValue.timeValueMinutes(3)
       EsScrollSource.optOrElse(options, "timeField", "ts"), // drives index-level window pruning
-      EsScrollSource.optOrElse(options, "pagination", "scroll"), // or "search_after" (PIT)
+      if (EsScrollSource.optOrElse(options, "pagination", "scroll") == PitPaging.option) PitPaging
+      else ScrollPaging,
       EsScrollSource.optOrElse(options, "cursorField", "event_id"), // streaming tail cursor
       options.getLong("maxIdsPerBatch", 1000L), // streaming admission: cursor-value step per epoch
       EsScrollSource.optOrElse(options, "stringEquality", "term"), // or "phrase" (reference parity + re-filter)
@@ -704,7 +709,7 @@ private class EsScanBuilder(
     pageSize: Int,
     scroll: String,
     timeField: String,
-    pagination: String,
+    paging: EsPaging,
     cursorField: String = "event_id",
     maxIdsPerBatch: Long = 1000L,
     stringEquality: String = "term",
@@ -872,7 +877,7 @@ private class EsScanBuilder(
         sortJson, topN.mkString(", "), limit.get)
     else
       new EsScrollScan(conn, index, slices, pageSize, scroll, required, query,
-        pushed, limit, resolve, pagination, cursorField, maxIdsPerBatch)
+        pushed, limit, resolve, paging, cursorField, maxIdsPerBatch)
   }
 }
 
@@ -1049,58 +1054,26 @@ private class EsTopNScan(
   override def planInputPartitions(): Array[InputPartition] =
     targets.map(t =>
       EsTopNPartition(conn, t, queryJson, sortJson, required.json, n): InputPartition).toArray
-  override def createReaderFactory(): PartitionReaderFactory =
-    new PartitionReaderFactory {
-      override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-        new EsTopNReader(p.asInstanceOf[EsTopNPartition])
-    }
+  override def createReaderFactory(): PartitionReaderFactory = EsHitsReader
 }
 
-/** The top-N search: `size = n` ranked hits in one request. A hit whose
-  * `_source` is not an object is skipped (as on the scroll path), and the
-  * shortfall is asked for past the hits already seen (`from`), so Spark
-  * still receives the n best decodable rows. */
-private class EsTopNReader(p: EsTopNPartition) extends PartitionReader[InternalRow] {
-  private val mapper = new ObjectMapper
-  private val fields = DataType.fromJson(p.schemaJson).asInstanceOf[StructType].fields
-  private var page: JsonNode   = _ // current hits array
-  private var want             = 0 // size asked of the current page
-  private var from             = 0 // hits seen before the current page
-  private var pos              = 0
-  private var emitted          = 0
-  private var row: InternalRow = _
+/** The top-N search: `size = n` ranked hits in one request, `from`/`size`
+  * paging past the hits already seen when skipped hits leave a shortfall,
+  * so Spark still receives the n best decodable rows. A page shorter than
+  * asked is the last; a plain search keeps no server-side context. */
+private class EsTopNReader(p: EsTopNPartition) extends EsHitsReader(p.schemaJson, p.n) {
+  private val sort = mapper.readTree(p.sortJson)
+  private var want = 0 // size asked of the current page
 
-  private def fetch(): Unit = {
-    from += (if (page == null) 0 else page.size())
-    want = p.n - emitted
-    val root = mapper.createObjectNode()
-    if (from > 0) root.put("from", from)
-    root.put("size", want)
-    root.set[ObjectNode]("query", mapper.readTree(p.queryJson).asInstanceOf[ObjectNode])
-    val src = root.putArray("_source")
-    fields.foreach(f => src.add(f.name))
-    root.set[JsonNode]("sort", mapper.readTree(p.sortJson))
-    page = mapper.readTree(EsScrollSource.post(p.conn, s"/${p.index}/_search", root.toString))
+  override protected def fetch(): JsonNode = {
+    want = p.n - emitted.toInt
+    val body = searchBody(want, p.queryJson, sort)
+    if (seen > 0) body.put("from", seen)
+    mapper.readTree(EsScrollSource.post(p.conn, s"/${p.index}/_search", body.toString))
       .path("hits").path("hits")
-    pos = 0
   }
 
-  override def next(): Boolean = {
-    while (emitted < p.n) {
-      if (page == null || pos >= page.size()) {
-        if (page != null && page.size() < want) return false // the server ran out
-        fetch()
-        if (page.size() == 0) return false
-      }
-      val r = EsScrollSource.decodeHit(page.get(pos), fields)
-      pos += 1
-      if (r != null) { row = r; emitted += 1; return true }
-    }
-    false
-  }
-
-  override def get(): InternalRow = row
-  override def close(): Unit = () // a plain search keeps no server-side context
+  override protected def isLast(page: JsonNode): Boolean = page.size() < want
 }
 
 private case class EsSlicePartition(
@@ -1113,8 +1086,14 @@ private case class EsSlicePartition(
     scroll: String,
     schemaJson: String,
     limit: Int, // -1 = unlimited
-    pagination: String // "scroll" (reference parity) | "search_after" (PIT)
+    paging: EsPaging
 ) extends InputPartition
+
+/** How a slice pages, named by its `pagination` option value: the
+  * reference's scroll, or a point-in-time with `search_after`. */
+private[es] sealed abstract class EsPaging(val option: String)
+private[es] case object ScrollPaging extends EsPaging("scroll")
+private[es] case object PitPaging extends EsPaging("search_after")
 
 private class EsScrollScan(
     conn: EsConn,
@@ -1127,7 +1106,7 @@ private class EsScrollScan(
     pushed: Array[Filter],
     limit: Option[Int],
     resolveTargets: () => Seq[String],
-    pagination: String,
+    paging: EsPaging,
     cursorField: String = "event_id",
     maxIdsPerBatch: Long = 1000L
 ) extends EsTargetScan(resolveTargets) {
@@ -1136,7 +1115,7 @@ private class EsScrollScan(
     new EsTailStream(conn, index, slices, pageSize, scroll, required,
       queryJson, cursorField, maxIdsPerBatch)
   override def description(): String =
-    s"es-scroll index=$index slices=$slices pagination=$pagination PushedEsQuery: $queryJson, " +
+    s"es-scroll index=$index slices=$slices pagination=${paging.option} PushedEsQuery: $queryJson, " +
       s"PushedFilters: [${pushed.mkString(", ")}]${limit.fold("")(l => s", PushedLimit: $l")}"
 
   /** `slices` partitions per search target — one target unless the
@@ -1151,93 +1130,119 @@ private class EsScrollScan(
     (for { t <- targets; i <- 0 until n } yield
       EsSlicePartition(i, n, conn, t, queryJson,
         limit.fold(pageSize)(l => math.min(pageSize, math.max(1, l))),
-        scroll, required.json, limit.getOrElse(-1), pagination): InputPartition
+        scroll, required.json, limit.getOrElse(-1), paging): InputPartition
     ).toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new PartitionReaderFactory {
-      override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-        val sp = p.asInstanceOf[EsSlicePartition]
-        if (sp.pagination == "search_after") new EsPitReader(sp) else new EsScrollReader(sp)
-      }
-    }
+  override def createReaderFactory(): PartitionReaderFactory = EsHitsReader
 }
 
-/** One slice's scroll loop — the reference's EsParquetWriter.call() body
-  * (initial search → page loop via scroll_id → close), plus slice fan-out
-  * and clear-scroll hygiene the reference lacks. */
-private class EsScrollReader(p: EsSlicePartition) extends PartitionReader[InternalRow] {
-  private val mapper  = new ObjectMapper
-  private val schema  = DataType.fromJson(p.schemaJson).asInstanceOf[StructType]
-  private val fields  = schema.fields
-  private var scrollId: String = _
+/** The one page loop of every read that ships documents — the
+  * reference's EsParquetWriter.call() body (EsParquetWriter.java:64-84):
+  * fetch a page, decode each hit with [[EsScrollSource.decodeHit]], skip
+  * and count a hit whose `_source` is not an object (the reference's
+  * per-record catch, :78-81), and stop at the pushed `limit` (−1 = none),
+  * at an empty page, or after the page the protocol calls the last. The
+  * subclasses are the protocols: how a page is fetched, which page is the
+  * last, and what the server keeps until [[close]]. */
+private abstract class EsHitsReader(schemaJson: String, limit: Long) extends PartitionReader[InternalRow] {
+  protected val mapper = new ObjectMapper
+  protected val fields = DataType.fromJson(schemaJson).asInstanceOf[StructType].fields
+  /** Rows returned, and hits skipped because their `_source` is not an object. */
+  protected var emitted = 0L
+  protected var skipped = 0L
   private var page: JsonNode   = _ // current hits array
   private var pos              = 0
-  private var emitted          = 0L
   private var row: InternalRow = _
-  /** Hits whose _source is not an object — skipped, reference's
-    * per-record catch (EsParquetWriter.java:78-81). */
-  private var skipped = 0L
-  /** The slice's exact hit count (`hits.total` with relation `eq`), or −1
-    * when the server only bounds it. */
-  private var total = -1L
 
-  private def searchBody(): String = {
+  /** Hits consumed so far, decodable or not. */
+  protected def seen: Long = emitted + skipped
+
+  /** The next page's hits array. */
+  protected def fetch(): JsonNode
+
+  /** Whether `page`, every hit of it consumed, was the last. */
+  protected def isLast(page: JsonNode): Boolean
+
+  /** The search body every protocol sends: `size` hits of `queryJson`,
+    * only the read's fields in `_source`, ordered by `sort`, from slice
+    * `sliceId` of `sliceMax` (no `slice` when the read is one slice). */
+  protected def searchBody(size: Int, queryJson: String, sort: JsonNode,
+      sliceId: Int = 0, sliceMax: Int = 1): ObjectNode = {
     val root = mapper.createObjectNode()
-    if (p.sliceMax > 1) {
+    if (sliceMax > 1) {
       val s = root.putObject("slice")
-      s.put("id", p.sliceId); s.put("max", p.sliceMax)
+      s.put("id", sliceId); s.put("max", sliceMax)
     }
-    root.put("size", p.pageSize)
-    root.set[ObjectNode]("query", mapper.readTree(p.queryJson).asInstanceOf[ObjectNode])
+    root.put("size", size)
+    root.set[JsonNode]("query", mapper.readTree(queryJson))
     val src = root.putArray("_source")
     fields.foreach(f => src.add(f.name))
-    root.putArray("sort").add("_doc")
-    root.toString
-  }
-
-  private def firstPage(): Unit = {
-    val resp = mapper.readTree(
-      EsScrollSource.post(p.conn, s"/${p.index}/_search?scroll=${p.scroll}", searchBody()))
-    scrollId = resp.path("_scroll_id").asText()
-    val t = resp.path("hits").path("total")
-    if (t.path("relation").asText() == "eq") total = t.path("value").asLong()
-    page = resp.path("hits").path("hits")
-    pos = 0
-  }
-
-  private def nextPage(): Unit = {
-    val body = s"""{"scroll":"${p.scroll}","scroll_id":${mapper.writeValueAsString(scrollId)}}"""
-    val resp = mapper.readTree(EsScrollSource.post(p.conn, "/_search/scroll", body))
-    scrollId = resp.path("_scroll_id").asText(scrollId)
-    page = resp.path("hits").path("hits")
-    pos = 0
+    root.set[JsonNode]("sort", sort)
+    root
   }
 
   override def next(): Boolean = {
-    if (p.limit >= 0 && emitted >= p.limit) return false
-    while (true) {
-      if (page == null) firstPage()
-      else if (pos >= page.size()) {
-        // an empty page ends the scroll (reference loop condition); so does
-        // having consumed every hit the server counted, which saves the
-        // empty trailing round trip
-        if (page.size() == 0 || (total >= 0 && emitted + skipped >= total)) return false
-        nextPage()
+    while (limit < 0 || emitted < limit) {
+      if (page == null || pos >= page.size()) {
+        if (page != null && (page.size() == 0 || isLast(page))) return false
+        page = fetch()
+        pos = 0
         if (page.size() == 0) return false
       }
-      while (pos < page.size()) {
-        val r = EsScrollSource.decodeHit(page.get(pos), fields)
-        pos += 1
-        if (r != null) { row = r; emitted += 1; return true }
-        skipped += 1
-      }
+      val r = EsScrollSource.decodeHit(page.get(pos), fields)
+      pos += 1
+      if (r != null) { row = r; emitted += 1; return true }
+      skipped += 1
     }
     false
   }
 
   override def get(): InternalRow = row
+  override def close(): Unit = ()
+}
+
+/** The reader of a top-N or slice partition; a slice's reader is chosen
+  * by its paging. */
+private object EsHitsReader extends PartitionReaderFactory {
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] = p match {
+    case t: EsTopNPartition                            => new EsTopNReader(t)
+    case s: EsSlicePartition if s.paging == PitPaging  => new EsPitReader(s)
+    case s: EsSlicePartition                           => new EsScrollReader(s)
+  }
+}
+
+/** One slice's scroll — the reference's loop (initial search → page via
+  * scroll_id → close), plus slice fan-out and the clear-scroll hygiene the
+  * reference lacks. An empty page ends it (the reference's loop
+  * condition); so does having consumed the exact `hits.total` the server
+  * counted, which saves the empty trailing round trip. */
+private class EsScrollReader(p: EsSlicePartition) extends EsHitsReader(p.schemaJson, p.limit) {
+  private var scrollId: String = _
+  /** The slice's exact hit count (`hits.total` with relation `eq`), or −1
+    * when the server only bounds it. */
+  private var total = -1L
+
+  override protected def fetch(): JsonNode = {
+    val resp =
+      if (scrollId == null) {
+        val r = mapper.readTree(EsScrollSource.post(p.conn, s"/${p.index}/_search?scroll=${p.scroll}",
+          searchBody(p.pageSize, p.queryJson, mapper.readTree("""["_doc"]"""), p.sliceId, p.sliceMax)
+            .toString))
+        scrollId = r.path("_scroll_id").asText()
+        val t = r.path("hits").path("total")
+        if (t.path("relation").asText() == "eq") total = t.path("value").asLong()
+        r
+      } else {
+        val r = mapper.readTree(EsScrollSource.post(p.conn, "/_search/scroll",
+          s"""{"scroll":"${p.scroll}","scroll_id":${mapper.writeValueAsString(scrollId)}}"""))
+        scrollId = r.path("_scroll_id").asText(scrollId)
+        r
+      }
+    resp.path("hits").path("hits")
+  }
+
+  override protected def isLast(page: JsonNode): Boolean = total >= 0 && seen >= total
 
   override def close(): Unit =
     if (scrollId != null) {
@@ -1253,71 +1258,31 @@ private class EsScrollReader(p: EsSlicePartition) extends PartitionReader[Intern
   * `sort` value into the next request's `search_after`, close the PIT.
   * Unlike a scroll context the server keeps no per-page cursor — only the
   * snapshot — so a retried or resumed page is addressed by VALUE, not by
-  * server state. Selected with option `pagination=search_after`; results
-  * are multiset-identical to the scroll reader (q166 shares q163's
-  * oracle). Termination: a page with fewer than `pageSize` hits is the
-  * last (the documented search_after convention). */
-private class EsPitReader(p: EsSlicePartition) extends PartitionReader[InternalRow] {
-  private val mapper  = new ObjectMapper
-  private val schema  = DataType.fromJson(p.schemaJson).asInstanceOf[StructType]
-  private val fields  = schema.fields
-  private var pitId: String    = _
-  private var page: JsonNode   = _ // current hits array
+  * server state. Results are multiset-identical to the scroll reader
+  * (q166 shares q163's oracle). A page with fewer than `pageSize` hits is
+  * the last (the documented search_after convention). */
+private class EsPitReader(p: EsSlicePartition) extends EsHitsReader(p.schemaJson, p.limit) {
+  private val sort = mapper.readTree("""[{"_shard_doc":"asc"}]""")
+  private var pitId: String      = _
   private var lastSort: JsonNode = _ // `sort` of the last hit seen
-  private var pos              = 0
-  private var emitted          = 0L
-  private var row: InternalRow = _
-  private var skipped          = 0L
 
-  private def searchBody(): String = {
-    val root = mapper.createObjectNode()
-    if (p.sliceMax > 1) {
-      val s = root.putObject("slice")
-      s.put("id", p.sliceId); s.put("max", p.sliceMax)
-    }
-    root.put("size", p.pageSize)
-    root.set[ObjectNode]("query", mapper.readTree(p.queryJson).asInstanceOf[ObjectNode])
-    val pit = root.putObject("pit")
-    pit.put("id", pitId); pit.put("keep_alive", p.scroll)
-    val src = root.putArray("_source")
-    fields.foreach(f => src.add(f.name))
-    root.putArray("sort").addObject().put("_shard_doc", "asc")
-    if (lastSort != null && lastSort.isArray && lastSort.size() > 0)
-      root.set[JsonNode]("search_after", lastSort)
-    root.toString
-  }
-
-  private def nextPage(): Unit = {
+  override protected def fetch(): JsonNode = {
     if (pitId == null)
       pitId = mapper.readTree(
         EsScrollSource.post(p.conn, s"/${p.index}/_pit?keep_alive=${p.scroll}", "{}"))
         .path("id").asText()
-    val resp = mapper.readTree(EsScrollSource.post(p.conn, "/_search", searchBody()))
-    page = resp.path("hits").path("hits")
-    pos = 0
+    val body = searchBody(p.pageSize, p.queryJson, sort, p.sliceId, p.sliceMax)
+    val pit  = body.putObject("pit")
+    pit.put("id", pitId); pit.put("keep_alive", p.scroll)
+    if (lastSort != null && lastSort.isArray && lastSort.size() > 0)
+      body.set[JsonNode]("search_after", lastSort)
+    val page = mapper.readTree(EsScrollSource.post(p.conn, "/_search", body.toString))
+      .path("hits").path("hits")
     if (page.size() > 0) lastSort = page.get(page.size() - 1).path("sort")
+    page
   }
 
-  override def next(): Boolean = {
-    if (p.limit >= 0 && emitted >= p.limit) return false
-    while (true) {
-      if (page == null || pos >= page.size()) {
-        // a short page was the last one (search_after termination)
-        if (page != null && page.size() < p.pageSize) return false
-        nextPage()
-        if (page.size() == 0) return false
-      }
-      while (pos < page.size()) {
-        val r = EsScrollSource.decodeHit(page.get(pos), fields)
-        pos += 1
-        if (r != null) { row = r; emitted += 1; return true }
-        skipped += 1
-      }
-    }
-    false
-  }
-
-  override def get(): InternalRow = row
+  override protected def isLast(page: JsonNode): Boolean = page.size() < p.pageSize
 
   override def close(): Unit =
     if (pitId != null) {
@@ -1435,14 +1400,10 @@ private class EsTailStream(
     val n = math.max(1, slices)
     (for (t <- targets; i <- 0 until n)
       yield EsSlicePartition(i, n, conn, t, ranged, pageSize, scroll,
-        required.json, -1, "search_after"): InputPartition).toArray
+        required.json, -1, PitPaging): InputPartition).toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new PartitionReaderFactory {
-      override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-        new EsPitReader(p.asInstanceOf[EsSlicePartition])
-    }
+  override def createReaderFactory(): PartitionReaderFactory = EsHitsReader
 
   // the cursor lives in Spark's checkpoint offset log, not here
   override def commit(end: StreamOffset): Unit = ()

@@ -218,15 +218,7 @@ class EsStubServer(
     val id   = req.path("pit").path("id").asText()
     val data = pits.get(id)
     require(data != null, s"unknown pit id $id") // ES: search_context_missing
-    val size  = req.path("size").asInt(10)
-    val slice = req.path("slice")
-    val (sliceId, sliceMax) =
-      if (slice.isObject) (slice.get("id").asInt(), slice.get("max").asInt()) else (0, 1)
-    val cols: Array[String] =
-      if (req.path("_source").isArray) {
-        val a = req.get("_source").asInstanceOf[ArrayNode]
-        (0 until a.size).map(a.get(_).asText()).toArray
-      } else colNames
+    val hr    = hitsRequest(req)
     val q     = req.path("query")
     val after = req.path("search_after")
     val from  = if (after.isArray && after.size() > 0) after.get(0).asInt() + 1 else 0
@@ -234,30 +226,47 @@ class EsStubServer(
     root.put("pit_id", id)
     val hitsObj = root.putObject("hits")
     val arr     = hitsObj.putArray("hits")
-    var i = from
-    var n = 0
-    while (i < data.length && n < size) {
-      if (i % sliceMax == sliceId && evalQuery(q, data(i))) {
-        val hit = arr.addObject()
-        hit.put("_index", index)
-        hit.put("_id", i.toString)
-        if (malformedEvery > 0 && (i + 1) % malformedEvery == 0)
-          hit.put("_source", 42)
-        else {
-          val src = hit.putObject("_source")
-          cols.foreach { c =>
-            val ci = colNames.indexOf(c)
-            if (ci >= 0) putJson(src, c, data(i)(ci))
-          }
-        }
-        hit.putArray("sort").add(i)
-        hitsServed.incrementAndGet()
-        n += 1
-      }
-      i += 1
-    }
-    hitsObj.putObject("total").put("value", n).put("relation", "gte")
+    val page = Iterator.from(from).takeWhile(_ < data.length)
+      .filter(i => hr.inSlice(i) && evalQuery(q, data(i))).take(hr.size).toSeq
+    page.foreach(i => putHit(arr, data, i, hr.cols).putArray("sort").add(i))
+    hitsObj.putObject("total").put("value", page.size).put("relation", "gte")
     root.toString
+  }
+
+  /** The hit-shaping part of a search request: page `size` (ES's default
+    * 10), slice `sliceId` of `sliceMax` (docs distributed by row index mod
+    * `max`) and the `_source` columns (all when absent). */
+  private case class HitsRequest(size: Int, sliceId: Int, sliceMax: Int, cols: Array[String]) {
+    def inSlice(i: Int): Boolean = i % sliceMax == sliceId
+  }
+
+  private def hitsRequest(req: JsonNode): HitsRequest = {
+    val slice = req.path("slice")
+    val src   = req.path("_source")
+    HitsRequest(
+      req.path("size").asInt(10),
+      if (slice.isObject) slice.get("id").asInt() else 0,
+      if (slice.isObject) slice.get("max").asInt() else 1,
+      if (src.isArray) (0 until src.size).map(src.get(_).asText()).toArray else colNames)
+  }
+
+  /** Serialize row `rowIdx` of `data` as one hit on `arr`, its `_source`
+    * projected to `cols` — or a scalar when `malformedEvery` picks it (not
+    * an object: the connector must skip it) — and count it served. */
+  private def putHit(arr: ArrayNode, data: IndexedSeq[Array[Any]], rowIdx: Int, cols: Array[String]): ObjectNode = {
+    val hit = arr.addObject()
+    hit.put("_index", index)
+    hit.put("_id", rowIdx.toString)
+    if (malformedEvery > 0 && (rowIdx + 1) % malformedEvery == 0) hit.put("_source", 42)
+    else {
+      val src = hit.putObject("_source")
+      cols.foreach { c =>
+        val ci = colNames.indexOf(c)
+        if (ci >= 0) putJson(src, c, data(rowIdx)(ci))
+      }
+    }
+    hitsServed.incrementAndGet()
+    hit
   }
 
   private def catIndices(): String = {
@@ -315,20 +324,12 @@ class EsStubServer(
     lastSearchBody = body
     val req = mapper.readTree(body)
     if (req.has("aggs") || req.path("size").asInt(10) == 0) return aggSearch(req, data)
-    val size = if (req.has("size")) req.get("size").asInt() else 10
-    val slice = req.path("slice")
-    val (sliceId, sliceMax) =
-      if (slice.isObject) (slice.get("id").asInt(), slice.get("max").asInt()) else (0, 1)
-    val cols: Array[String] =
-      if (req.path("_source").isArray) {
-        val a = req.get("_source").asInstanceOf[ArrayNode]
-        (0 until a.size).map(a.get(_).asText()).toArray
-      } else colNames
+    val hr  = hitsRequest(req)
     val q   = req.path("query")
     val ids = sortIds(data.indices.iterator
-      .filter(i => i % sliceMax == sliceId && evalQuery(q, data(i)))
+      .filter(i => hr.inSlice(i) && evalQuery(q, data(i)))
       .toArray, data, req.path("sort"))
-    val ctx = Ctx(data, ids, cols, size, req.path("from").asInt(0))
+    val ctx = Ctx(data, ids, hr.cols, hr.size, req.path("from").asInt(0))
     if (!scroll) return pageResponse(null, ctx)
     scrollSearchCalls.incrementAndGet()
     val id  = s"$index:${UUID.randomUUID().toString}"
@@ -487,24 +488,7 @@ class EsStubServer(
     hitsObj.putObject("total").put("value", ctx.ids.length).put("relation", "eq")
     val arr  = hitsObj.putArray("hits")
     val end  = math.min(ctx.pos + ctx.pageSize, ctx.ids.length)
-    var k = ctx.pos
-    while (k < end) {
-      val rowIdx = ctx.ids(k)
-      val hit = arr.addObject()
-      hit.put("_index", index)
-      hit.put("_id", rowIdx.toString)
-      if (malformedEvery > 0 && (rowIdx + 1) % malformedEvery == 0)
-        hit.put("_source", 42) // not an object: the connector must skip it
-      else {
-        val src = hit.putObject("_source")
-        ctx.cols.foreach { c =>
-          val ci = colNames.indexOf(c)
-          if (ci >= 0) putJson(src, c, ctx.data(rowIdx)(ci))
-        }
-      }
-      hitsServed.incrementAndGet()
-      k += 1
-    }
+    (ctx.pos until end).foreach(k => putHit(arr, ctx.data, ctx.ids(k), ctx.cols))
     ctx.pos = end
     root.toString
   }

@@ -62,10 +62,11 @@ class DisciplineSpec extends AnyFunSuite {
 
   test("driver-side collect() stays confined to the fourteen audited sites") {
     // .collect() of row DATA on the driver is the anti-distributed smell;
-    // the audited sites are CLI display (x4: the parquet-mode menu+audit
-    // pair and the --es wire-mode menu+audit pair — the wire menu is a
-    // PUSHED composite aggregation, so the collect is O(topK) bucket rows,
-    // and the audit is O(days); both are the reference's own UX), the
+    // the audited sites are CLI display (x3: the parquet-mode menu, the
+    // --es wire-mode menu and the audit report both modes print — the
+    // wire menu is a PUSHED composite aggregation, so the collect is
+    // O(topK) bucket rows, and the audit is O(days); both are the
+    // reference's own UX), the
     // per-BUCKET scalar fold in the two-pass prefix sum (bounded by
     // shuffle-partition count, Chunking.scala:96 doc), the BPE
     // learner's capped word-frequency table (bounded by BpeVocabCap —
@@ -180,6 +181,21 @@ class DisciplineSpec extends AnyFunSuite {
     // java.io.File.listFiles() takes no path and is not matched.
     val sites = hits("""\.listFiles\([^)]+,|\.listLocatedStatus\(""")
     assert(sites.isEmpty, s"forking directory walk (use listStatus):\n${sites.mkString("\n")}")
+  }
+
+  test("one page loop decodes every ES hit: decodeHit has one call site, in EsHitsReader") {
+    // the scroll, PIT and top-N readers each once had their own copy of
+    // the page loop; a reader that decodes hits itself forks it again, and
+    // the malformed-hit skip, the pushed limit and every per-response
+    // check or counter added to the loop would need a copy in each
+    val file  = "sources/es/EsScrollSource.scala"
+    val calls = hits("""(?<!def )decodeHit\(""")
+    assert(calls.size === 1 && calls.head.startsWith(s"$file:"), s"decodeHit call sites: $calls")
+    val line  = calls.head.stripPrefix(s"$file:").toInt
+    val owner = mainSources.toMap.apply(file).take(line).reverseIterator
+      .flatMap(l => """^(?:private |abstract )*class (\w+)""".r.findFirstMatchIn(l).map(_.group(1)))
+      .nextOption()
+    assert(owner.contains("EsHitsReader"), s"decodeHit is called in $owner, not the shared page loop")
   }
 
   test("tools/run_probe.sh opens the same JDK packages as build.sbt") {

@@ -843,6 +843,49 @@ class EsScrollSourceSpec extends SparkSpec {
       assert(srv.scrollCalls.get() === 0, "hits.total was reached: no empty page needed")
       assert(srv.clearedScrolls.get() === 1 && srv.liveContexts === 0)
     }
+    // the PIT reader's short page is its last: 1 search and 1 PIT close
+    withServer(events.limit(50)) { (srv, url) =>
+      val viaPit = spark.read.format("graft.sources.es.EsScrollSource").schema(events.schema)
+        .option("url", url).option("index", "events").option("slices", 1).option("pageSize", 1000)
+        .option("pagination", "search_after").load()
+      assert(viaPit.collect().length === 50)
+      assert(srv.searchCalls.get() === 1)
+      assert(srv.clearedPits.get() === 1 && srv.livePits === 0)
+    }
+  }
+
+  test("every hits reader skips malformed hits, honours its pushed limit and releases its context") {
+    import scala.jdk.CollectionConverters._
+    // seeded in event_id order, so the stub's every-7th malformed hit is a
+    // known row: index i is served as a scalar when (i + 1) % 7 == 0
+    val rows   = events.where(col("event_id") < 120).orderBy("event_id").collect().toSeq
+    val source = spark.createDataFrame(rows.asJava, events.schema)
+    val good   = rows.zipWithIndex.collect { case (r, i) if (i + 1) % 7 != 0 => r }
+    val limit  = 5
+    withServer(source, malformedEvery = 7) { (srv, url) =>
+      def read(opts: (String, String)*): DataFrame =
+        spark.read.format("graft.sources.es.EsScrollSource").schema(events.schema)
+          .option("url", url).option("index", "events").option("slices", 2).option("pageSize", 10)
+          .options(opts.toMap).load()
+      val topN = (n: Int) => read().orderBy(col("event_id")).limit(n)
+      // (reader, the whole read, the read under a pushed limit, the exact
+      // rows that limit must return when the reader ranks them)
+      val cases = Seq(
+        ("scroll", read(), read().limit(limit), None),
+        ("search_after", read("pagination" -> "search_after"),
+          read("pagination" -> "search_after").limit(limit), None),
+        ("top-N", topN(good.size), topN(limit), Some(good.take(limit).map(_.toString))))
+      cases.foreach { case (reader, whole, limited, exact) =>
+        assert(bag(whole) === good.map(_.toString).sorted, s"$reader: the source rows minus the malformed")
+        val h0  = srv.hitsServed.get()
+        val got = limited.collect().map(_.toString).toSeq
+        assert(got.size === limit && got.toSet.subsetOf(good.map(_.toString).toSet), s"$reader: $got")
+        exact.foreach(e => assert(got.sorted === e.sorted, s"$reader: the $limit best decodable rows"))
+        assert(srv.hitsServed.get() - h0 <= 2 * 2 * limit,
+          s"$reader: a pushed limit stops each slice within two pages (${srv.hitsServed.get() - h0} served)")
+        assert(srv.liveContexts === 0 && srv.livePits === 0, s"$reader: no scroll context or PIT left live")
+      }
+    }
   }
 
   test("a multi-page slice still reads every page, and no trailing empty one") {
