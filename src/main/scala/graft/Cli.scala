@@ -76,10 +76,23 @@ object Cli {
       if (f.name == "ts") f.copy(dataType = TimestampType) else f))
   }
 
-  /** Discovery: the reference's terms aggregation menu (Bootstrap.java:
-    * 196-219) over the wire — `groupBy(event_type).count()` pushes down as
-    * a paged composite aggregation, so ZERO raw documents cross the HTTP
-    * boundary for the menu (spec-asserted via the stub's counters). */
+  /** The reference's terms aggregation menu (O3, Bootstrap.java:196-219):
+    * the `topK` event types of `events` with their document counts, most
+    * frequent first. */
+  private def menu(events: org.apache.spark.sql.DataFrame, topK: Int): Seq[(String, Long)] =
+    events
+      .groupBy(col("event_type"))
+      .agg(count(lit(1)).as("doc_count"))
+      .orderBy(col("doc_count").desc, col("event_type"))
+      .limit(topK)
+      .collect()
+      .toSeq
+      .map(r => r.getString(0) -> r.getLong(1))
+
+  /** Discovery over the wire: the [[menu]] over the ES source, whose
+    * `groupBy(event_type).count()` pushes down as a paged composite
+    * aggregation, so ZERO raw documents cross the HTTP boundary for the
+    * menu (spec-asserted via the stub's counters). */
   private[graft] def esDiscoverMenu(
       spark: org.apache.spark.sql.SparkSession,
       url: String,
@@ -87,22 +100,13 @@ object Cli {
       schema: org.apache.spark.sql.types.StructType,
       topK: Int,
       auth: Map[String, String] = Map.empty
-  ): Seq[(String, Long)] = {
-    import spark.implicits._
-    spark.read
+  ): Seq[(String, Long)] =
+    menu(spark.read
       .format("graft.sources.es.EsScrollSource")
       .schema(schema)
       .options(auth)
       .option("url", url).option("index", index)
-      .load()
-      .groupBy($"event_type")
-      .agg(count(lit(1)).as("doc_count"))
-      .orderBy($"doc_count".desc, $"event_type")
-      .limit(topK)
-      .collect()
-      .toSeq
-      .map(r => r.getString(0) -> r.getLong(1))
-  }
+      .load(), topK)
 
   /** The reference's whole program over HTTP (Bootstrap.java:237-334):
     * `_cat/indices` discovery → window from the daily index names →
@@ -215,25 +219,16 @@ object Cli {
 
     val spark = Session.build(appName = "graft-cli")
     try {
-      // Discovery: the reference's terms aggregation (O3).
-      val buckets = Tables
-        .events(spark, sfDir)
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("doc_count"))
-        .orderBy(col("doc_count").desc, col("event_type"))
-        .limit(topK)
-        .collect()
+      val buckets = menu(Tables.events(spark, sfDir), topK)
       println(s"[cli] event types in $sfDir (top $topK):")
-      buckets.zipWithIndex.foreach { case (r, i) =>
-        println(s"[cli]   ${i + 1}. ${r.getString(0)}  (${r.getLong(1)} docs)")
+      buckets.zipWithIndex.foreach { case ((t, n), i) =>
+        println(s"[cli]   ${i + 1}. $t  ($n docs)")
       }
       // Selection: interactive menu, else argument, else the top bucket
       // (reference default-to-first).
       val chosen =
-        if (interactive)
-          select(buckets.toSeq.map(r => r.getString(0) -> r.getLong(1)), stdinLine)
-            .getOrElse(sys.error("invalid selection"))
-        else opts.getOrElse("event-type", buckets.head.getString(0))
+        if (interactive) select(buckets, stdinLine).getOrElse(sys.error("invalid selection"))
+        else opts.getOrElse("event-type", buckets.head._1)
       println(s"[cli] exporting event_type='$chosen', last $windowDays days -> $out")
 
       printAudit(Pipeline.exportByType(spark, sfDir, out, chosen, windowDays), out)

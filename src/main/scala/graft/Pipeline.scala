@@ -122,9 +122,12 @@ object Pipeline {
 
     // O12: day-partitioned export of the decoded rows — repartitioned by
     // day first so each partition is one file (the reference's
-    // one-file-per-index layout, EsParquetWriter.java:56).
+    // one-file-per-index layout, EsParquetWriter.java:56). The decoded
+    // columns are the props schema's fields: `_parsed` also carries the
+    // split's `_corrupt` marker, which schema.json does not list.
     good
-      .select($"event_id", $"user_id", $"ts", $"value", $"_parsed.*", to_date($"ts").as("day"))
+      .select(Seq($"event_id", $"user_id", $"ts", $"value") ++
+        propsSchema.fieldNames.map(f => $"_parsed".getField(f).as(f)) :+ to_date($"ts").as("day"): _*)
       .repartition($"day")
       .write
       .mode("overwrite")

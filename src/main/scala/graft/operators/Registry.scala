@@ -2512,7 +2512,7 @@ object Registry {
     ),
     // The reference program as one declared query: events served by an
     // in-JVM stub ES cluster, scrolled back over HTTP through the REAL
-    // wire-protocol connector (sliced scroll, pushed match_phrase,
+    // wire-protocol connector (sliced scroll, pushed exact term,
     // _source-pruned columns, cleared contexts), then the daily purchase
     // rollup. The oracle computes the rollup straight from the parquet —
     // the hash compare proves the HTTP/JSON round trip is lossless.

@@ -90,21 +90,21 @@ import scala.jdk.CollectionConverters._
   *     a scroll slice that has consumed the exact `hits.total` it was
   *     promised ends without the empty trailing page.
   *
-  * String-equality semantics (`stringEquality` option): against a real ES
-  * endpoint `match_phrase` performs ANALYZED matching (a doc with
-  * event_type "purchase order" matches `event_type = 'purchase'`, and case
-  * folds), so it can NOT be trusted as exact equality.
-  *   - `term` (default): `EqualTo`/`In` on strings compile to `term`/
-  *     `terms` on `field + keywordSuffix` — exact on keyword-mapped fields.
-  *     Set `keywordSuffix=.keyword` for indices using the default dynamic
-  *     mapping (text with a raw keyword subfield). Trusted exact → fully
-  *     pushed, composes with aggregate pushdown.
-  *   - `phrase`: the reference's own operator (match_phrase, reference
-  *     parity). Pushed for server-side traffic reduction but reported back
-  *     to Spark as post-scan filters, so Spark re-evaluates exact equality
-  *     over whatever the analyzer returned; a string equality under `Not`
-  *     is not pushed at all (an over-matching phrase inside must_not would
-  *     under-return, which no re-filter can repair).
+  * String equality is exact: `EqualTo`/`In` on strings compile to `term`/
+  * `terms` on the column's server field — the column itself, or its
+  * `keywordSuffix` subfield (`.keyword` on indices using the default
+  * dynamic mapping: analyzed text with a raw keyword subfield). The
+  * reference's `match_phrase` matches ANALYZED tokens (a doc with
+  * event_type "purchase order" matches `event_type = 'purchase'`), and so
+  * does a `term` on an analyzed field, so the index `_mapping` decides how
+  * a string equality is served (one `GET /<index>/_mapping` per scan
+  * builder, made only when one is offered):
+  *   - field mapped `keyword`, or a `keyword` subfield named by
+  *     `keywordSuffix`: pushed as the exact term;
+  *   - `keywordSuffix` set but the subfield missing or not `keyword`: the
+  *     scan fails fast (the term would match nothing);
+  *   - field mapped `text` with no `keywordSuffix`: not pushed — Spark
+  *     evaluates it exactly, a post-scan `Filter` in the plan.
   *
   * NULL semantics of pushed `Not`: ES `must_not` MATCHES documents where
   * the field is missing, while Spark's `NOT(a = v)` evaluates to NULL on a
@@ -132,9 +132,9 @@ import scala.jdk.CollectionConverters._
   *     .option("index", "events")
   *     .option("slices", 8)
   *     .option("pageSize", 2000)
-  *     .option("keywordSuffix", ".keyword")    // default-mapped text fields
+  *     .option("keywordSuffix", ".keyword")    // omit on keyword-mapped strings
   *     .load()
-  *     .where($"event_type" === "purchase")    // pushed as an exact term
+  *     .where($"event_type" === "purchase")    // an exact term on event_type.keyword
   * }}}
   */
 class EsScrollSource extends TableProvider {
@@ -157,9 +157,10 @@ class EsScrollSource extends TableProvider {
     val sample = options.getInt("inferSample", 100)
     val body   = s"""{"size":$sample,"query":{"match_all":{}}}"""
     val resp   = EsScrollSource.post(conn, s"/$target/_search", body)
-    val m      = new ObjectMapper
-    val hits   = m.readTree(resp).path("hits").path("hits")
-    val sources = (0 until hits.size).map(i => hits.get(i).path("_source").toString)
+    val hits   = new ObjectMapper().readTree(resp).path("hits").path("hits")
+    // only object `_source`s, the documents decodeHit reads; a scalar one
+    // would infer a `_corrupt_record` column
+    val sources = (0 until hits.size).map(i => hits.get(i).path("_source")).filter(_.isObject).map(_.toString)
     val spark   = SparkSession.active
     import spark.implicits._
     SchemaInfer.allNullable(SchemaInfer.infer(spark, spark.createDataset(sources)))
@@ -414,31 +415,21 @@ object EsScrollSource {
   }
 
   /** Compile accepted Spark source filters to an ES query-DSL JSON string.
-    * String equalities follow `stringEquality` (see the class doc): exact
-    * `term`/`terms` on `field + keywordSuffix`, or the reference's
-    * `match_phrase` with Spark re-evaluation. `Not(leaf)` carries the
+    * A string equality or membership is an exact `term`/`terms` on
+    * `termField(column)` (see the class doc); ranges, exists and other
+    * equalities address the column itself. `Not(leaf)` carries the
     * exists() null guard; unsupported shapes are rejected in [[supported]]
     * and left for Spark to evaluate. */
-  private[es] def toEsQuery(
-      filters: Array[Filter],
-      stringEquality: String = "term",
-      keywordSuffix: String = ""
-  ): String = {
+  private[es] def toEsQuery(filters: Array[Filter], termField: String => String): String = {
     val m = new ObjectMapper
-    // keyword-suffixed field for exact string matching in term mode; the
-    // base name everywhere else (ranges, exists, non-string equality)
-    def kw(a: String): String =
-      if (stringEquality == "term" && keywordSuffix.nonEmpty) a + keywordSuffix else a
     def clause(f: Filter): ObjectNode = {
       val n = m.createObjectNode()
       f match {
-        case EqualTo(a, v: String) =>
-          if (stringEquality == "phrase") n.putObject("match_phrase").put(a, v)
-          else n.putObject("term").put(kw(a), v)
+        case EqualTo(a, v: String) => n.putObject("term").put(termField(a), v)
         case EqualTo(a, v)         => putVal(n.putObject("term"), a, v)
         case In(a, vs) =>
           val allStrings = vs.nonEmpty && vs.forall(_.isInstanceOf[String])
-          val arr = n.putObject("terms").putArray(if (allStrings) kw(a) else a)
+          val arr = n.putObject("terms").putArray(if (allStrings) termField(a) else a)
           vs.foreach(v => putArr(arr, v))
         case GreaterThan(a, v)        => putVal(n.putObject("range").putObject(a), "gt", v)
         case GreaterThanOrEqual(a, v) => putVal(n.putObject("range").putObject(a), "gte", v)
@@ -537,9 +528,9 @@ object EsScrollSource {
     case _ => false
   }
 
-  /** Fields carrying a pushed string equality/membership — the ones whose
-    * `term`/`terms` compilation silently under-matches when the live
-    * mapping analyzes them (see [[validateTermFields]]). */
+  /** Fields carrying a string equality/membership — the ones whose
+    * `term`/`terms` matches single analyzed tokens when the live mapping
+    * analyzes them (see `EsScanBuilder.analyzedTextFields`). */
   private[es] def stringEqFields(f: Filter): Seq[String] = f match {
     case EqualTo(a, _: String)                                       => Seq(a)
     case In(a, vs) if vs != null && vs.exists(_.isInstanceOf[String]) => Seq(a)
@@ -547,76 +538,6 @@ object EsScrollSource {
     case Or(l, r)                                                    => stringEqFields(l) ++ stringEqFields(r)
     case Not(c)                                                      => stringEqFields(c)
     case _                                                           => Nil
-  }
-
-  /** Term-mode mapping validation (r13 ADVICE): against a default-mapped
-    * cluster (analyzed `text` with a `.keyword` raw subfield) a `term` on
-    * the BASE field matches single analyzed tokens, so multi-token or
-    * case-differing equality silently returns wrong (usually empty)
-    * results unless `keywordSuffix=.keyword` is set. One
-    * `GET /<index>/_mapping` at scan construction fails that
-    * misconfiguration FAST:
-    *   - empty suffix → every string-equality field must NOT be mapped
-    *     `text` (plain `keyword` is the exact-match mapping);
-    *   - configured suffix → the subfield must exist and be `keyword`
-    *     (a suffix pointing at nothing is an always-empty term).
-    * A cluster (or stub) without the endpoint — or without the field —
-    * skips validation: absence of evidence is not a misconfiguration. */
-  private[es] def validateTermFields(
-      conn: EsConn,
-      index: String,
-      fields: Seq[String],
-      keywordSuffix: String
-  ): Unit = {
-    if (fields.isEmpty) return
-    val root =
-      try new ObjectMapper().readTree(get(conn, s"/$index/_mapping"))
-      catch { case _: Exception => return }
-    val it = root.fields()
-    while (it.hasNext) {
-      val e     = it.next()
-      val props = e.getValue.path("mappings").path("properties")
-      fields.foreach { f =>
-        val fm = props.path(f)
-        if (!fm.isMissingNode) {
-          val t = fm.path("type").asText("")
-          if (keywordSuffix.nonEmpty) {
-            val subT = fm.path("fields").path(keywordSuffix.stripPrefix(".")).path("type").asText("")
-            require(subT == "keyword",
-              s"es-scroll: exact string equality pushed as term on '$f$keywordSuffix', but index " +
-                s"'${e.getKey}' maps '$f' (type '$t') without a keyword '$keywordSuffix' subfield — " +
-                "fix keywordSuffix, or set stringEquality=phrase for analyzed matching with Spark re-filter")
-          } else
-            require(t != "text",
-              s"es-scroll: exact string equality pushed as term on analyzed text field '$f' " +
-                s"(index '${e.getKey}') — this matches single analyzed tokens, not exact values; " +
-                "set keywordSuffix=.keyword for default-mapped indices, or stringEquality=phrase")
-        }
-      }
-    }
-  }
-
-  /** Does `f` contain a string equality/membership anywhere? (In `phrase`
-    * mode those compile to analyzed match_phrase and must be re-evaluated
-    * by Spark.) */
-  private[es] def containsStringEq(f: Filter): Boolean = f match {
-    case EqualTo(_, _: String) => true
-    case In(_, vs)             => vs != null && vs.exists(_.isInstanceOf[String])
-    case And(l, r)             => containsStringEq(l) || containsStringEq(r)
-    case Or(l, r)              => containsStringEq(l) || containsStringEq(r)
-    case Not(c)                => containsStringEq(c)
-    case _                     => false
-  }
-
-  /** Is `f` safe to push as a SUPERSET in `phrase` mode? A match_phrase
-    * over-matches, which is harmless under must/should (Spark's re-filter
-    * trims the extras) but destructive under must_not (rows the analyzer
-    * over-matched are excluded server-side and can never come back). */
-  private[es] def phraseSafe(f: Filter): Boolean = f match {
-    case Not(c)    => !containsStringEq(c)
-    case And(l, r) => phraseSafe(l) && phraseSafe(r)
-    case Or(l, r)  => phraseSafe(l) && phraseSafe(r)
-    case _         => true
   }
 
   /** One `_source` JSON field → the Spark internal value for `dt`; null on
@@ -666,10 +587,10 @@ object EsScrollSource {
   private[es] val MaxResultWindow = 10000
 }
 
-/** One pushed GROUP BY key: a column served by a composite `terms` source,
-  * or — `dayZone` set — the local day of a timestamp column in that zone,
-  * served by a 1-day `date_histogram` source whose bucket keys are the
-  * epoch millis of local midnight. */
+/** One pushed GROUP BY key: a column served by a composite `terms` source
+  * on its server `field`, or — `dayZone` set — the local day of a
+  * timestamp column in that zone, served by a 1-day `date_histogram`
+  * source whose bucket keys are the epoch millis of local midnight. */
 private[es] case class EsGroupKey(
     name: String,
     field: String,
@@ -696,7 +617,6 @@ private class EsScrollTable(schema0: StructType, props: Map[String, String])
       else ScrollPaging,
       EsScrollSource.optOrElse(options, "cursorField", "event_id"), // streaming tail cursor
       options.getLong("maxIdsPerBatch", 1000L), // streaming admission: cursor-value step per epoch
-      EsScrollSource.optOrElse(options, "stringEquality", "term"), // or "phrase" (reference parity + re-filter)
       EsScrollSource.optOrElse(options, "keywordSuffix", "") // e.g. ".keyword" for default-mapped text
     )
 }
@@ -712,7 +632,6 @@ private class EsScanBuilder(
     paging: EsPaging,
     cursorField: String = "event_id",
     maxIdsPerBatch: Long = 1000L,
-    stringEquality: String = "term",
     keywordSuffix: String = ""
 ) extends ScanBuilder
     with SupportsPushDownRequiredColumns
@@ -736,21 +655,55 @@ private class EsScanBuilder(
 
   override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
 
-  /** Pushdown with per-mode exactness: in `term` mode every supported
-    * filter is exact and fully pushed; in `phrase` mode filters containing
-    * a string equality are pushed only when superset-safe (see
-    * [[EsScrollSource.phraseSafe]]) and ALWAYS handed back to Spark for
-    * exact re-evaluation (returning them here is the DSv2 contract for
-    * inexact pushdown). */
+  /** The server field a column is addressed by: a string column's
+    * `keywordSuffix` subfield, else the column itself. Exact `term`s,
+    * top-N `sort` keys and composite `terms` group keys all name it. */
+  private def serverField(f: StructField): String =
+    if (f.dataType == StringType) f.name + keywordSuffix else f.name
+
+  /** Every supported filter on known columns compiles to exact DSL and is
+    * pushed whole, except one carrying a string equality on a field the
+    * index maps as analyzed `text` ([[analyzedTextFields]]): Spark
+    * evaluates that one (returning it here puts a `Filter` after the
+    * scan). */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (ok, rest) = filters.partition(f =>
-      EsScrollSource.supported(f) && refsKnownCols(f) &&
-        (stringEquality != "phrase" || EsScrollSource.phraseSafe(f)))
-    pushed = ok
-    postScan =
-      if (stringEquality == "phrase") rest ++ ok.filter(EsScrollSource.containsStringEq)
-      else rest
+    val (ok, rest) = filters.partition(f => EsScrollSource.supported(f) && refsKnownCols(f))
+    val text = analyzedTextFields(ok.flatMap(EsScrollSource.stringEqFields).distinct.toSeq)
+    val (exact, analyzed) = ok.partition(f => !EsScrollSource.stringEqFields(f).exists(text))
+    pushed = exact
+    postScan = rest ++ analyzed
     postScan
+  }
+
+  /** Of `fields`, those a `term` on the server field would match as
+    * analyzed tokens: mapped `text` with no `keywordSuffix` set. Read from
+    * one `GET /<index>/_mapping`, sent only when `fields` is non-empty. A
+    * set suffix must name a `keyword` subfield of each field — else the
+    * scan fails fast, since the term on a missing subfield matches
+    * nothing. A cluster without the endpoint, or an index without the
+    * field, rules nothing out. */
+  private def analyzedTextFields(fields: Seq[String]): Set[String] = {
+    if (fields.isEmpty) return Set.empty
+    val root =
+      try new ObjectMapper().readTree(EsScrollSource.get(conn, s"/$index/_mapping"))
+      catch { case _: Exception => return Set.empty }
+    root.fields().asScala.flatMap { e =>
+      val props = e.getValue.path("mappings").path("properties")
+      fields.filter { f =>
+        val fm = props.path(f)
+        val t  = fm.path("type").asText("")
+        if (fm.isMissingNode) false
+        else if (keywordSuffix.isEmpty) t == "text"
+        else {
+          val subT = fm.path("fields").path(keywordSuffix.stripPrefix(".")).path("type").asText("")
+          require(subT == "keyword",
+            s"es-scroll: exact string equality pushed as term on '$f$keywordSuffix', but index " +
+              s"'${e.getKey}' maps '$f' (type '$t') without a keyword '$keywordSuffix' subfield — " +
+              "fix keywordSuffix, or leave it unset to have Spark filter analyzed text fields")
+          false
+        }
+      }
+    }.toSet
   }
   private def refsKnownCols(f: Filter): Boolean =
     f.references.forall(full.fieldNames.contains)
@@ -798,9 +751,7 @@ private class EsScanBuilder(
   private def sortJson: String = {
     val arr = new ObjectMapper().createArrayNode()
     topN.foreach { o =>
-      val f = sortColumn(o).get
-      val field = if (f.dataType == StringType) f.name + keywordSuffix else f.name
-      val spec  = arr.addObject().putObject(field)
+      val spec = arr.addObject().putObject(serverField(sortColumn(o).get))
       spec.put("order", if (o.direction == SortDirection.ASCENDING) "asc" else "desc")
       spec.put("missing", if (o.nullOrdering == NullOrdering.NULLS_FIRST) "_first" else "_last")
     }
@@ -825,8 +776,7 @@ private class EsScanBuilder(
     * multi-target read is pushed partially: each target's partition holds
     * that target's counts and Spark's final `sum(count)` merges them (a
     * group spans targets when its documents do). Refused when a post-scan
-    * filter exists (phrase-mode string equality): the server would count
-    * analyzer-matched docs, not Spark-equal ones. */
+    * filter exists: the server would count docs Spark then drops. */
   override def pushAggregation(agg: Aggregation): Boolean = {
     val ok = pushable(agg)
     if (ok) aggGroups = agg.groupByExpressions.map(groupKey(_).get)
@@ -851,7 +801,7 @@ private class EsScanBuilder(
   private def groupKey(e: Expression): Option[EsGroupKey] = e match {
     case nr: NamedReference if nr.fieldNames.length == 1 && full.fieldNames.contains(nr.fieldNames.head) =>
       val f = full(nr.fieldNames.head)
-      Some(EsGroupKey(f.name, f.name, f.dataType))
+      Some(EsGroupKey(f.name, serverField(f), f.dataType))
     case c: Cast if c.dataType == DateType => c.expression match {
       case nr: NamedReference if nr.fieldNames.sameElements(Array(timeField)) &&
           full.fieldNames.contains(timeField) && full(timeField).dataType == TimestampType =>
@@ -863,15 +813,10 @@ private class EsScanBuilder(
   }
 
   override def build(): Scan = {
-    if (stringEquality == "term")
-      EsScrollSource.validateTermFields(
-        conn, index,
-        pushed.flatMap(EsScrollSource.stringEqFields).distinct.toSeq,
-        keywordSuffix)
-    val query = EsScrollSource.toEsQuery(pushed, stringEquality, keywordSuffix)
+    val query = EsScrollSource.toEsQuery(pushed, a => serverField(full(a)))
     val resolve = () => targets
     if (aggGroups != null)
-      new EsAggScan(conn, index, pageSize, query, pushed, aggGroups, resolve, keywordSuffix)
+      new EsAggScan(conn, index, pageSize, query, pushed, aggGroups, resolve)
     else if (topN != null)
       new EsTopNScan(conn, index, required, query, pushed, resolve,
         sortJson, topN.mkString(", "), limit.get)
@@ -896,8 +841,7 @@ private case class EsAggPartition(
     index: String,
     queryJson: String,
     pageSize: Int,
-    groups: Array[EsGroupKey],
-    keywordSuffix: String
+    groups: Array[EsGroupKey]
 ) extends InputPartition
 
 /** Scan for a pushed COUNT(*) [GROUP BY keys]: one input partition per
@@ -911,8 +855,7 @@ private class EsAggScan(
     queryJson: String,
     pushed: Array[Filter],
     groups: Array[EsGroupKey],
-    resolveTargets: () => Seq[String],
-    keywordSuffix: String
+    resolveTargets: () => Seq[String]
 ) extends EsTargetScan(resolveTargets) {
   override def readSchema(): StructType =
     StructType(groups.map(g => StructField(g.name, g.dataType)) :+
@@ -926,7 +869,7 @@ private class EsAggScan(
     * whole answer; Spark's final `sum(count)` merges several. */
   override def planInputPartitions(): Array[InputPartition] =
     targets.map(t =>
-      EsAggPartition(conn, t, queryJson, pageSize, groups, keywordSuffix): InputPartition).toArray
+      EsAggPartition(conn, t, queryJson, pageSize, groups): InputPartition).toArray
   override def createReaderFactory(): PartitionReaderFactory =
     new PartitionReaderFactory {
       override def createReader(p: InputPartition): PartitionReader[InternalRow] =
@@ -963,12 +906,7 @@ private class EsAggReader(p: EsAggPartition) extends PartitionReader[InternalRow
             d.put("field", g.field)
             d.put("calendar_interval", "1d")
             d.put("time_zone", zone)
-          case None =>
-            // keyword subfield for string group keys (composite terms over
-            // an analyzed text field would group by TOKEN on real ES)
-            src.putObject("terms").put("field",
-              if (g.dataType == StringType && p.keywordSuffix.nonEmpty) g.field + p.keywordSuffix
-              else g.field)
+          case None => src.putObject("terms").put("field", g.field)
         }
         // real ES SKIPS docs missing the field unless told otherwise;
         // Spark's groupBy emits a null group — missing_bucket aligns them

@@ -20,8 +20,8 @@ import java.util.concurrent.atomic.AtomicLong
   *
   * Implements the slice of the ES REST API a scroll export touches:
   *   - `POST /{index}/_search?scroll=...` — initial search: evaluates the
-  *     request's query DSL (`match_all` / `match_phrase` / `term` /
-  *     `terms` / `range` / `exists` / `bool` with must/should/must_not)
+  *     request's query DSL (`match_all` / `term` / `terms` / `range` /
+  *     `exists` / `bool` with must/should/must_not; `term` is exact)
   *     against the seeded rows, applies the `slice` spec (docs are
   *     distributed by row index mod `max` — the server-side detail a
   *     client never observes), honors `"_source": [cols...]` filtering and
@@ -37,6 +37,8 @@ import java.util.concurrent.atomic.AtomicLong
   *     assert the connector's scroll hygiene).
   *   - `size:0` searches with a paged `composite` aggregation over `terms`
   *     and 1-day `date_histogram` sources, or a `max` metric.
+  *   - `GET /{index}/_mapping` — field types inferred from the seeded
+  *     values; `stringMapping` picks how string fields are mapped.
   *
   * Rows are seeded from a DataFrame via [[EsStubServer.fromDataFrame]] —
   * the one driver-side collect is the test double's seed (the server plays
@@ -55,8 +57,9 @@ class EsStubServer(
     rejectEvery: Int = 0,
     extraIndices: Map[String, IndexedSeq[Array[Any]]] = Map.empty,
     requireAuth: String = null, // expected Authorization header; null = open cluster
-    analyzedPhrase: Boolean = false // real-ES text semantics: match_phrase = consecutive-token containment
+    stringMapping: EsStubServer.StringMapping = EsStubServer.KeywordStrings
 ) {
+  import EsStubServer.{KeywordStrings, TextWithKeyword}
   private val allIndices: Map[String, IndexedSeq[Array[Any]]] =
     extraIndices + (index -> rows)
   private val mapper = new ObjectMapper
@@ -81,6 +84,8 @@ class EsStubServer(
   val aggCalls = new AtomicLong(0)
   /** `GET /_cat/indices` requests (pattern resolutions). */
   val catCalls = new AtomicLong(0)
+  /** `GET /<index>/_mapping` requests. */
+  val mappingCalls = new AtomicLong(0)
   /** The longest request line served, in bytes (`POST /<target>/_search
     * HTTP/1.1`); a real cluster rejects one longer than its
     * `http.max_initial_line_length`, 4,096 bytes by default. */
@@ -156,7 +161,7 @@ class EsStubServer(
         case ("POST" | "GET", "/_search/scroll") => scrollNext(body)
         case ("GET", "/_cat/indices") => catCalls.incrementAndGet(); catIndices()
         case ("GET", p) if p.endsWith("/_mapping") =>
-          mappingOf(p.stripPrefix("/").stripSuffix("/_mapping"))
+          mappingCalls.incrementAndGet(); mappingOf(p.stripPrefix("/").stripSuffix("/_mapping"))
         case ("DELETE", "/_pit") => clearPit(body)
         case ("POST", p) if p.endsWith("/_pit") && knownIndices(p.stripSuffix("/_pit") + "/_search") =>
           openPit(p)
@@ -277,11 +282,9 @@ class EsStubServer(
 
   /** `GET /<index-or-pattern>/_mapping` — field mappings inferred from the
     * seeded rows, in the real response shape
-    * `{index: {mappings: {properties: {f: {type: …}}}}}`. String fields
-    * model the cluster's mapping mode: exact `keyword` on the default stub,
-    * analyzed `text` WITH the dynamic-mapping `.keyword` raw subfield when
-    * `analyzedPhrase=true` — so the connector's term-mode validation sees
-    * exactly what a default-mapped cluster would serve. */
+    * `{index: {mappings: {properties: {f: {type: …}}}}}`. String fields are
+    * mapped as `stringMapping` says, so the connector sees what a cluster
+    * with that mapping would serve. */
   private def mappingOf(pattern: String): String = {
     val names =
       if (!pattern.contains("*")) {
@@ -299,7 +302,7 @@ class EsStubServer(
       colNames.zipWithIndex.foreach { case (c, i) =>
         val v = data.iterator.map(_(i)).find(_ != null).orNull
         val t = v match {
-          case _: String                           => if (analyzedPhrase) "text" else "keyword"
+          case _: String                           => if (stringMapping == KeywordStrings) "keyword" else "text"
           case _: java.lang.Long | _: java.lang.Integer => "long"
           case _: java.lang.Double | _: java.lang.Float => "double"
           case _: java.lang.Boolean                => "boolean"
@@ -308,7 +311,7 @@ class EsStubServer(
         }
         val fm = props.putObject(c)
         fm.put("type", t)
-        if (t == "text")
+        if (t == "text" && stringMapping == TextWithKeyword)
           fm.putObject("fields").putObject("keyword")
             .put("type", "keyword").put("ignore_above", 256)
       }
@@ -549,24 +552,7 @@ class EsStubServer(
     val bodyN = q.get(kind)
     kind match {
       case "match_all" => true
-      // `analyzedPhrase` models what REAL ES does to a match_phrase on an
-      // analyzed text field: the query's token sequence matches anywhere
-      // inside the document's token stream — "purchase" matches a doc whose
-      // field is "purchase order". Off by default (exact), on for the spec
-      // that proves the connector's phrase-mode re-filter repairs the
-      // over-match; `term` is ALWAYS exact (the keyword semantics).
-      case "match_phrase" if analyzedPhrase =>
-        val f = bodyN.fieldNames().next()
-        val vNode = bodyN.get(f)
-        val v = queryVal(if (vNode.isObject) vNode.get("value") else vNode)
-        (field(row, f), v) match {
-          case (fv: String, qv: String) =>
-            val ft = fv.split("\\s+").toSeq
-            val qt = qv.split("\\s+").toSeq
-            qt.nonEmpty && ft.sliding(qt.length).contains(qt)
-          case (fv, qv) => cmp(fv, qv).contains(0)
-        }
-      case "match_phrase" | "term" =>
+      case "term" =>
         val f = bodyN.fieldNames().next()
         val vNode = bodyN.get(f)
         val v = queryVal(if (vNode.isObject) vNode.get("value") else vNode)
@@ -599,6 +585,13 @@ class EsStubServer(
 }
 
 object EsStubServer {
+  /** How `_mapping` maps string fields: `keyword` (exact), analyzed `text`
+    * with the dynamic-mapping `.keyword` raw subfield, or `text` alone. */
+  sealed trait StringMapping
+  case object KeywordStrings extends StringMapping
+  case object TextWithKeyword extends StringMapping
+  case object TextOnly extends StringMapping
+
   /** Seed a stub index from a DataFrame. The collect here is the TEST
     * DOUBLE's seed (the server impersonates the external ES cluster that
     * owns the data); it is bounded by fixture scale and is never an engine

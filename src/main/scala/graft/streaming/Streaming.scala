@@ -21,11 +21,11 @@ object Streaming {
 
   /** Tumbling 1-hour windows: event counts + distinct users. Streaming
     * aggregation can't do exact distinct (unbounded per-window state), so
-    * the stream path uses approx_count_distinct (HLL) — the correct trade
-    * at scale; batch keeps the exact count for the oracle. */
-  def tumblingCounts(ev: DataFrame, exactDistinct: Boolean = true): DataFrame = {
+    * a stream uses approx_count_distinct (HLL) — the correct trade at
+    * scale; a batch keeps the exact count for the oracle. */
+  def tumblingCounts(ev: DataFrame): DataFrame = {
     val distinctUsers =
-      if (exactDistinct) countDistinct(col("user_id")) else approx_count_distinct(col("user_id"))
+      if (ev.isStreaming) approx_count_distinct(col("user_id")) else countDistinct(col("user_id"))
     ev.groupBy(window(col("ts"), "1 hour"))
       .agg(count(lit(1)).as("n"), distinctUsers.as("n_users"))
       .select(unix_micros(col("window.start")).as("win_start_us"), col("n"), col("n_users"))
@@ -68,7 +68,7 @@ object Streaming {
   /** Watermarked variant for unbounded sources (late data beyond 10 minutes
     * dropped; state for closed windows evicted). */
   def tumblingCountsWithWatermark(stream: DataFrame): DataFrame =
-    tumblingCounts(stream.withWatermark("ts", "10 minutes"), exactDistinct = false)
+    tumblingCounts(stream.withWatermark("ts", "10 minutes"))
 
   def sessionizeWithWatermark(stream: DataFrame): DataFrame =
     sessionize(stream.withWatermark("ts", "10 minutes"))

@@ -62,11 +62,10 @@ class DisciplineSpec extends AnyFunSuite {
 
   test("driver-side collect() stays confined to the fourteen audited sites") {
     // .collect() of row DATA on the driver is the anti-distributed smell;
-    // the audited sites are CLI display (x3: the parquet-mode menu, the
-    // --es wire-mode menu and the audit report both modes print — the
-    // wire menu is a PUSHED composite aggregation, so the collect is
-    // O(topK) bucket rows, and the audit is O(days); both are the
-    // reference's own UX), the
+    // the audited sites are CLI display (x2: the menu and the audit report
+    // both modes print — over the wire the menu is a PUSHED composite
+    // aggregation, so the collect is O(topK) bucket rows, and the audit is
+    // O(days); both are the reference's own UX), the
     // per-BUCKET scalar fold in the two-pass prefix sum (bounded by
     // shuffle-partition count, Chunking.scala:96 doc), the BPE
     // learner's capped word-frequency table (bounded by BpeVocabCap —
@@ -196,6 +195,14 @@ class DisciplineSpec extends AnyFunSuite {
       .flatMap(l => """^(?:private |abstract )*class (\w+)""".r.findFirstMatchIn(l).map(_.group(1)))
       .nextOption()
     assert(owner.contains("EsHitsReader"), s"decodeHit is called in $owner, not the shared page loop")
+  }
+
+  test("no ES query in main code is a match_phrase: string equality is one exact term path") {
+    // an analyzed match_phrase over-matches exact equality, so it could
+    // only ever be pushed with Spark re-filtering its result; the connector
+    // instead serves analyzed text fields by not pushing the equality
+    val sites = hits("\"match_phrase\"")
+    assert(sites.isEmpty, s"match_phrase query built or evaluated in main code:\n${sites.mkString("\n")}")
   }
 
   test("tools/run_probe.sh opens the same JDK packages as build.sbt") {

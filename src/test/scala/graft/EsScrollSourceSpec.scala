@@ -63,91 +63,52 @@ class EsScrollSourceSpec extends SparkSpec {
     }
   }
 
-  test("phrase mode pushes match_phrase for traffic reduction but Spark re-evaluates exactly") {
+  test("a string equality on an analyzed text field is Spark's filter; a wrong keywordSuffix fails fast") {
     import spark.implicits._
-    withServer(events) { (srv, url) =>
-      val purchases = esRead(url, slices = 2)
-        .where($"event_type" === "purchase")
-      val phrased = spark.read
-        .format("graft.sources.es.EsScrollSource")
-        .schema(events.schema)
-        .option("url", url).option("index", "events")
-        .option("slices", 2)
-        .option("stringEquality", "phrase")
-        .load()
-        .where($"event_type" === "purchase")
-      val plan = phrased.queryExecution.executedPlan.toString
-      assert(plan.contains("match_phrase"), s"phrase mode must push match_phrase:\n$plan")
-      // the DSv2 contract for INEXACT pushdown: the filter also survives
-      // post-scan, so an analyzed over-match can never leak rows through
-      assert(plan.contains("Filter"),
-        s"phrase-mode string equality must be re-evaluated by Spark:\n$plan")
-      val n = phrased.collect().length.toLong
-      assert(n === events.where($"event_type" === "purchase").count())
-      assert(srv.hitsServed.get() === n, "the server still filters server-side")
-    }
-  }
-
-  test("phrase mode survives a genuinely ANALYZED endpoint: server over-matches, Spark repairs") {
-    import spark.implicits._
-    // half the docs carry the exact value, half a SUPERSTRING the analyzer
-    // phrase-matches ("purchase" ⊂ "purchase order") — the divergence the
-    // class doc warns about, now modeled by the stub's analyzedPhrase mode
+    import EsStubServer.{KeywordStrings, TextOnly, TextWithKeyword}
+    // half the docs carry the exact value, half a superstring a term on an
+    // analyzed field would also match ("purchase" is a token of "purchase
+    // order"): only Spark's own filter, after the scan, is exact there
     val mixed = events.limit(400).withColumn("event_type",
       when($"event_id" % 2 === 0, lit("purchase")).otherwise(lit("purchase order")))
     val (cols, data) = (mixed.columns,
       mixed.collect().map(r => Array.tabulate[Any](mixed.columns.length)(r.get)).toIndexedSeq)
-    val srv = new EsStubServer("events", cols, data, analyzedPhrase = true)
-    srv.start()
-    try {
-      def read(mode: String, suffix: String = "") = spark.read
-        .format("graft.sources.es.EsScrollSource")
-        .schema(events.schema)
-        .option("url", srv.url).option("index", "events")
-        .option("slices", 2)
-        .option("stringEquality", mode)
-        .option("keywordSuffix", suffix)
-        .load()
-        .where($"event_type" === "purchase")
-      // phrase mode: the server ships its analyzed over-matches, Spark's
-      // post-scan re-filter (the inexact-pushdown contract) trims them
-      val before = srv.hitsServed.get()
-      val viaPhrase = read("phrase").collect()
-      assert(viaPhrase.length === 200, "only EXACT equality survives the re-filter")
-      assert(srv.hitsServed.get() - before === 400,
-        "the analyzed endpoint must actually have over-returned (both halves phrase-match)")
-      // term mode against the analyzed mapping REQUIRES the raw subfield —
-      // exact on event_type.keyword, the server itself filters right
-      val before2 = srv.hitsServed.get()
-      val viaTerm = read("term", ".keyword").collect()
-      assert(viaTerm.length === 200)
-      assert(srv.hitsServed.get() - before2 === 200,
-        "term on the keyword subfield must stay exact server-side")
-      // and WITHOUT the subfield the scan must fail FAST at construction
-      // (r13 ADVICE: the silent single-token under-match), via the
-      // _mapping validation — not silently return wrong results
-      val e = intercept[Exception] { read("term").collect() }
-      assert(e.getMessage.contains("keywordSuffix"),
-        s"term-on-analyzed-text must name the fix, got: ${e.getMessage}")
-    } finally srv.stop()
-  }
-
-  test("phrase mode never pushes a string equality under Not (must_not over-match would under-return)") {
-    import spark.implicits._
-    withServer(events) { (srv, url) =>
-      val notPurchase = spark.read
-        .format("graft.sources.es.EsScrollSource")
-        .schema(events.schema)
-        .option("url", url).option("index", "events")
-        .option("slices", 2)
-        .option("stringEquality", "phrase")
-        .load()
-        .where(!($"event_type" === "purchase"))
-      val plan = notPurchase.queryExecution.executedPlan.toString
-      assert(!plan.contains("must_not"),
-        s"a phrase-mode Not(string equality) must stay with Spark:\n$plan")
-      assert(notPurchase.collect().length.toLong ===
-        events.where(!($"event_type" === "purchase")).count())
+    def read(url: String, suffix: String = "") = spark.read
+      .format("graft.sources.es.EsScrollSource")
+      .schema(events.schema)
+      .option("url", url).option("index", "events")
+      .option("slices", 2)
+      .option("keywordSuffix", suffix)
+      .load()
+    Seq(TextOnly, TextWithKeyword, KeywordStrings).foreach { mapping =>
+      val srv = new EsStubServer("events", cols, data, stringMapping = mapping)
+      srv.start()
+      try {
+        val purchases = read(srv.url).where($"event_type" === "purchase")
+        val postScan  = purchases.queryExecution.executedPlan.collect {
+          case f: org.apache.spark.sql.execution.FilterExec => f.condition.sql
+        }
+        assert(purchases.collect().length === 200, s"$mapping: exactly the equal rows")
+        assert(srv.mappingCalls.get() === 1, s"$mapping: one _mapping request per scan builder")
+        if (mapping == KeywordStrings) {
+          assert(srv.hitsServed.get() === 200, "a keyword field is filtered by the server")
+          assert(!postScan.exists(_.contains("'purchase'")), s"the term is pushed whole: $postScan")
+        } else {
+          // a text field without a suffix: no term on it, every doc shipped,
+          // and the equality is a Filter above the scan
+          assert(!srv.lastSearchBody.contains("\"term\""), s"$mapping: ${srv.lastSearchBody}")
+          assert(srv.hitsServed.get() === 400, s"$mapping: the server does not filter")
+          assert(postScan.exists(_.contains("'purchase'")), s"$mapping: the equality must stay with Spark: $postScan")
+        }
+        // a read with no string equality sends no _mapping request
+        read(srv.url).where($"value" > 0.0).collect()
+        assert(srv.mappingCalls.get() === 1, s"$mapping: no _mapping without a string equality")
+        // a suffix naming no keyword subfield fails fast at scan construction
+        if (mapping != TextWithKeyword) {
+          val e = intercept[Exception] { read(srv.url, ".keyword").where($"event_type" === "purchase").collect() }
+          assert(e.getMessage.contains("keywordSuffix"), s"$mapping: the error must name the fix, got: ${e.getMessage}")
+        }
+      } finally srv.stop()
     }
   }
 
@@ -214,7 +175,7 @@ class EsScrollSourceSpec extends SparkSpec {
     // plain-keyword field would be an always-empty term on real ES)
     val (cols, data) = (events.columns,
       events.collect().map(r => Array.tabulate[Any](events.columns.length)(r.get)).toIndexedSeq)
-    val srv = new EsStubServer("events", cols, data, analyzedPhrase = true)
+    val srv = new EsStubServer("events", cols, data, stringMapping = EsStubServer.TextWithKeyword)
     srv.start()
     try {
       val got = spark.read
@@ -340,6 +301,13 @@ class EsScrollSourceSpec extends SparkSpec {
       // (collect: the malformed-skip lives in the scroll decode; an agg
       // count would — like real ES — count the docs server-side)
       assert(esRead(url, slices = 1, pageSize = 1000).collect().length === 90)
+    }
+    // schema inference samples only object `_source`s, as the decode reads
+    withServer(events.limit(50), malformedEvery = 10) { (_, url) =>
+      val inferred = spark.read.format("graft.sources.es.EsScrollSource")
+        .option("url", url).option("index", "events").load()
+      assert(!inferred.schema.fieldNames.contains("_corrupt_record"), inferred.schema.treeString)
+      assert(inferred.collect().length === 45)
     }
   }
 
@@ -718,14 +686,13 @@ class EsScrollSourceSpec extends SparkSpec {
       .cache()
   }
 
-  private def keyedRead(url: String, phrase: Boolean = false): DataFrame =
+  private def keyedRead(url: String): DataFrame =
     spark.read
       .format("graft.sources.es.EsScrollSource")
       .schema(keyed.schema)
       .option("url", url)
       .option("index", "events")
       .option("slices", 4)
-      .option("stringEquality", if (phrase) "phrase" else "term")
       .load()
 
   /** Rows as a sorted multiset (ties inside a top-N come back in any order). */
@@ -808,12 +775,12 @@ class EsScrollSourceSpec extends SparkSpec {
         spark.conf.set("spark.sql.ansi.enabled", "false")
         assert(scrolled(perDay(keyedRead(url))) === perDay(keyed))
       } finally spark.conf.set("spark.sql.ansi.enabled", prevAnsi)
-      // phrase mode: a post-scan filter means the server ranks/counts rows
-      // Spark then drops
-      val purchases = keyed.where($"event_type" === "purchase")
-      assert(scrolled(bag(keyedRead(url, phrase = true).where($"event_type" === "purchase")
+      // a filter the source cannot push is a post-scan filter: the server
+      // would rank/count rows Spark then drops
+      val purchases = keyed.where($"event_type".startsWith("pur"))
+      assert(scrolled(bag(keyedRead(url).where($"event_type".startsWith("pur"))
         .orderBy($"event_id").limit(10))) === bag(purchases.orderBy($"event_id").limit(10)))
-      assert(scrolled(perDay(keyedRead(url, phrase = true).where($"event_type" === "purchase")))
+      assert(scrolled(perDay(keyedRead(url).where($"event_type".startsWith("pur"))))
         === perDay(purchases))
       // a cast of a non-time column is no date_histogram, and a float sort
       // key has no server order equal to Spark's

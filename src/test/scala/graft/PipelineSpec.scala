@@ -144,6 +144,10 @@ class PipelineSpec extends SparkSpec {
         assert(Seq("k", "tags", "geo").forall(st.fieldNames.contains), s"$source: $st")
         assert(!Files.exists(asvc), s"$source: a nested sample renders no .asvc")
         val back = spark.read.parquet(s"$out/data")
+        // the files hold the event columns, the schema.json fields and the
+        // day partition: not the dead-letter split's `_corrupt` marker
+        assert(back.columns.toSeq === Seq("event_id", "user_id", "ts", "value") ++ st.fieldNames :+ "day",
+          source)
         assert(back.count() === ev.count(), source)
         assert(back.where($"event_id" === first).select($"geo.lat", $"tags").head() ===
           org.apache.spark.sql.Row(1.5, Seq("a", "b")), source)

@@ -199,7 +199,7 @@ class StreamingSpec extends SparkSpec {
 
   test("file-replay tumbling counts equal the batch result end-to-end") {
     import spark.implicits._
-    val stream = Streaming.tumblingCounts(Streaming.replayStream(spark, sf), exactDistinct = false)
+    val stream = Streaming.tumblingCounts(Streaming.replayStream(spark, sf))
     val q = stream.writeStream
       .format("memory")
       .queryName("replay_test")

@@ -28,9 +28,9 @@ import java.nio.charset.StandardCharsets
   * fidelity work): explicit-mapping seed → sliced scroll export equality
   * (q163 shape), PIT + search_after plan-pair equality (q166 shape),
   * composite-agg discovery equality (q164 shape), exact `term` pushdown on
-  * a keyword field, phrase-mode re-filter on an ANALYZED text field (the
-  * real-analyzer divergence the stub's analyzedPhrase mode models), and
-  * the term-on-analyzed-text fail-fast via the live `_mapping`. */
+  * a keyword field, and the live `_mapping` deciding an equality on an
+  * ANALYZED text field: Spark's filter without a suffix, an exact term on
+  * the `.keyword` subfield, a fail-fast on a suffix naming no subfield. */
 class LiveEsSpec extends SparkSpec {
 
   private val urlOpt  = sys.env.get("ES_URL")
@@ -151,31 +151,28 @@ class LiveEsSpec extends SparkSpec {
     }
   }
 
-  test("live: phrase mode on the ANALYZED field over-matches server-side and Spark's re-filter repairs it") {
+  test("live: an equality on the analyzed field is Spark's filter without a suffix; a wrong suffix fails fast") {
     withLive { url =>
       import spark.implicits._
-      // 'purchase order 0' phrase-matches every "purchase order N" note on
-      // an analyzer that strips nothing here — but equality is exact: only
-      // the N=0 rows survive the re-filter. (The stub's analyzedPhrase mode
-      // models exactly this; the live analyzer is the ground truth.)
-      val exact = read(url, "stringEquality" -> "phrase")
-        .where($"note" === "purchase order 0").count()
-      assert(exact === seedRows.count { case (_, _, n, _) => n == "purchase order 0" }.toLong)
-    }
-  }
-
-  test("live: term-mode equality on the analyzed field fails fast at scan construction (mapping validation)") {
-    withLive { url =>
-      import spark.implicits._
+      val want = seedRows.count { case (_, _, s, _) => s == "purchase order 0" }.toLong
+      // no suffix: a term on analyzed `note` would match its tokens, so the
+      // equality is not pushed and Spark filters after the scan
+      val df   = read(url).where($"note" === "purchase order 0")
+      val plan = df.queryExecution.executedPlan
+      assert(plan.collect { case f: org.apache.spark.sql.execution.FilterExec => f.condition.sql }
+        .exists(_.contains("'purchase order 0'")), s"the equality must stay with Spark:\n$plan")
+      assert(!plan.toString.contains("\"term\""), s"no term on the analyzed field:\n$plan")
+      assert(df.collect().length.toLong === want)
+      // a suffix naming no keyword subfield fails fast at scan construction
       val e = intercept[Exception] {
-        read(url).where($"note" === "purchase order 0").collect()
+        read(url, "keywordSuffix" -> ".raw").where($"note" === "purchase order 0").collect()
       }
       assert(e.getMessage.contains("keywordSuffix"),
-        s"term-on-analyzed-text must fail with the fix named, got: ${e.getMessage}")
-      // and the named fix works: exact equality on the raw subfield
+        s"a missing subfield must fail with the fix named, got: ${e.getMessage}")
+      // the raw subfield: an exact term on note.keyword
       val n = read(url, "keywordSuffix" -> ".keyword")
         .where($"note" === "purchase order 0").count()
-      assert(n === seedRows.count { case (_, _, s, _) => s == "purchase order 0" }.toLong)
+      assert(n === want)
     }
   }
 }
