@@ -1,12 +1,14 @@
 package graft
 
 import graft.sources.{AvroAsvc, JsonDecode, SchemaInfer}
+import java.util.concurrent.CompletionException
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.ParquetReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{classic, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DateType, LongType, StructField, StructType}
 
@@ -27,7 +29,10 @@ import org.apache.spark.sql.types.{DateType, LongType, StructField, StructType}
   * window's documents: the schema sample's `orderBy(event_id).limit(100)`
   * is a pushed top-N (one sorted search shipping 100 hits) and the
   * audit's per-day window count a pushed `date_histogram` aggregation
-  * (zero hits; one job when the window is one search target).
+  * (zero hits; one job when the window is one search target). The sample
+  * is inferred on the driver (no job), and the window count runs on its
+  * own thread while the sample, the inference and the write run on the
+  * caller's, so the call waits for the longer of the two, not their sum.
   */
 object Pipeline {
 
@@ -43,13 +48,14 @@ object Pipeline {
   ): DataFrame = {
     import spark.implicits._
     val ev = Tables.events(spark, sfDir)
-    // Resolve the window bound ONCE driver-side (one tiny max-aggregate
-    // job — the reference's index-discovery round trip). Inlining the bound
-    // as a literal lets every downstream job push `ts >= <bound>` into its
-    // parquet scan instead of re-running the scalar subquery + broadcast
-    // per action (this pipeline is multi-action by nature: sample, write,
-    // audit).
-    val mx = ev.agg(max($"ts")).head().getTimestamp(0)
+    // Resolve the window bound ONCE driver-side (the reference's
+    // index-discovery round trip): from the footers' `ts` statistics, or
+    // one tiny max-aggregate query when they cannot give it exactly.
+    // Inlining the bound as a literal lets every downstream job push
+    // `ts >= <bound>` into its parquet scan instead of re-running the
+    // scalar subquery + broadcast per action (this pipeline is
+    // multi-action by nature: sample, write, audit).
+    val mx = Tables.eventsMaxTs(spark, sfDir).getOrElse(ev.agg(max($"ts")).head().getTimestamp(0))
     val lo = java.sql.Timestamp.from(mx.toInstant.minus(java.time.Duration.ofDays(windowDays)))
     exportEvents(ev, outDir, eventType, Some(lo))
   }
@@ -73,18 +79,56 @@ object Pipeline {
       .fold(ev)(lo => ev.filter($"ts" >= lit(lo)))
       .filter($"event_type" === eventType)
 
+    // O14's window totals (see the audit below) depend on `windowed` only:
+    // they run on their own thread from here, alongside the sample, the
+    // inference and the write, and are joined before the audit is built.
+    val (windowTotals, exported) = alongside(spark) {
+      windowed.groupBy(to_date($"ts").as("day")).agg(count(lit(1)).as("n_win")).collect()
+    } {
+      writeDecoded(windowed, outDir, eventType)
+    }
+
+    // O14: audit = the committed footers' row counts per day against the
+    // per-day WINDOW totals. good/bad partition the window exactly, so
+    // n_dead = n_window − n_rows; the totals prune to (ts) with the same
+    // pushed filters — the dead-letter count costs a metadata-cheap scan
+    // (over ES a pushed aggregation), not a decode, and it stays a read of
+    // the source independent of the write it checks. Every exported day
+    // has window rows by construction, so the totals' days cover both
+    // all-good and all-bad days (the latter have no directory: n_rows =
+    // 0). The null day matches null-safely (the `<=>` rule): without a
+    // window bound null-ts rows are exported too, under the default
+    // partition. The totals are one row per day in the window, so they are
+    // collected and the audit is a local frame: no read, join or sort job.
+    val audit = windowTotals
+      .map { r =>
+        val day  = Option(r.getDate(0))
+        val rows = exported.getOrElse(day.map(_.toString), 0L)
+        Row(day.orNull, rows, r.getLong(1) - rows)
+      }
+      .sortBy(r => Option(r.getDate(0)).map(_.toLocalDate.toEpochDay)) // null day first
+    spark.createDataFrame(java.util.Arrays.asList(audit: _*), AuditSchema)
+  }
+
+  /** O5-O12 of [[exportEvents]]: sample, infer and persist the props
+    * schema, then decode and write the day-partitioned export. Returns the
+    * committed files' footer row counts per day ([[footerRowsByDay]]). */
+  private def writeDecoded(
+      windowed: DataFrame,
+      outDir: String,
+      eventType: String
+  ): Map[Option[String], Long] = {
+    val spark = windowed.sparkSession
+    import spark.implicits._
     // O5-O8: infer the props schema from a deterministic sample, nullable.
     // The 100 sample rows are collected ONCE (one TakeOrdered job) and
-    // re-used for both the inference and the .asvc first-row rendering —
-    // the previous form ran the orderBy+limit pipeline twice (a
-    // distributed read.json inference pass plus a separate take(1)), two
-    // full extra jobs per invocation for identical bytes (r19, guide §1.2:
-    // don't compute things twice). 100 one-line JSON strings on the driver
-    // is not a driver-memory concern.
+    // re-used for both the inference and the .asvc first-row rendering;
+    // the inference types them on the driver with Spark's JSON inference
+    // code, no second job. 100 one-line JSON strings on the driver is not
+    // a driver-memory concern.
     val sampleRows: Array[String] =
       windowed.orderBy($"event_id").limit(100).select($"props").as[String].take(100)
-    val propsSchema = SchemaInfer.allNullable(
-      SchemaInfer.infer(spark, spark.createDataset(sampleRows.toIndexedSeq)))
+    val propsSchema = SchemaInfer.allNullable(SchemaInfer.infer(spark, sampleRows.toIndexedSeq))
     // O9: persist beside the output (overwrite ≡ the reference's dir wipe):
     // the engine-native StructType JSON plus the reference's byte-exact
     // .asvc rendering of the first sample (golden-tested in SchemaInferSpec).
@@ -134,29 +178,27 @@ object Pipeline {
       .partitionBy("day")
       .parquet(s"$outDir/data")
 
-    // O14: audit = the committed footers' row counts per day against the
-    // per-day WINDOW totals. good/bad partition the window exactly, so
-    // n_dead = n_window − n_rows; the totals prune to (ts) with the same
-    // pushed filters — the dead-letter count costs a metadata-cheap scan
-    // (over ES a pushed aggregation), not a decode. Every exported day has
-    // window rows by construction, so the totals' days cover both all-good
-    // and all-bad days (the latter have no directory: n_rows = 0). The
-    // null day matches null-safely (the `<=>` rule): without a window bound
-    // null-ts rows are exported too, under the default partition. The
-    // totals are one row per day in the window, so they are collected and
-    // the audit is a local frame: no read, join or sort job.
-    val exported = footerRowsByDay(spark, s"$outDir/data")
-    val audit = windowed
-      .groupBy(to_date($"ts").as("day"))
-      .agg(count(lit(1)).as("n_win"))
-      .collect()
-      .map { r =>
-        val day  = Option(r.getDate(0))
-        val rows = exported.getOrElse(day.map(_.toString), 0L)
-        Row(day.orNull, rows, r.getLong(1) - rows)
-      }
-      .sortBy(r => Option(r.getDate(0)).map(_.toLocalDate.toEpochDay)) // null day first
-    spark.createDataFrame(java.util.Arrays.asList(audit: _*), AuditSchema)
+    footerRowsByDay(spark, s"$outDir/data")
+  }
+
+  /** `side` on its own thread while `main` runs on the caller's; returns
+    * both results. The thread carries the caller's active session and
+    * Spark local properties (job group, description, scheduler pool), so
+    * its jobs are the caller's too. `side` is joined even when `main`
+    * fails, so no job outlives the call, and either side's failure is
+    * rethrown as thrown (`main`'s first). */
+  private[graft] def alongside[A, B](spark: SparkSession)(side: => A)(main: => B): (A, B) = {
+    val pool = java.util.concurrent.Executors.newSingleThreadExecutor { (r: Runnable) =>
+      val t = new Thread(r, "graft-export-side")
+      t.setDaemon(true)
+      t
+    }
+    try {
+      val sideRun = SQLExecution.withThreadLocalCaptured(spark.asInstanceOf[classic.SparkSession], pool)(side)
+      val b = try main finally sideRun.handle[Unit]((_: A, _: Throwable) => ()).join()
+      val a = try sideRun.join() catch { case e: CompletionException if e.getCause != null => throw e.getCause }
+      (a, b)
+    } finally pool.shutdown()
   }
 
   /** The audit's columns: a nullable day (the null day holds null-ts rows)

@@ -178,6 +178,62 @@ object Tables {
     microsTs(read(spark, sfDir, "events"))
   }
 
+  /** max(`ts`) of [[events]] at `sfDir`, read from the row-group statistics
+    * in the Parquet footers on the driver: no Spark job. `ts` must be an
+    * INT64 that [[events]] reads as stored (TIMESTAMP(MICROS)) or truncates
+    * ns→µs (TIMESTAMP(NANOS) under `nanosAsLong`; truncation is monotonic,
+    * so the max of the truncated values is the truncated max). None, for
+    * the caller to run the query, when any row group has no non-null `ts`
+    * statistics, `ts` has another type, or a value predates 1900, where
+    * Parquet's calendar rebasing could move what a scan returns. Files
+    * whose names start with `_` or `.` are skipped, as Spark's reader
+    * skips them. */
+  private[graft] def eventsMaxTs(spark: SparkSession, sfDir: String): Option[java.sql.Timestamp] = {
+    import org.apache.parquet.ParquetReadOptions
+    import org.apache.parquet.column.statistics.LongStatistics
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64
+    import scala.jdk.CollectionConverters._
+    val conf  = spark.sparkContext.hadoopConfiguration
+    val root  = new Path(s"$sfDir/events.parquet")
+    val fs    = root.getFileSystem(conf)
+    val nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong").toBoolean
+    def files(st: FileStatus): Seq[FileStatus] =
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq
+        .filterNot(f => f.getPath.getName.startsWith("_") || f.getPath.getName.startsWith("."))
+        .flatMap(files)
+      else Seq(st)
+    // (min, max) per row group in µs as events reads them; None = unusable
+    def rowGroups(st: FileStatus): Seq[Option[(Long, Long)]] = {
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf), ParquetReadOptions.builder().build())
+      try {
+        val schema = reader.getFooter.getFileMetaData.getSchema
+        val toMicros: Option[Long => Long] =
+          schema.getFields.asScala.find(f => f.getName == "ts" && f.isPrimitive).map(_.asPrimitiveType).flatMap {
+            ts => (ts.getPrimitiveTypeName, ts.getLogicalTypeAnnotation) match {
+              case (INT64, t: TimestampLogicalTypeAnnotation) if t.getUnit == TimeUnit.MICROS => Some(identity)
+              case (INT64, t: TimestampLogicalTypeAnnotation) if t.getUnit == TimeUnit.NANOS && nanos =>
+                Some(_ / 1000) // `ts div 1000`, as [[microsTs]] truncates
+              case _ => None
+            }
+          }
+        reader.getFooter.getBlocks.asScala.toSeq.map { block =>
+          for {
+            f     <- toMicros
+            chunk <- block.getColumns.asScala.find(_.getPath.toDotString == "ts")
+            stats <- Option(chunk.getStatistics).collect { case l: LongStatistics if l.hasNonNullValue => l }
+          } yield (f(stats.getMin), f(stats.getMax))
+        }
+      } finally reader.close()
+    }
+    val groups = files(fs.getFileStatus(root)).flatMap(rowGroups)
+    val from1900 = java.time.Instant.parse("1900-01-01T00:00:00Z").getEpochSecond * 1000000L
+    if (groups.isEmpty || groups.exists(g => g.forall(_._1 < from1900))) None
+    else Some(org.apache.spark.sql.catalyst.util.DateTimeUtils.toJavaTimestamp(groups.flatten.map(_._2).max))
+  }
+
   /** `events` with a nanos-long `ts` (a TIMESTAMP(NANOS) file read under
     * `nanosAsLong`) truncated to a µs TimestampType; any other `ts` is
     * kept. The batch read ([[events]]) and the file replay

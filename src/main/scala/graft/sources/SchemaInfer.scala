@@ -1,7 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.json.GraftJsonInfer
 import org.apache.spark.sql.types._
 
 /** Schema pipeline: sample → infer → widen → nullable-promote → persist.
@@ -11,18 +11,22 @@ import org.apache.spark.sql.types._
   * candidate (:299-303), wrap every field nullable with null default
   * (:221-232), persist beside the output (:182-194).
   *
-  * Spark-first re-expression: `spark.read.json` already samples, set-unions
-  * fields across ALL samples (strictly better than width-max) and marks
-  * everything nullable. Both merge strategies are exposed so the reference's
-  * width-max behavior remains available and testable.
+  * Spark-first re-expression: the samples are a bounded set already on the
+  * driver (a pushed top-N, one search page, a `take`), and [[infer]] types
+  * them there with Spark's own JSON inference code, which set-unions fields
+  * across ALL samples (strictly better than width-max) and marks everything
+  * nullable. Both merge strategies are exposed so the reference's width-max
+  * behavior remains available and testable.
   */
 object SchemaInfer {
 
-  /** Infer a StructType from a dataset of JSON strings (kite
-    * `JsonUtil.inferSchema` analog). Spark's reader performs the per-sample
-    * inference + field-set union in one distributed pass. */
-  def infer(spark: SparkSession, jsonSamples: Dataset[String]): StructType =
-    spark.read.json(jsonSamples).schema
+  /** Infer a StructType from JSON strings on the driver (kite
+    * `JsonUtil.inferSchema` analog): exactly the schema that
+    * `spark.read.json` infers for the same strings as a Dataset, without
+    * its Spark job ([[GraftJsonInfer]]). A string that does not parse as
+    * JSON adds the session's `_corrupt_record` column, as in the reader. */
+  def infer(spark: SparkSession, jsonSamples: Seq[String]): StructType =
+    GraftJsonInfer.infer(spark, jsonSamples)
 
   /** Reference's width-max merge (Bootstrap.java:299-303): keep the candidate
     * with the most fields; no union, no type reconciliation. */
@@ -65,10 +69,10 @@ object SchemaInfer {
     val samples = graft.Tables
       .events(spark, sfDir)
       .orderBy($"event_id")
-      .limit(200)
       .select($"props")
       .as[String]
-    val st = allNullable(infer(spark, samples))
+      .take(200)
+    val st = allNullable(infer(spark, samples.toIndexedSeq))
     st.fields.toSeq
       .map(f => (f.name, f.dataType.sql.toLowerCase, f.nullable))
       .toDF("field_name", "field_type", "nullable")

@@ -146,8 +146,8 @@ class EsScrollSource extends TableProvider {
   /** Schema inference when the user supplies none: sample one page
     * (`size=inferSample`, match_all) and run the engine's own JSON schema
     * inference (SchemaInfer, the O6/O7 pipeline) over the raw `_source`
-    * strings — the reference infers its Avro schema from sampled docs the
-    * same way (Bootstrap.java:294-303). */
+    * strings on the driver, with no Spark job — the reference infers its
+    * Avro schema from sampled docs the same way (Bootstrap.java:294-303). */
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val conn   = EsScrollSource.connOf(options)
     val index  = EsScrollSource.reqOption(options, "index")
@@ -161,9 +161,7 @@ class EsScrollSource extends TableProvider {
     // only object `_source`s, the documents decodeHit reads; a scalar one
     // would infer a `_corrupt_record` column
     val sources = (0 until hits.size).map(i => hits.get(i).path("_source")).filter(_.isObject).map(_.toString)
-    val spark   = SparkSession.active
-    import spark.implicits._
-    SchemaInfer.allNullable(SchemaInfer.infer(spark, spark.createDataset(sources)))
+    SchemaInfer.allNullable(SchemaInfer.infer(SparkSession.active, sources))
   }
 
   override def getTable(

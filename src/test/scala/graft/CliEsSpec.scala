@@ -145,4 +145,52 @@ class CliEsSpec extends SparkSpec {
         s"$reqs requests: schema + menu, the top-N, one scroll per slice, the per-day agg")
     }
   }
+
+  /** The export's ES read as Cli.runEs builds it, the most frequent event
+    * type, and the window bound of a `windowDays` window. */
+  private def exportInputs(url: String, windowDays: Int) = {
+    val schema = Cli.esSchema(spark, url, "events-*", Map.empty)
+    val es = spark.read.format("graft.sources.es.EsScrollSource").schema(schema)
+      .option("url", url).option("index", "events-*")
+      .option("slices", 4).option("pageSize", 5000).load()
+    val chosen = events.groupBy(col("event_type")).count()
+      .orderBy(col("count").desc, col("event_type")).head().getString(0)
+    val latest = EsScrollSource.discoverDailyIndices(url, "events-*").flatMap(_._2).max
+    val lo = java.sql.Timestamp.from(latest.plusDays(1).minusDays(windowDays)
+      .atStartOfDay(java.time.ZoneOffset.UTC).toInstant)
+    (es, chosen, lo)
+  }
+
+  test("neither the schema read nor an export runs a JSON inference job") {
+    withDayServer { (_, url) =>
+      val (_, readJobs) = jobsOf(Cli.esSchema(spark, url, "events-*", Map.empty))
+      assert(readJobs.isEmpty, s"the schema read ran ${readJobs.size} jobs")
+      val (es, chosen, lo) = exportInputs(url, 5)
+      val out = graft.sources.ParquetSink.scratchDir(spark, "cli_es_no_infer_job")
+      val (_, exportJobs) = jobsOf(Pipeline.exportEvents(es, out, chosen, Some(lo)).collect())
+      val sites = exportJobs.flatMap(_.stageInfos.map(_.name))
+      assert(sites.nonEmpty && !sites.exists(_.contains("SchemaInfer")), sites.mkString(", "))
+    }
+  }
+
+  test("the concurrent window count runs under the caller's job group and description") {
+    withDayServer { (_, url) =>
+      val (es, chosen, lo) = exportInputs(url, 5)
+      val out = graft.sources.ParquetSink.scratchDir(spark, "cli_es_job_group")
+      val sc  = spark.sparkContext
+      sc.setJobGroup("graft-export-group", "graft export description")
+      val (audit, jobs) =
+        try jobsOf(Pipeline.exportEvents(es, out, chosen, Some(lo)).collect())
+        finally sc.clearJobGroup()
+      assert(jobs.size >= 3, "the sample, the window count and the write")
+      jobs.foreach { j =>
+        assert(j.properties.getProperty("spark.jobGroup.id") === "graft-export-group", s"job ${j.jobId}")
+        assert(j.properties.getProperty("spark.job.description") === "graft export description", s"job ${j.jobId}")
+      }
+      val truth = events.filter(col("ts") >= lit(lo) && col("event_type") === chosen)
+        .groupBy(to_date(col("ts")).cast("string")).count()
+        .collect().map(r => r.getString(0) -> (r.getLong(1), 0L)).toMap
+      assert(audit.map(r => r.getDate(0).toString -> (r.getLong(1), r.getLong(2))).toMap === truth)
+    }
+  }
 }

@@ -205,6 +205,21 @@ class DisciplineSpec extends AnyFunSuite {
     assert(sites.isEmpty, s"match_phrase query built or evaluated in main code:\n${sites.mkString("\n")}")
   }
 
+  test("one JSON inference path: no read.json( anywhere in src/main") {
+    // schema inference of JSON strings goes through SchemaInfer.infer, which
+    // types the driver-side samples without a Spark job; a reader-based
+    // inference is a second path with its own job per call. A read with a
+    // given schema (`read.schema(st).json(`) infers nothing and does not match.
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+    val sites =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq.flatMap { p =>
+        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (l, i) if l.contains("read.json(") => s"$p:${i + 1}"
+        }
+      } finally walk.close()
+    assert(sites.isEmpty, s"reader-based JSON inference:\n${sites.mkString("\n")}")
+  }
+
   test("tools/run_probe.sh opens the same JDK packages as build.sbt") {
     // the launcher copies build.sbt's forked javaOptions; a package added
     // to one list and not the other fails only at run time, in whichever

@@ -158,6 +158,34 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  test("alongside: the side runs on its own thread with the caller's local properties; failures surface as thrown") {
+    val sc = spark.sparkContext
+    sc.setLocalProperty("graft.spec.key", "caller")
+    try {
+      val caller = Thread.currentThread()
+      val (seen, main) = Pipeline.alongside(spark) {
+        (Thread.currentThread() ne caller, sc.getLocalProperty("graft.spec.key"))
+      }("main")
+      assert(seen === (true, "caller") && main === "main")
+
+      val sideFailure = new IllegalStateException("side")
+      assert(intercept[IllegalStateException] {
+        Pipeline.alongside(spark)(throw sideFailure)("main")
+      } eq sideFailure, "the side's own exception, not a wrapper")
+
+      // main fails: its exception wins, and the side has finished first
+      val mainFailure = new IllegalArgumentException("main")
+      val sideDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+      assert(intercept[IllegalArgumentException] {
+        Pipeline.alongside(spark) { Thread.sleep(200); sideDone.set(true) } { throw mainFailure }
+      } eq mainFailure)
+      assert(sideDone.get(), "the side is joined before the call returns")
+      assert(intercept[IllegalArgumentException] {
+        Pipeline.alongside(spark)(throw sideFailure)(throw mainFailure)
+      } eq mainFailure)
+    } finally sc.setLocalProperty("graft.spec.key", null)
+  }
+
   test("foreachBatch parquet sink appends each micro-batch") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext

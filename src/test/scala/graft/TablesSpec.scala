@@ -1,9 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Path, StandardCopyOption}
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types.LongType
@@ -15,30 +12,6 @@ class TablesSpec extends SparkSpec {
 
   private val nanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
 
-  /** `body`'s result and the number of Spark jobs it started. A marker job
-    * runs after `body`; the listener bus delivers events in order, so once
-    * the marker's start arrives every earlier job has been counted. */
-  private def jobsOf[A](body: => A): (A, Int) = {
-    val sc     = spark.sparkContext
-    val marker = s"tables-spec-marker-${java.util.UUID.randomUUID()}"
-    val jobs   = new AtomicInteger(0)
-    val seen   = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker)) seen.countDown()
-        else { jobs.incrementAndGet(); () }
-    }
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      sc.setJobDescription(marker)
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setJobDescription(null)
-      assert(seen.await(60, TimeUnit.SECONDS), "the marker job never reached the listener")
-      (out, jobs.get())
-    } finally sc.removeSparkListener(listener)
-  }
-
   /** A fresh directory holding copies of the named sf0.001 tables. */
   private def copyOf(tables: String*): Path = {
     val dir = Files.createTempDirectory("tables_spec")
@@ -48,13 +21,15 @@ class TablesSpec extends SparkSpec {
     dir
   }
 
+  private def jobCount[A](body: => A): (A, Int) = { val (out, jobs) = jobsOf(body); (out, jobs.size) }
+
   private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
 
   test("a second read of a table runs no job, with the schema a fresh read infers") {
     val dir = copyOf("events").toString
-    val (_, first) = jobsOf(Tables.events(spark, dir).schema)
+    val (_, first) = jobCount(Tables.events(spark, dir).schema)
     assert(first >= 1, "the first read infers the schema")
-    val (again, second) = jobsOf(Tables.events(spark, dir))
+    val (again, second) = jobCount(Tables.events(spark, dir))
     assert(second == 0, s"the second read ran $second jobs")
     val path = s"$dir/events.parquet"
     assert(Tables.parquetSchema(spark, path) == spark.read.parquet(path).schema)
@@ -65,12 +40,12 @@ class TablesSpec extends SparkSpec {
   test("the cache misses once the file is rewritten") {
     val dir  = copyOf("region", "nation")
     val path = dir.resolve("region.parquet")
-    val (before, _) = jobsOf(Tables.region(spark, dir.toString).schema)
+    val (before, _) = jobCount(Tables.region(spark, dir.toString).schema)
     assert(before.fieldNames.contains("r_regionkey"))
     // another table's bytes under the same name: a stale entry would keep
     // region's schema
     Files.copy(dir.resolve("nation.parquet"), path, StandardCopyOption.REPLACE_EXISTING)
-    val (after, jobs) = jobsOf(Tables.region(spark, dir.toString))
+    val (after, jobs) = jobCount(Tables.region(spark, dir.toString))
     assert(jobs >= 1, "the rewritten file is inferred again")
     assert(after.schema == spark.read.parquet(path.toString).schema)
     assert(after.schema.fieldNames.contains("n_nationkey"))
@@ -126,7 +101,7 @@ class TablesSpec extends SparkSpec {
     val off = spark.newSession()
     off.conf.set(nanosAsLong, "false")
     val fresh = scala.util.Try(off.read.parquet(path).schema)
-    val (viaCache, jobs) = jobsOf(scala.util.Try(Tables.parquetSchema(off, path)))
+    val (viaCache, jobs) = jobCount(scala.util.Try(Tables.parquetSchema(off, path)))
     assert(fresh.map(_.toString) == viaCache.map(_.toString) ||
       (fresh.isFailure && viaCache.isFailure), s"plain read $fresh, cached read $viaCache")
     assert(jobs >= 1 || viaCache.isFailure, "the flipped session inferred again")
@@ -139,5 +114,38 @@ class TablesSpec extends SparkSpec {
     assert(Tables.parquetSchema(ntz, opath) == ntz.read.parquet(opath).schema)
     assert(Tables.parquetSchema(ntz, opath) != Tables.parquetSchema(spark, opath))
     assert(rows(Tables.orders(ntz, odir)) == rows(Tables.orders(spark, odir)))
+  }
+
+  /** max(ts) of `Tables.events` as the query computes it. */
+  private def queriedMaxTs(dir: String): java.sql.Timestamp =
+    Tables.events(spark, dir).agg(org.apache.spark.sql.functions.max("ts")).head().getTimestamp(0)
+
+  test("the footer-statistics max(ts) equals the query's, on every fixture and on a NANOS file") {
+    // several part files plus _SUCCESS and checksum files, as a Spark write
+    // leaves them, with ts as INT64 micros
+    val multiFile = Files.createTempDirectory("tables_spec_parts")
+    val micros    = spark.newSession()
+    micros.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    Tables.events(micros, sf).repartition(3).write.parquet(multiFile.resolve("events.parquet").toString)
+    for (dir <- Seq(sf, sf01, nanosEvents(), multiFile.toString)) {
+      val (bound, jobs) = jobCount(Tables.eventsMaxTs(spark, dir))
+      assert(bound === Some(queriedMaxTs(dir)), dir)
+      assert(jobs === 0, s"$dir: the statistics are read without a Spark job")
+    }
+  }
+
+  test("a ts column with only nulls, or stored as INT96, has no statistics bound: the query decides") {
+    val micros = spark.newSession()
+    micros.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    val nulls = Files.createTempDirectory("tables_spec_null_ts")
+    micros.range(5).selectExpr("id AS event_id", "CAST(NULL AS TIMESTAMP) AS ts")
+      .write.parquet(nulls.resolve("events.parquet").toString)
+    assert(Tables.eventsMaxTs(spark, nulls.toString) === None)
+    assert(queriedMaxTs(nulls.toString) === null)
+    // the session default writes INT96, which the statistics path leaves alone
+    val int96 = Files.createTempDirectory("tables_spec_int96_ts")
+    Tables.events(spark, sf).write.parquet(int96.resolve("events.parquet").toString)
+    assert(Tables.eventsMaxTs(spark, int96.toString) === None)
+    assert(queriedMaxTs(int96.toString) === queriedMaxTs(sf))
   }
 }
