@@ -27,12 +27,6 @@ object Det {
     (sum(Kernels.roundLong(c * f)) / f).cast(DoubleType)
   }
 
-  /** Order-independent average: scaled-long sum divided by count in double
-    * space. Mirror: `CAST(SUM(CAST(round(x*1eS) AS BIGINT)) AS DOUBLE) / 1eS
-    * / COUNT(*)`. */
-  def decAvg(c: Column, scale: Int): Column =
-    decSum(c, scale) / count(lit(1))
-
   /** [[decSum]] with a DECIMAL(38,0) accumulator — for grids whose LONG
     * capacity does not survive the 100 TB target.
     *

@@ -1,13 +1,8 @@
 package graft
 
-import graft.sources.{AvroAsvc, JsonDecode, SchemaInfer}
+import graft.sources.{AvroAsvc, JsonDecode, ParquetSink, SchemaInfer}
 import java.util.concurrent.CompletionException
-import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.parquet.ParquetReadOptions
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{classic, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DateType, LongType, StructField, StructType}
@@ -15,17 +10,19 @@ import org.apache.spark.sql.types.{DateType, LongType, StructField, StructType}
 /** The reference's complete workflow, end-to-end and Spark-first
   * (Bootstrap.main → EsParquetWriter.call, SURVEY.md §3): resolve the recent
   * time window (O2), slice by one event type (O4, the rule_name analog),
-  * infer the JSON props schema from samples (O5-O8), persist it beside the
-  * output (O9), decode tolerantly with dead-letter isolation (O10-O11),
-  * export day-partitioned parquet (O12), and return the per-day audit
-  * counts (O14). Parallelism is Spark's task scheduling (O13) — the
+  * infer the JSON props schema from samples (O5-O8), decode tolerantly with
+  * dead-letter isolation (O10-O11), export day-partitioned parquet with the
+  * schema files beside it (O12, O9), and return the per-day audit counts
+  * (O14). The export and its schema files are staged and published whole
+  * by [[ParquetSink.writeByDay]], so a failed export leaves the previous
+  * one as it was. Parallelism is Spark's task scheduling (O13) — the
   * reference's thread pool has no analog here.
   *
-  * Scale shape: one pruned scan → per-row decode (no shuffle) → partitioned
-  * write. The audit reads the committed files' footers, verifying the
-  * round trip rather than trusting an in-flight counter: the row counts
-  * the Parquet footers of each `day=` directory record, against the
-  * window's per-day counts. Over the ES connector only the write reads the
+  * Scale shape: one pruned scan → per-row decode → one shuffle by day →
+  * partitioned write. The audit reads the committed files' footers,
+  * verifying the round trip rather than trusting an in-flight counter: the
+  * row counts the Parquet footers of each `day=` directory record, against
+  * the window's per-day counts. Over the ES connector only the write reads the
   * window's documents: the schema sample's `orderBy(event_id).limit(100)`
   * is a pushed top-N (one sorted search shipping 100 hits) and the
   * audit's per-day window count a pushed `date_histogram` aggregation
@@ -110,9 +107,10 @@ object Pipeline {
     spark.createDataFrame(java.util.Arrays.asList(audit: _*), AuditSchema)
   }
 
-  /** O5-O12 of [[exportEvents]]: sample, infer and persist the props
-    * schema, then decode and write the day-partitioned export. Returns the
-    * committed files' footer row counts per day ([[footerRowsByDay]]). */
+  /** O5-O12 of [[exportEvents]]: sample and infer the props schema, then
+    * decode and write the day-partitioned export with the schema files.
+    * Returns the committed files' footer row counts per day
+    * ([[ParquetSink.footerRowsByDay]]). */
   private def writeDecoded(
       windowed: DataFrame,
       outDir: String,
@@ -129,56 +127,38 @@ object Pipeline {
     val sampleRows: Array[String] =
       windowed.orderBy($"event_id").limit(100).select($"props").as[String].take(100)
     val propsSchema = SchemaInfer.allNullable(SchemaInfer.infer(spark, sampleRows.toIndexedSeq))
-    // O9: persist beside the output (overwrite ≡ the reference's dir wipe):
-    // the engine-native StructType JSON plus the reference's byte-exact
-    // .asvc rendering of the first sample (golden-tested in SchemaInferSpec).
-    // The .asvc renders the first sample that is a JSON object — a
-    // malformed props string (a dead letter of the export) must not fail
-    // the whole export; with no such sample there is no .asvc to write
-    // (and a stale one from an earlier export is removed).
-    SchemaInfer.persist(propsSchema, s"$outDir/schema.json")
-    // A first object with a nested (object or array) value has no .asvc
-    // either: the writer renders the reference's flat primitive surface
-    // only, and a guessed rendering of kite's nested records could not be
-    // checked against the reference.
-    val asvc = java.nio.file.Paths.get(s"$outDir/schema.asvc")
-    sampleRows.find(isJsonObject) match {
-      case Some(first) if AvroAsvc.renders(first) => AvroAsvc.persist(eventType, first, asvc.toString)
+    // O9: the schema files, published with the data: the StructType JSON
+    // and the reference's byte-exact .asvc rendering (golden-tested in
+    // SchemaInferSpec) of the first sample that is a JSON object, since a
+    // malformed props string is a dead letter, not a failed export. With no
+    // such sample, or a first object with a nested value (the writer renders
+    // the reference's flat primitive surface only), there is no .asvc, and
+    // the publish removes a stale one.
+    val asvc = sampleRows.find(isJsonObject) match {
+      case Some(first) if AvroAsvc.renders(first) => Some(AvroAsvc.fromSampleJson(eventType, first))
       case first =>
         if (first.isDefined)
           System.err.println(s"[pipeline] '$eventType': the first sampled props object has a " +
             "nested value, which the .asvc writer does not render; no schema.asvc is written")
-        java.nio.file.Files.deleteIfExists(asvc)
+        None
     }
 
-    // O10-O11: tolerant decode, dead letters kept auditable: the good side
-    // of JsonDecode.decodeWithDeadLetter's split. The decode runs exactly
-    // ONCE — inside the write pass below. r19 shared it with the audit's
-    // dead-letter branch through a localCheckpoint of the whole decoded
-    // window; r20 removes that materialization entirely (it was data-sized,
-    // executor-local and non-fault-tolerant — the at-scale caveat in the
-    // r19 ADVICE): the audit never needs the decoded rows, because the
-    // window partitions EXACTLY into good ∪ bad, so per-day dead counts are
-    // per-day WINDOW totals minus the committed footers' row counts — a
-    // ts-only column-pruned scan with the same pushed filters, no second
-    // from_json.
+    // O10-O11: tolerant decode, the good side of
+    // JsonDecode.decodeWithDeadLetter's split, decoded in the write pass
+    // only. The audit never needs the decoded rows: the window partitions
+    // exactly into good ∪ bad, so per-day dead counts are the window's
+    // per-day totals minus the committed footers' row counts.
     val (good, _) = JsonDecode.decodeWithDeadLetter(windowed, "props", propsSchema.toDDL)
 
-    // O12: day-partitioned export of the decoded rows — repartitioned by
-    // day first so each partition is one file (the reference's
-    // one-file-per-index layout, EsParquetWriter.java:56). The decoded
-    // columns are the props schema's fields: `_parsed` also carries the
-    // split's `_corrupt` marker, which schema.json does not list.
-    good
-      .select(Seq($"event_id", $"user_id", $"ts", $"value") ++
-        propsSchema.fieldNames.map(f => $"_parsed".getField(f).as(f)) :+ to_date($"ts").as("day"): _*)
-      .repartition($"day")
-      .write
-      .mode("overwrite")
-      .partitionBy("day")
-      .parquet(s"$outDir/data")
-
-    footerRowsByDay(spark, s"$outDir/data")
+    // O12: day-partitioned export of the decoded rows, one file per day
+    // (the reference's one-file-per-index layout, EsParquetWriter.java:56).
+    // The decoded columns are the props schema's fields: `_parsed` also
+    // carries the split's `_corrupt` marker, which schema.json does not list.
+    ParquetSink.writeByDay(
+      good.select(Seq($"event_id", $"user_id", $"ts", $"value") ++
+        propsSchema.fieldNames.map(f => $"_parsed".getField(f).as(f)): _*),
+      outDir,
+      Map("schema.json" -> Some(propsSchema.prettyJson), "schema.asvc" -> asvc))
   }
 
   /** `side` on its own thread while `main` runs on the caller's; returns
@@ -208,40 +188,13 @@ object Pipeline {
     StructField("n_rows", LongType, nullable = false),
     StructField("n_dead", LongType, nullable = false)))
 
-  /** Rows per `day=` partition of a committed day-partitioned Parquet
-    * directory, summed from the file footers on the driver; the default
-    * (null) partition is keyed None. Files whose names start with `_` or
-    * `.` (`_SUCCESS`, checksums) are skipped, as Spark's reader skips them. */
-  private[graft] def footerRowsByDay(spark: SparkSession, dir: String): Map[Option[String], Long] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new Path(dir)
-    val fs   = root.getFileSystem(conf)
-    def visible(st: FileStatus) = !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith(".")
-    // plain read options: open(file) without them builds Hadoop read
-    // options by copying the whole Configuration, ~10 ms per file
-    val opts = ParquetReadOptions.builder().build()
-    def footerRows(st: FileStatus): Long = {
-      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf), opts)
-      try reader.getRecordCount
-      finally reader.close()
-    }
-    fs.listStatus(root).iterator
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("day="))
-      .map { st =>
-        val value = ExternalCatalogUtils.unescapePathName(st.getPath.getName.stripPrefix("day="))
-        val day   = Option(value).filter(_ != ExternalCatalogUtils.DEFAULT_PARTITION_NAME)
-        day -> fs.listStatus(st.getPath).iterator.filter(f => f.isFile && visible(f)).map(footerRows).sum
-      }
-      .toMap
-  }
-
   private def isJsonObject(s: String): Boolean =
     s != null && (try new com.fasterxml.jackson.databind.ObjectMapper().readTree(s).isObject
     catch { case _: Exception => false })
 
   /** Declared query: the full pipeline on the purchase slice, 30-day window. */
   def exportPipeline(spark: SparkSession, sfDir: String): DataFrame = {
-    val out = graft.sources.ParquetSink.scratchDir(spark, "export_pipeline")
+    val out = ParquetSink.scratchDir(spark, "export_pipeline")
     exportByType(spark, sfDir, out, "purchase", 30)
   }
 }

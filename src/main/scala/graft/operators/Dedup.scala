@@ -540,12 +540,6 @@ object Dedup {
   private[graft] def jaccardSkewStat(docsIn: DataFrame): Double =
     skewOf(jaccardSampleAgg(docsIn))
 
-  /** [[jaccardSkewStat]] over a PREPARED (doc_id, sh) corpus — the
-    * containment dispatcher's form (q171): same sample, same statistic,
-    * same cutoff; the shingle arrays are already materialized. */
-  private[graft] def containmentSkewStat(docsPre: DataFrame): Double =
-    skewOf(containmentSampleAgg(docsPre))
-
   private def jaccardSampleAgg(docsIn: DataFrame): (Long, Long, Long) = {
     import docsIn.sparkSession.implicits._
     sampleAggOfPerDoc(docsIn

@@ -22,8 +22,8 @@ import scala.jdk.CollectionConverters._
   * Byte parity with the committed reference schema is golden-tested in
   * SchemaInferSpec by regenerating office365_signin/schema.asvc from its own
   * doc samples. The engine's primary schema artifact remains the richer
-  * StructType JSON ([[SchemaInfer.persist]]); this writer exists for drop-in
-  * output compatibility with the reference.
+  * StructType JSON (`schema.json`); this writer exists for drop-in output
+  * compatibility with the reference.
   */
 object AvroAsvc {
 
@@ -85,13 +85,5 @@ object AvroAsvc {
       .map(e => AsvcField(e.getKey, inferAvroType(e.getValue), mapper.writeValueAsString(e.getValue)))
       .toSeq
     render(ruleName, fields)
-  }
-
-  /** Persist beside the output (the reference wipes + rewrites the dir;
-    * overwrite is the Spark-side equivalent). */
-  def persist(ruleName: String, sampleJson: String, path: String): Unit = {
-    val p = java.nio.file.Paths.get(path)
-    java.nio.file.Files.createDirectories(p.getParent)
-    java.nio.file.Files.writeString(p, fromSampleJson(ruleName, sampleJson))
   }
 }

@@ -1,7 +1,12 @@
 package graft.sources
 
 import graft.Tables
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileStatus, Path}
+import org.apache.parquet.ParquetReadOptions
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 
 /** Partitioned parquet sink + write audit (SURVEY.md O12/O14).
@@ -9,9 +14,10 @@ import org.apache.spark.sql.functions._
   * The reference writes one parquet file per (rule, index) with a hand-rolled
   * record counter (EsParquetWriter.java:43-97, summed at Bootstrap.java:
   * 318-334). Spark-first: `partitionBy(day)` replaces per-index files, the
-  * commit protocol replaces silent per-record loss, and the audit is a
-  * group-count over the re-read output — verifying the files actually
-  * round-trip, not just that a counter incremented.
+  * commit protocol replaces silent per-record loss, and the audit sums the
+  * row counts of the committed files' footers — verifying what the files
+  * hold, not that a counter incremented. [[writeByDay]] is the one
+  * day-partitioned writer.
   */
 object ParquetSink {
 
@@ -79,62 +85,114 @@ object ParquetSink {
       }
     )
 
-  /** Write `df` partitioned by `day` (derived from ts) and return the
-    * re-read audit: rows per day partition. `repartition(day)` first, so
-    * each day partition is exactly ONE file — the reference's
-    * one-file-per-source-partition layout (EsParquetWriter.java:56) and the
-    * small-files fix at scale (without it every task writes a sliver into
-    * every day directory). */
-  def writePartitionedWithAudit(
-      spark: SparkSession,
+  /** The one day-partitioned writer: `df` (with a `ts` column) goes to
+    * `outDir/data`, one `day=` directory per `to_date(ts)`, beside the
+    * `sideFiles` (name → content; None removes a stale file). Returns the
+    * committed footers' row counts per day ([[footerRowsByDay]]).
+    *
+    * `hint("rebalance", day)` sends a day to one writer task, so a day is
+    * one file (the reference's one file per index, EsParquetWriter.java:56);
+    * AQE splits a day over `spark.sql.adaptive.advisoryPartitionSizeInBytes`
+    * across tasks and coalesces small days.
+    *
+    * Staged, then published whole. Everything is written and audited in
+    * `outDir/_staging-<uuid>` (the same file system; Spark's reader and
+    * [[footerRowsByDay]] skip `_` names). A failure up to then deletes the
+    * staging directory and rethrows, so the previous export stays as it
+    * was: stricter than the reference, which wipes the rule directory
+    * first (Bootstrap.java:182-194). The publish renames each live entry
+    * aside into the staging directory and the staged one in, then deletes
+    * the staging directory. It touches `data/` and the named side files
+    * only, never the rest of `outDir`. A directory rename is atomic on
+    * local and HDFS file systems, not on object stores; a crash between
+    * two renames can leave a mix of old and new entries (the old ones
+    * still in the staging directory). */
+  def writeByDay(
       df: DataFrame,
-      outDir: String
-  ): DataFrame = {
-    import spark.implicits._
-    df.withColumn("day", to_date($"ts"))
-      .repartition($"day")
-      .write
-      .mode("overwrite")
-      .partitionBy("day")
-      .parquet(outDir)
-    spark.read
-      .parquet(outDir)
-      .groupBy($"day")
-      .agg(count(lit(1)).as("n"))
+      outDir: String,
+      sideFiles: Map[String, Option[String]] = Map.empty
+  ): Map[Option[String], Long] = {
+    val spark = df.sparkSession
+    val out   = new Path(outDir)
+    // raw: the checksummed local file system would add a `.crc` beside each side file
+    val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration) match {
+      case c: ChecksumFileSystem => c.getRawFileSystem
+      case f                     => f
+    }
+    val staging = new Path(out, s"_staging-${java.util.UUID.randomUUID()}")
+    val audit =
+      try {
+        df.withColumn("day", to_date(col("ts")))
+          .hint("rebalance", col("day"))
+          .write
+          .partitionBy("day")
+          .parquet(new Path(staging, "data").toString)
+        sideFiles.foreach { case (name, content) =>
+          content.foreach { c =>
+            val o = fs.create(new Path(staging, name), false)
+            try o.write(c.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+            finally o.close()
+          }
+        }
+        footerRowsByDay(spark, new Path(staging, "data").toString)
+      } catch {
+        case e: Throwable =>
+          fs.delete(staging, true)
+          throw e
+      }
+    def move(from: Path, to: Path): Unit =
+      if (!fs.rename(from, to)) throw new java.io.IOException(s"could not rename $from to $to")
+    val aside = new Path(staging, "_previous")
+    fs.mkdirs(aside)
+    ("data" +: sideFiles.keys.toSeq).foreach { name =>
+      val live = new Path(out, name)
+      if (fs.exists(live)) move(live, new Path(aside, name))
+      val staged = new Path(staging, name)
+      if (fs.exists(staged)) move(staged, live)
+    }
+    fs.delete(staging, true)
+    audit
+  }
+
+  /** Rows per `day=` partition of a committed day-partitioned Parquet
+    * directory, summed from the file footers on the driver; the default
+    * (null) partition is keyed None. Files whose names start with `_` or
+    * `.` (`_SUCCESS`, checksums) are skipped, as Spark's reader skips them. */
+  private[graft] def footerRowsByDay(spark: SparkSession, dir: String): Map[Option[String], Long] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(dir)
+    val fs   = root.getFileSystem(conf)
+    def visible(st: FileStatus) = !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith(".")
+    // plain read options: open(file) without them builds Hadoop read
+    // options by copying the whole Configuration, ~10 ms per file
+    val opts = ParquetReadOptions.builder().build()
+    def footerRows(st: FileStatus): Long = {
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf), opts)
+      try reader.getRecordCount
+      finally reader.close()
+    }
+    fs.listStatus(root).iterator
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith("day="))
+      .map { st =>
+        val value = ExternalCatalogUtils.unescapePathName(st.getPath.getName.stripPrefix("day="))
+        val day   = Option(value).filter(_ != ExternalCatalogUtils.DEFAULT_PARTITION_NAME)
+        day -> fs.listStatus(st.getPath).iterator.filter(f => f.isFile && visible(f)).map(footerRows).sum
+      }
+      .toMap
   }
 
   /** Declared query: export events filtered to one type (the reference's
-    * per-rule slice, EsParquetWriter.java:69) partitioned by day, re-read,
-    * audit counts per partition. */
+    * per-rule slice, EsParquetWriter.java:69) partitioned by day; the audit
+    * is the committed footers' rows per day, null day first. */
   def sinkAudit(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val ev = Tables.events(spark, sfDir).filter($"event_type" === "purchase")
-    writePartitionedWithAudit(spark, ev, scratchDir(spark, "sink_audit")).orderBy($"day")
+    writeByDay(ev, scratchDir(spark, "sink_audit")).toSeq
+      .sortBy(_._1)
+      .map { case (day, n) => (day.map(java.sql.Date.valueOf).orNull, n) }
+      .toDF("day", "n")
   }
 
-  /** Idempotent incremental re-ingest: rewrite ONLY the day partitions
-    * present in `delta` (dynamic partition overwrite), leaving every other
-    * partition untouched — the restartable daily-backfill pattern (the
-    * reference wipes the whole rule directory per run,
-    * Bootstrap.java:182-194; partition-scoped overwrite is the at-scale
-    * replacement: re-running one day never disturbs the rest). */
-  def overwriteDayPartitions(spark: SparkSession, delta: DataFrame, outDir: String): Unit = {
-    import spark.implicits._
-    delta
-      .withColumn("day", to_date($"ts"))
-      .repartition($"day")
-      .write
-      .mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("day")
-      .parquet(outDir)
-  }
-
-  /** Declared query: JSON-lines and CSV sink/source round trip (the
-    * checklist's "+ json/csv" file formats). A deterministic slice goes out
-    * through both writers, comes back through both readers with explicit
-    * schemas, and the audit proves both round trips preserved every row and
-    * value (join on the key, compare columns, count mismatches = 0). */
   /** ORC sink/source round trip — same audit shape as
     * [[jsonCsvRoundTrip]]: write the slice as ORC (Spark's built-in
     * columnar alternative; schema + stats preserved natively, unlike
@@ -260,6 +318,11 @@ object ParquetSink {
       )
   }
 
+  /** Declared query: JSON-lines and CSV sink/source round trip (the
+    * checklist's "+ json/csv" file formats). A deterministic slice goes out
+    * through both writers, comes back through both readers with explicit
+    * schemas, and the audit proves both round trips preserved every row and
+    * value (join on the key, compare columns, count mismatches = 0). */
   def jsonCsvRoundTrip(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val base = scratchDir(spark, "fmt_roundtrip")

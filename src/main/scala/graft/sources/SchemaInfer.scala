@@ -54,14 +54,6 @@ object SchemaInfer {
       f.copy(dataType = dt, nullable = true)
     })
 
-  /** Persist the schema as JSON beside the output (saveSchema analog,
-    * Bootstrap.java:182-194; overwrite ≡ the reference's dir wipe). */
-  def persist(st: StructType, path: String): Unit = {
-    val p = java.nio.file.Paths.get(path)
-    java.nio.file.Files.createDirectories(p.getParent)
-    java.nio.file.Files.writeString(p, st.prettyJson)
-  }
-
   /** Declared query: run the full pipeline over `events.props` at `sfDir`
     * and emit one row per inferred field — deterministic metadata output. */
   def inferPropsSchema(spark: SparkSession, sfDir: String): DataFrame = {

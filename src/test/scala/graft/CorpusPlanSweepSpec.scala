@@ -204,7 +204,7 @@ class CorpusPlanSweepSpec extends SparkSpec {
     * a streaming drain) and returns a one-row local summary: walking that
     * LocalTableScan asserts nothing while paying the full pipeline runtime
     * per sweep, so they are excluded here and covered by their own suites
-    * (Dsv2SinkSpec, Dsv2SourceSpec, IncrementalIngestSpec, PipelineSpec). */
+    * (Dsv2SinkSpec, Dsv2SourceSpec, ParquetSinkSpec, PipelineSpec). */
   private val eagerSummaries = Set(
     "q53_sink_audit",
     "q54_json_csv_roundtrip",

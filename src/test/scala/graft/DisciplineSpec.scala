@@ -60,7 +60,7 @@ class DisciplineSpec extends AnyFunSuite {
     assert(fixed.isEmpty, s"fixed-name temp views (use the UUID sfx pattern):\n${fixed.mkString("\n")}")
   }
 
-  test("driver-side collect() stays confined to the fourteen audited sites") {
+  test("driver-side collect() stays confined to the twelve audited sites") {
     // .collect() of row DATA on the driver is the anti-distributed smell;
     // the audited sites are CLI display (x2: the menu and the audit report
     // both modes print — over the wire the menu is a PUSHED composite
@@ -95,7 +95,17 @@ class DisciplineSpec extends AnyFunSuite {
       "sources/es/EsStubServer.scala", "operators/Graph.scala", "Pipeline.scala")
     val strays  = sites.filterNot(s => allowed.exists(s.startsWith))
     assert(strays.isEmpty, s"new driver collect() site — justify and allowlist or redesign:\n${strays.mkString("\n")}")
-    assert(sites.size <= 14, s"collect() sites grew within allowed files: $sites")
+    assert(sites.size <= 12, s"collect() sites grew within allowed files: $sites")
+  }
+
+  test("one day-partitioned writer: partitionBy(day) at one site, no partition overwrite mode") {
+    // ParquetSink.writeByDay owns the day layout, the staged publish and the
+    // footer audit; a second writer would publish without them
+    val sites = hits("""partitionBy\("day"\)""")
+    assert(sites.size == 1 && sites.forall(_.startsWith("sources/ParquetSink.scala")),
+      s"partitionBy(\"day\") outside ParquetSink.writeByDay:\n${sites.mkString("\n")}")
+    val overwrites = hits("partitionOverwriteMode")
+    assert(overwrites.isEmpty, s"dynamic partition overwrite:\n${overwrites.mkString("\n")}")
   }
 
   test("no Scala UDFs; the single typed-Aggregator UDAF is the declared surface") {

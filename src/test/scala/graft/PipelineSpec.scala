@@ -106,7 +106,7 @@ class PipelineSpec extends SparkSpec {
     Files.copy(part, dayDir.resolve(".copy.parquet"))
     val viaReader = spark.read.parquet(data.toString).groupBy($"day").count()
       .collect().map(r => Option(r.getDate(0)).map(_.toString) -> r.getLong(1)).toMap
-    assert(Pipeline.footerRowsByDay(spark, data.toString) === viaReader)
+    assert(graft.sources.ParquetSink.footerRowsByDay(spark, data.toString) === viaReader)
   }
 
   test("the audit's columns are a nullable date day and non-null long counts") {
@@ -230,29 +230,5 @@ class PipelineSpec extends SparkSpec {
     assert(violations === 0, "each partition must be locally sorted")
     assert(!df.queryExecution.executedPlan.toString.contains("Exchange rangepartitioning"),
       "no global range-partitioned sort may appear")
-  }
-}
-
-/** Idempotent partition-scoped re-ingest (dynamic partition overwrite). */
-class IncrementalIngestSpec extends SparkSpec {
-  test("re-ingesting one day rewrites only that partition, idempotently") {
-    import spark.implicits._
-    import graft.sources.ParquetSink
-    val out = java.nio.file.Files.createTempDirectory("graft_incr").toString
-    val ev  = Tables.events(spark, sf).filter($"event_type" === "purchase")
-    // initial full load
-    ParquetSink.overwriteDayPartitions(spark, ev, out)
-    val before = spark.read.parquet(out).groupBy($"day").count().as[(java.sql.Date, Long)].collect().toMap
-    assert(before.nonEmpty)
-    // pick one day, re-ingest ONLY that day's slice (a corrected backfill)
-    val day = before.keys.minBy(_.getTime)
-    val delta = ev.filter(to_date($"ts") === lit(day))
-    ParquetSink.overwriteDayPartitions(spark, delta, out)
-    val after = spark.read.parquet(out).groupBy($"day").count().as[(java.sql.Date, Long)].collect().toMap
-    assert(after === before, "dynamic overwrite must leave untouched partitions intact and be idempotent")
-    // the rewritten day is exactly one file (repartition(day) layout)
-    val dayDir = new java.io.File(s"$out/day=$day")
-    val files = Option(dayDir.listFiles()).getOrElse(Array.empty).filter(_.getName.endsWith(".parquet"))
-    assert(files.length === 1, s"one file per partition, got ${files.length}")
   }
 }

@@ -66,10 +66,8 @@ class SchemaInferSpec extends SparkSpec {
   }
 
   test("asvc writer sanitizes rule names and persists without trailing newline") {
-    val out = java.nio.file.Files.createTempDirectory("graft_asvc").resolve("schema.asvc")
-    graft.sources.AvroAsvc.persist("my-rule-x", """{"k":1,"s":"v"}""", out.toString)
-    val bytes = java.nio.file.Files.readAllBytes(out)
-    val text  = new String(bytes, "UTF-8")
+    // the export publishes this text as schema.asvc, byte for byte (ParquetSinkSpec)
+    val text = graft.sources.AvroAsvc.fromSampleJson("my-rule-x", """{"k":1,"s":"v"}""")
     assert(text.startsWith("""{"type":"error","name":"my_rule_x","""), text)
     assert(text.contains(""""type":["null","int"]"""), text)
     assert(!text.endsWith("\n"))
@@ -114,9 +112,12 @@ class SchemaInferSpec extends SparkSpec {
   }
 
   test("persist writes schema JSON readable back to the same StructType") {
+    // the export publishes this JSON beside its data as schema.json
     val st   = StructType(Seq(StructField("a", LongType), StructField("b", StringType)))
-    val path = java.nio.file.Files.createTempDirectory("graft_schema").resolve("schema.json")
-    SchemaInfer.persist(SchemaInfer.allNullable(st), path.toString)
+    val dir  = java.nio.file.Files.createTempDirectory("graft_schema").toString
+    val noRows = spark.range(0).select(org.apache.spark.sql.functions.current_timestamp().as("ts"))
+    graft.sources.ParquetSink.writeByDay(noRows, dir, Map("schema.json" -> Some(SchemaInfer.allNullable(st).prettyJson)))
+    val path = java.nio.file.Paths.get(s"$dir/schema.json")
     val back = DataType.fromJson(java.nio.file.Files.readString(path)).asInstanceOf[StructType]
     assert(back.fieldNames.toSeq === Seq("a", "b"))
   }
